@@ -50,6 +50,12 @@ object GraftSession {
       // TimestampType preserves the wall-clock values exactly.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // a bucketed upsert target holds up to NumBuckets partition dirs;
+      // listing that many on the driver takes milliseconds, while the
+      // parallel listing job Spark launches above its default cutoff
+      // (32 paths) costs every merge and every full-target read a job
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        graft.operators.Upsert.NumBuckets.toString)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()

@@ -96,7 +96,13 @@ final class GraftEngine(
       snapshotDir.foreach { dir =>
         val p = new org.apache.hadoop.fs.Path(dir)
         if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-          val snap = spark.read.parquet(dir)
+          // the stream's `after.*` field rules apply to the snapshot's
+          // top-level columns too: an unmasked snapshot would leak PII
+          // into the target and type `k` so every masked batch fails
+          val snapRules = cfg.fieldSecurity.collect {
+            case r if r.field.startsWith("after.") => r.copy(field = r.field.stripPrefix("after."))
+          }
+          val snap = graft.functions.Security.applyFieldSecurity(spark.read.parquet(dir), snapRules)
           // BOTH recency columns, null: snapshot rows lose to any real
           // change event, and every bucket carries the same schema —
           // a snapshot-only footer must never make a later target read

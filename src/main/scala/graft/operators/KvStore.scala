@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -29,11 +29,11 @@ import graft.Tables
   *             previous state intact (redis.go:130-133).
   *
   * Scale design: state lives in a parquet table hash-bucketed on `key`
-  * (same partition-scoped MERGE shape as [[Upsert]]); a change batch is
-  * reduced map-side to one effective op per key (window over the batch,
-  * not the table) and only the touched buckets are rewritten. No
+  * and is merged by [[Upsert]]'s partition-scoped MERGE; a change batch
+  * is reduced map-side to one effective op per key (window over the
+  * batch, not the table) and only the touched buckets are rewritten. No
   * driver-side iteration: the reference's per-key SCAN/RESTORE loop
-  * becomes one distributed anti-join + union per micro-batch.
+  * becomes one distributed keyed full-outer join per micro-batch.
   */
 object KvStore {
 
@@ -185,40 +185,16 @@ object KvStore {
 
   // --- bucketed parquet state (the "target Redis") --------------------
 
-  val NumBuckets = 64 // local-test sizing; 4096 at production scale
-
-  private def bucketOf(c: Column) = pmod(hash(c), lit(NumBuckets))
-
   /** Partition-scoped KV MERGE — the streaming sink's per-batch apply.
-    * Identical shape to [[Upsert.mergeIntoParquet]]: the only collect is
-    * the touched-bucket list, bounded by [[NumBuckets]]. */
-  def mergeKvIntoParquet(spark: SparkSession, targetDir: String, batch: DataFrame): Unit = {
-    val batched = batch.withColumn("bucket", bucketOf(col("key"))).persist()
-    try {
-      val touched = batched.select("bucket").distinct().collect().map(_.getInt(0))
-      if (touched.isEmpty) return
-      val empty = batched.select(
-        col("key"), col("kind"), col("value"), col("f_k"), col("f_uid"),
+    * The CDC pillar's bucketed merge ([[Upsert.mergeBucketed]]) with
+    * [[applyKvBatch]] as the keyed apply: same bucket layout, same
+    * four-job shape, and the only collect is the touched-bucket list,
+    * bounded by [[Upsert.NumBuckets]]. */
+  def mergeKvIntoParquet(spark: SparkSession, targetDir: String, batch: DataFrame): Unit =
+    Upsert.mergeBucketed(spark, targetDir, batch, "key",
+      b => b.select(col("key"), col("kind"), col("value"), col("f_k"), col("f_uid"),
         col("ttlMs"), col("ts").as("updated_at"),
-        col("offset").as("updated_off"), lit(false).as("deleted")).limit(0)
-      // Hadoop FS existence probe (not java.io.File) so the merge works
-      // on distributed storage (HDFS/S3) exactly as on local disk.
-      val path = new org.apache.hadoop.fs.Path(targetDir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val target =
-        if (!fs.exists(path)) empty
-        else Upsert.readTarget(spark, targetDir)
-          .filter(col("bucket").isin(touched.toSeq: _*)).drop("bucket")
-      val merged = applyKvBatch(target, batched.drop("bucket"))
-        .withColumn("bucket", bucketOf(col("key")))
-      // canonical-schema sidecar before the data (same crash-ordering
-      // contract as Upsert.mergeIntoParquet)
-      Upsert.writeSchemaSidecar(spark, targetDir, merged.schema)
-      merged.write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").mode(SaveMode.Overwrite).parquet(targetDir)
-    } finally batched.unpersist()
-  }
+        col("offset").as("updated_off"), lit(false).as("deleted")).limit(0))(applyKvBatch)
 
   // --- q37/q38/q39: oracle-checked KV queries -------------------------
 

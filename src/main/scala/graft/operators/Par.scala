@@ -28,7 +28,14 @@ object Par {
     else {
       val pool = Executors.newFixedThreadPool(math.min(width, items.size))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-      finally pool.shutdown()
+      try {
+        val out = Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
+        pool.shutdown()
+        out
+      } catch {
+        // the first failure wins: interrupt the siblings still running
+        // instead of leaving them to finish beside the failed one
+        case e: Throwable => pool.shutdownNow(); throw e
+      }
     }
 }

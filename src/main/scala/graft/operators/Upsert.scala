@@ -14,18 +14,30 @@ import org.apache.spark.sql.functions._
   * gets from ordered apply (postgresql.go:683-691).
   *
   * Scale design: the target table is hash-bucketed on the key into
-  * `numBuckets` partition directories. A merge
-  *   1. computes the buckets touched by the batch (tiny driver list —
-  *      bounded by numBuckets, NOT by data size),
-  *   2. reads ONLY those partitions (partition pruning on `bucket`),
-  *   3. anti-joins + unions, and
-  *   4. dynamically overwrites only the touched partitions.
-  * At 100 TB with 4096 buckets, a batch touching 1% of keys rewrites
-  * ~41 partitions instead of the whole table. Replaying the same batch
-  * is idempotent (anti-join + union is a set operation), which is what
-  * makes foreachBatch's at-least-once delivery effectively-once (ST9).
-  * A production deployment would swap the parquet overwrite for a
-  * transactional table format; the plan shape is identical.
+  * [[NumBuckets]] partition directories, and one merge,
+  * [[mergeBucketed]], serves both the CDC and the KV pillar. A merge
+  *   1. persists the batch and collects the buckets it touches in the
+  *      same job that materializes it: one pass over the batch, each
+  *      partition returning its bucket set (a driver list bounded by
+  *      NumBuckets, never by data size; no shuffle),
+  *   2. reads ONLY those partitions (partition pruning on `bucket`); the
+  *      target's bucket dirs are listed on the driver, because the
+  *      session's parallel-discovery threshold is NumBuckets, so no
+  *      listing job runs,
+  *   3. resolves batch against target with one keyed full-outer join
+  *      (two shuffle map stages: the batch's last-writer-wins frame and
+  *      the pruned target rows), and
+  *   4. dynamically overwrites only the touched partitions (one write
+  *      stage).
+  * That is four Spark jobs per micro-batch, and the batch is scanned
+  * once: the streaming source counts every scan of a foreachBatch frame
+  * in `numInputRows`. At 100 TB with 4096 buckets, a batch touching 1%
+  * of keys rewrites ~41 partitions instead of the whole table.
+  * Replaying the same batch is idempotent (the join resolves a replayed
+  * op against itself), which is what makes foreachBatch's
+  * at-least-once delivery effectively-once (ST9). A production
+  * deployment would swap the parquet overwrite for a transactional
+  * table format; the plan shape is identical.
   */
 object Upsert {
 
@@ -141,7 +153,7 @@ object Upsert {
 
   private val SchemaSidecar = "_graft_schema.json"
 
-  private[graft] def writeSchemaSidecar(spark: SparkSession, targetDir: String,
+  private def writeSchemaSidecar(spark: SparkSession, targetDir: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val dir = new org.apache.hadoop.fs.Path(targetDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -211,11 +223,26 @@ object Upsert {
   /** Partition-scoped MERGE of a change batch into a bucketed parquet
     * table. Reads and rewrites only the buckets the batch touches. */
   def mergeIntoParquet(spark: SparkSession, targetDir: String, batch: DataFrame,
-      keyCol: String, ignoreDeleteOps: Boolean = false): Unit = {
+      keyCol: String, ignoreDeleteOps: Boolean = false): Unit =
+    mergeBucketed(spark, targetDir, batch, keyCol,
+      b => b.select(col(keyCol), col("after.*"), col("ts").as("updated_at")).limit(0)) {
+      (target, b) => applyBatch(target, b, keyCol, ignoreDeleteOps)
+    }
+
+  /** The bucketed MERGE both pillars share (see "Scale design"):
+    * `apply(target, batch)` is the pillar's keyed merge ([[applyBatch]],
+    * [[KvStore.applyKvBatch]]), and `emptyTarget(batch)` the state it
+    * merges into while the target dir does not exist yet. */
+  private[graft] def mergeBucketed(spark: SparkSession, targetDir: String, batch: DataFrame,
+      keyCol: String, emptyTarget: DataFrame => DataFrame)(
+      apply: (DataFrame, DataFrame) => DataFrame): Unit = {
     val batched = batch.withColumn("bucket", bucketOf(keyCol)).persist()
     try {
-      val touched = batched.select("bucket").distinct()
-        .collect().map(_.getInt(0)) // bounded by NumBuckets, never by data size
+      // the job that fills the cache also returns each partition's
+      // bucket set: the batch is scanned here and nowhere else
+      val touched = batched.select("bucket").rdd
+        .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+        .collect().flatten.distinct // bounded by NumBuckets, never by data size
       if (touched.isEmpty) return
       // Existence probe via the Hadoop FS API: ONLY a genuinely absent
       // target (first batch, no snapshot yet) maps to an empty state —
@@ -224,12 +251,10 @@ object Upsert {
       val path = new org.apache.hadoop.fs.Path(targetDir)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val target =
-        if (!fs.exists(path))
-          batched.select(col(keyCol), col("after.*"), col("ts").as("updated_at")).limit(0)
+        if (!fs.exists(path)) emptyTarget(batched.drop("bucket"))
         else readTarget(spark, targetDir).filter(col("bucket").isin(touched.toSeq: _*))
           .drop("bucket")
-      val merged = applyBatch(target, batched.drop("bucket"), keyCol, ignoreDeleteOps)
-        .withColumn("bucket", bucketOf(keyCol))
+      val merged = apply(target, batched.drop("bucket")).withColumn("bucket", bucketOf(keyCol))
       // sidecar first (see its crash-ordering note), then dynamic
       // partition overwrite: only the touched bucket dirs change
       writeSchemaSidecar(spark, targetDir, merged.schema)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -115,6 +117,73 @@ class CdcSpec extends SparkSpec {
     val replayed = spark.read.parquet(cfg.targetDir)
     assert(normalize(replayed.withColumnRenamed("key", "user_id")) == normalize(want))
     changes.unpersist()
+  }
+
+  test("one micro-batch scans its batch once, fires at most 4 jobs and lists the target on the driver") {
+    val src = tmp(); val cfg = CdcPipeline.Config(
+      sourceDir = src, targetDir = tmp() + "/target",
+      checkpointDir = tmp() + "/ckpt", dlqDir = tmp() + "/dlq")
+    // a snapshot spread over every bucket, so the merge reads a target
+    // with more partition dirs than Spark's default parallel-listing cutoff
+    Upsert.snapshot(spark, spark.range(1000).select(col("id").as("key"),
+      (col("id") * 1.5).as("value"), col("id").as("k"),
+      lit(null).cast("timestamp").as("updated_at"),
+      lit(null).cast("long").as("updated_off")), "key", cfg.targetDir)
+    val root = new org.apache.hadoop.fs.Path(cfg.targetDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(root).count(_.getPath.getName.startsWith("bucket=")) ==
+      Upsert.NumBuckets)
+    val files = 3; val perFile = 100
+    (0 until files).foreach { f =>
+      spark.range(perFile).select(lit("update").as("op"),
+        ((col("id") * 7 + f) % 1000).as("key"),
+        struct((col("id") * 2.0).as("value"), col("id").as("k")).as("after"),
+        lit("graft").as("sourceDb"), lit("events").as("sourceTable"),
+        (lit(1700000000L) + col("id")).cast("timestamp").as("ts"),
+        (col("id") + f * perFile).as("offset"))
+        .coalesce(1).write.mode("append").json(src)
+    }
+
+    // every job and stage the stream thread starts, keyed by query id;
+    // the bus delivers events in order, so once a marker job started
+    // after the drain is seen, every start before it has been counted
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    def prop(p: java.util.Properties, k: String) = Option(p).flatMap(x => Option(x.getProperty(k)))
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        prop(e.properties, "sql.streaming.queryId").foreach(jobs.add)
+        if (prop(e.properties, "graft.spec.barrier").nonEmpty) barrier.countDown()
+      }
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        prop(e.properties, "sql.streaming.queryId")
+          .foreach(q => stageTasks.add((q, e.stageInfo.numTasks)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = CdcPipeline.start(spark, cfg)
+      q.awaitTermination()
+      spark.sparkContext.setLocalProperty("graft.spec.barrier", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.spec.barrier", null)
+      assert(barrier.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.length == 1)
+    // one scan of the batch: the source counts every read of it
+    assert(batches.head.numInputRows == files * perFile)
+    val id = q.id.toString
+    val nJobs = jobs.asScala.count(_ == id)
+    assert(nJobs >= 1 && nJobs <= 4, s"$nJobs jobs in one micro-batch")
+    // the target's bucket listing never runs as a Spark job
+    val tasks = stageTasks.asScala.toSeq.collect { case (`id`, n) => n }
+    info(s"$nJobs jobs; tasks per stage: ${tasks.mkString(", ")}")
+    assert(!tasks.contains(Upsert.NumBuckets), tasks.mkString(","))
+    assert(Upsert.liveRows(Upsert.readTarget(spark, cfg.targetDir)).count() == 1000)
   }
 
   test("DSv2 changelog source: pipeline parity, restart parity, gated resume token") {

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -463,6 +465,51 @@ class EngineSpec extends SparkSpec {
       assert(normCdc(spark.read.parquet(s"$root/tgt/events")) ==
         stream ++ Set((9001L, 1.0, 11L), (9002L, 2.0, 12L))) // 9009 NOT applied
     } finally engine.stop()
+  }
+
+  test("the snapshot gets the task's field rules: a masked k merges, no batch is parked") {
+    val root = tmp()
+    val cfgPath = s"$root/engine.json"
+    spark.range(1000).select(col("id").as("key"), (col("id") * 0.5).as("value"),
+      (col("id") % 97).as("k")).write.parquet(s"$root/snap/events")
+    // two change files: updates of snapshot keys, then inserts and deletes
+    def changes(ids: org.apache.spark.sql.Dataset[java.lang.Long], op: String, offset0: Long) =
+      ids.select(lit(op).as("op"), col("id").as("key"),
+        struct((col("id") * 2.0).as("value"), col("id").as("k")).as("after"),
+        lit("graft").as("sourceDb"), lit("events").as("sourceTable"),
+        (lit(1700000000L) + col("id")).cast("timestamp").as("ts"),
+        (col("id") + offset0).as("offset"))
+    changes(spark.range(0, 50), "update", 0L)
+      .coalesce(1).write.mode("append").json(s"$root/src/events")
+    changes(spark.range(1000, 1010), "insert", 2000L)
+      .union(changes(spark.range(100, 120), "delete", 3000L))
+      .coalesce(1).write.mode("append").json(s"$root/src/events")
+    writeConfig(cfgPath, s"""{ "syncTasks": [
+      { "id": 6, "type": "mongodb", "enabled": true, "securityEnabled": true,
+        "sourceDir": "$root/src", "targetDir": "$root/tgt",
+        "checkpointDir": "$root/ckpt", "snapshotDir": "$root/snap", "dlqDir": "$root/dlq",
+        "tables": [ {"sourceTable": "events", "keyColumns": ["key"],
+          "fieldSecurity": [ {"field": "after.k", "securityType": "mask"} ] } ] } ],
+      "backupTasks": [] }""")
+    val engine = new GraftEngine(spark, cfgPath, availableNow = false)
+    try {
+      engine.pollOnce()
+      engine.processAllAvailable()
+    } finally engine.stop()
+    val dlq = Paths.get(s"$root/dlq")
+    val parked = if (!Files.exists(dlq)) Nil else {
+      val walk = Files.walk(dlq)
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("batch_") || n.startsWith("parked_")).toList
+      finally walk.close()
+    }
+    assert(parked.isEmpty, parked.mkString(", "))
+    val live = graft.operators.Upsert.liveRows(
+      graft.operators.Upsert.readTarget(spark, s"$root/tgt/events"))
+    assert(live.schema("k").dataType == org.apache.spark.sql.types.StringType)
+    assert(live.count() == 1000 + 10 - 20)
+    assert(live.select("k").distinct().collect().map(_.getString(0)).toSet == Set("****"))
+    assert(live.filter(col("key") === 7L).select("value").head().getDouble(0) == 14.0)
   }
 
   test("dailyRollup on a task runs a supervised per-day counter stream beside the CDC pipeline") {
