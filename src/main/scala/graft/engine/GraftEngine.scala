@@ -919,20 +919,9 @@ object GraftEngine {
     val names = graft.Tables(spark, spec.sourceDir, "customer")
       .select(org.apache.spark.sql.functions.col("c_custkey").as("id"),
         org.apache.spark.sql.functions.col("c_name").as("name"))
-    val absorbedPath =
-      graft.operators.Atomic.resolve(spark, spec.storeDir, "absorbed")
-    val namesPath = graft.operators.Atomic.resolve(spark, spec.storeDir, "names")
-    val fs = new org.apache.hadoop.fs.Path(namesPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val donePath =
-      if (fs.exists(new org.apache.hadoop.fs.Path(absorbedPath))) Some(absorbedPath)
-      else if (fs.exists(new org.apache.hadoop.fs.Path(namesPath))) Some(namesPath)
-      else None
-    val fresh = donePath match {
-      case Some(dp) =>
-        names.join(spark.read.parquet(dp).select("id"), Seq("id"), "left_anti")
-      case None => names
-    }
+    val done = graft.operators.Atomic.existing(spark, spec.storeDir, "absorbed")
+      .orElse(graft.operators.Atomic.existing(spark, spec.storeDir, "names"))
+    val fresh = done.fold(names)(d => names.join(d.select("id"), Seq("id"), "left_anti"))
     val n = fresh.count()
     if (n > 0) graft.operators.Dedup.appendToEntityStore(fresh, spec.storeDir)
     if (spec.compact)
@@ -1132,53 +1121,48 @@ object GraftEngine {
     * Returns a summary like `ivf +120 codes +120 pq compacted`. */
   def runAnnIndexMaintenance(spark: SparkSession,
       spec: graft.model.AnnIndexSpec): String = {
-    import graft.operators.Similarity
+    import graft.operators.{Atomic, Similarity}
     val emb = graft.Tables(spark, spec.sourceDir, "embeddings")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
-    def increment(cellsPath: String): (org.apache.spark.sql.DataFrame, Long) = {
-      val have = spark.read.parquet(cellsPath).select("vec_id")
-      val fresh = emb.join(have, Seq("vec_id"), "left_anti")
+    def increment(have: org.apache.spark.sql.DataFrame)
+        : (org.apache.spark.sql.DataFrame, Long) = {
+      val fresh = emb.join(have.select("vec_id"), Seq("vec_id"), "left_anti")
       (fresh, fresh.count())
     }
     val ivfRoot = s"${spec.indexDir}/ivf"
     val codesRoot = s"${spec.indexDir}/codes_idx"
     val parts = Seq.newBuilder[String]
     if (spec.ivf) {
-      if (!exists(s"$ivfRoot/centroids")) {
+      if (Atomic.existing(spark, ivfRoot, "centroids").isEmpty) {
         Similarity.buildStoredIvf(emb, ivfRoot)
         parts += "ivf founded"
       } else {
         val (fresh, n) = increment(
-          graft.operators.Atomic.resolve(spark, ivfRoot, "cells"))
+          spark.read.parquet(Atomic.resolve(spark, ivfRoot, "cells")))
         if (n > 0) Similarity.appendToStoredIvf(fresh, ivfRoot)
         parts += s"ivf +$n"
       }
       if (spec.compact) { Similarity.compactStoredIvf(spark, ivfRoot); parts += "ivf compacted" }
     }
     if (spec.codes) {
-      if (!exists(graft.operators.Atomic.resolve(spark, codesRoot, "codes"))) {
-        Similarity.foundCodeIndex(emb, codesRoot)
-        parts += "codes founded"
-      } else {
-        val (fresh, n) = increment(
-          graft.operators.Atomic.resolve(spark, codesRoot, "codes"))
-        if (n > 0) Similarity.appendToCodeIndex(fresh, codesRoot)
-        parts += s"codes +$n"
+      Atomic.existing(spark, codesRoot, "codes") match {
+        case None =>
+          Similarity.foundCodeIndex(emb, codesRoot)
+          parts += "codes founded"
+        case Some(have) =>
+          val (fresh, n) = increment(have)
+          if (n > 0) Similarity.appendToCodeIndex(fresh, codesRoot)
+          parts += s"codes +$n"
       }
       if (spec.compact) { Similarity.compactCodeIndex(spark, codesRoot); parts += "codes compacted" }
     }
     if (spec.jl) {
       val jlRoot = s"${spec.indexDir}/jl"
-      if (!exists(s"$jlRoot/jlcents")) {
+      if (Atomic.existing(spark, jlRoot, "jlcents").isEmpty) {
         Similarity.foundJlIndex(emb, jlRoot)
         parts += "jl founded"
       } else {
         val (fresh, n) = increment(
-          graft.operators.Atomic.resolve(spark, jlRoot, "jlproj"))
+          spark.read.parquet(Atomic.resolve(spark, jlRoot, "jlproj")))
         if (n > 0) Similarity.appendToJlIndex(fresh, jlRoot)
         parts += s"jl +$n"
       }

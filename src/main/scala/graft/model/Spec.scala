@@ -291,7 +291,7 @@ final case class PrivacySpec(
   * retrain + store the PQ codebooks, optionally compact (rewriting
   * cells/codes minus right-to-be-forgotten tombstones). The IVF and
   * code indexes live under separate roots (`ivf/`, `codes/`) so each
-  * owns its Forgotten set — compaction of one must not blind the
+  * owns its tombstone set — compaction of one must not blind the
   * other's tombstones. */
 final case class AnnIndexSpec(
     id: Int,

@@ -466,18 +466,15 @@ object Dedup {
     * old document. Layout: plain parquet — the probe join hashes on
     * (band, bucket), which no directory partitioning improves, and the
     * verify join prunes `hashed` to candidate ids by predicate.
-    * An append racing a compaction fails the compaction, never the
-    * append ([[Atomic.publish]]). */
+    * Store contract: [[Atomic]]. */
   def appendToStoredIndex(docs: DataFrame, indexDir: String, k: Int = 3): Unit = {
     val hashed = docs.select(col("doc_id"),
       elementHashes(array_distinct(Text.shingles(col("text"), k))).as("hs")).persist()
     try {
-      hashed.write.mode("append")
-        .parquet(Atomic.resolve(docs.sparkSession, indexDir, "hashed"))
+      Atomic.append(hashed, indexDir, "hashed")
       val sigs = minhashSignatures(hashed.withColumn("n", size(col("hs"))),
         carry = Seq("n"))
-      explodeBands(sigs, carry = Seq("n")).write.mode("append")
-        .parquet(Atomic.resolve(docs.sparkSession, indexDir, "bands"))
+      Atomic.append(explodeBands(sigs, carry = Seq("n")), indexDir, "bands")
     } finally hashed.unpersist()
   }
 
@@ -491,14 +488,9 @@ object Dedup {
     * re-paired. */
   def pairsAgainstStoredIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame, threshold: Double = 0.8, k: Int = 3): DataFrame = {
-    // honor right-to-be-forgotten tombstones ([[forgetInStoredIndex]]):
     // a tombstoned document neither candidates nor verifies
-    val storedBands = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "bands")),
-      "doc_id", spark, indexDir)
-    val storedHashed = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "hashed")),
-      "doc_id", spark, indexDir)
+    val storedBands = Atomic.live(spark, indexDir, "bands", "doc_id")
+    val storedHashed = Atomic.live(spark, indexDir, "hashed", "doc_id")
     // band the batch fresh: increment-sized work, cheaper than filtering
     // the full stored index for the batch's rows
     val hashed = batch.select(col("doc_id"),
@@ -524,9 +516,8 @@ object Dedup {
     * 100 TB the census is never recomputed corpus-wide: each
     * increment's per-hash deltas sum on read, filtered FIRST to the
     * probe batch's own hash set (batch-sized), so a probe aggregates
-    * increments-per-batch-hash rows, not the corpus. An append racing
-    * a compaction fails the compaction, never the append
-    * ([[Atomic.publish]]). */
+    * increments-per-batch-hash rows, not the corpus. Store contract:
+    * [[Atomic]]. */
   def appendToPostingsStore(docs: DataFrame, indexDir: String, k: Int = 3,
       rarest: Int = 5, maxDf: Long = 1000L): Unit = {
     import org.apache.spark.sql.expressions.Window
@@ -535,11 +526,9 @@ object Dedup {
         explode(elementHashes(array_distinct(Text.shingles(col("text"), k)))).as("h"))
       .persist()
     try {
-      postings.write.mode("append")
-        .parquet(Atomic.resolve(spark, indexDir, "postings"))
-      postings.groupBy(col("h")).agg(count(lit(1)).as("delta"))
-        .write.mode("append")
-        .parquet(Atomic.resolve(spark, indexDir, "census_inc"))
+      Atomic.append(postings, indexDir, "postings")
+      Atomic.append(postings.groupBy(col("h")).agg(count(lit(1)).as("delta")),
+        indexDir, "census_inc")
       // this batch's PROBE KEYS, fixed against the census as of this
       // append (its own increment included). Ranks chosen at append
       // time can drift from the eventual global census — the
@@ -550,11 +539,11 @@ object Dedup {
         .join(batchHs, Seq("h"))
         .groupBy(col("h")).agg(sum(col("delta")).as("df"))
         .filter(col("df") <= maxDf)
-      postings.join(dfq, Seq("h"))
+      Atomic.append(postings.join(dfq, Seq("h"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("h").asc)))
-        .filter(col("rk") <= rarest).select(col("doc_id"), col("h"))
-        .write.mode("append").parquet(Atomic.resolve(spark, indexDir, "rare"))
+        .filter(col("rk") <= rarest).select(col("doc_id"), col("h")),
+        indexDir, "rare")
     } finally postings.unpersist()
   }
 
@@ -575,15 +564,9 @@ object Dedup {
     * nothing corpus-pair-shaped. */
   def containmentAgainstStoredIndex(spark: SparkSession, indexDir: String,
       batch: DataFrame, thresholdMicro: Long = 900000L): DataFrame = {
-    val storedPostings = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "postings")),
-      "doc_id", spark, indexDir)
-    val storedHashed = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "hashed")),
-      "doc_id", spark, indexDir)
-    val storedRare = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "rare")),
-      "doc_id", spark, indexDir)
+    val storedPostings = Atomic.live(spark, indexDir, "postings", "doc_id")
+    val storedHashed = Atomic.live(spark, indexDir, "hashed", "doc_id")
+    val storedRare = Atomic.live(spark, indexDir, "rare", "doc_id")
     val batchIds = batch.select(col("doc_id")).distinct()
     // BOTH directions — the candidate scheme is asymmetric (rare keys
     // probe full postings), so a batch-touching pair can surface via
@@ -613,13 +596,6 @@ object Dedup {
       .filter(col("containment_micro") >= thresholdMicro)
   }
 
-  /** Right-to-be-forgotten in the stored band index: record tombstones
-    * now (probes exclude them immediately — [[Forgotten]]'s contract);
-    * [[compactStoredIndex]] performs the physical erasure. */
-  def forgetInStoredIndex(spark: SparkSession, indexDir: String,
-      docIds: Seq[Long]): Unit =
-    Forgotten.append(spark, indexDir, docIds)
-
   /** Compact the stored band index: rewrite `hashed` and `bands`
     * MINUS tombstoned documents (the durable right-to-be-forgotten
     * erasure) and collapse append-accumulated small files; tombstones
@@ -633,58 +609,33 @@ object Dedup {
     * REBUILD from the compacted postings (which also realigns the
     * append-time rare ranks with the global census — the documented
     * drift-rebuild point — and collapses census increments to one
-    * table). Same marker-committed publish and single-compactor
-    * maintenance-window contract as [[Similarity.compactStoredIvf]];
-    * a concurrent append fails the publish, never loses rows
-    * ([[Atomic.publish]]). */
+    * table). Store contract: [[Atomic]]. */
   def compactStoredIndex(spark: SparkSession, indexDir: String,
       numFiles: Int = 8, rarest: Int = 5, maxDf: Long = 1000L): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val hadTombstones = Forgotten.read(spark, indexDir).isDefined
-    Seq("hashed", "bands").foreach { t =>
-      val live = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, indexDir, t)),
-        "doc_id", spark, indexDir)
-      Atomic.publish(spark, indexDir, t) { staged =>
-        live.repartition(numFiles).write.mode("overwrite").parquet(staged)
-      }
-    }
-    val postingsPath = new org.apache.hadoop.fs.Path(
-      Atomic.resolve(spark, indexDir, "postings"))
-    val hasPostings = postingsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(postingsPath)
-    if (hasPostings) {
-      val livePost = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, indexDir, "postings")),
-        "doc_id", spark, indexDir)
-      Atomic.publish(spark, indexDir, "postings") { staged =>
-        livePost.repartition(numFiles).write.mode("overwrite").parquet(staged)
-      }
-      val post = spark.read.parquet(Atomic.resolve(spark, indexDir, "postings"))
-      Atomic.publish(spark, indexDir, "census_inc") { staged =>
-        post.groupBy(col("h")).agg(count(lit(1)).as("delta"))
-          .repartition(numFiles).write.mode("overwrite").parquet(staged)
-      }
-      val dfq = spark.read.parquet(Atomic.resolve(spark, indexDir, "census_inc"))
-        .groupBy(col("h")).agg(sum(col("delta")).as("df"))
-        .filter(col("df") <= maxDf)
-      Atomic.publish(spark, indexDir, "rare") { staged =>
-        post.join(dfq, Seq("h"))
+    val spread = spreadOver(numFiles)
+    val hasPostings = Atomic.existing(spark, indexDir, "postings").isDefined
+    Atomic.compact(spark, indexDir) { c =>
+      (Seq("hashed", "bands") ++ (if (hasPostings) Seq("postings") else Nil))
+        .foreach(c.rewrite(_, "doc_id")(spread))
+      if (hasPostings) {
+        val post = spark.read.parquet(Atomic.resolve(spark, indexDir, "postings"))
+        c.publish("census_inc")(
+          spread(post.groupBy(col("h")).agg(count(lit(1)).as("delta")), _))
+        val dfq = spark.read.parquet(Atomic.resolve(spark, indexDir, "census_inc"))
+          .groupBy(col("h")).agg(sum(col("delta")).as("df"))
+          .filter(col("df") <= maxDf)
+        c.publish("rare")(spread(post.join(dfq, Seq("h"))
           .withColumn("rk", row_number().over(
             Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("h").asc)))
-          .filter(col("rk") <= rarest).select(col("doc_id"), col("h"))
-          .repartition(numFiles).write.mode("overwrite").parquet(staged)
+          .filter(col("rk") <= rarest).select(col("doc_id"), col("h")), _))
       }
     }
-    // erasure beats reader grace: with tombstones the superseded
-    // versions (still holding the forgotten rows) are purged at once
-    if (hadTombstones) {
-      val legs = Seq("hashed", "bands") ++
-        (if (hasPostings) Seq("postings", "census_inc", "rare") else Nil)
-      legs.foreach(Atomic.purge(spark, indexDir, _))
-    }
-    Forgotten.clear(spark, indexDir)
   }
+
+  /** A compaction writer: `rows` rewritten as `numFiles` files. */
+  private def spreadOver(numFiles: Int): (DataFrame, String) => Unit =
+    (rows, staged) => rows.repartition(numFiles).write.mode("overwrite").parquet(staged)
 
   /** Size-ratio prefilter on a banded candidate join: J(A,B) ≥ t forces
     * |A∩B| ≥ t·|A∪B|, and |A∩B| ≤ min(|A|,|B|) ≤ max(|A|,|B|) ≤ |A∪B|,
@@ -848,17 +799,10 @@ object Dedup {
           .union(jump)
           .groupBy("doc_id").agg(min(col("lbl")).as("cluster_id"))
           .localCheckpoint(false)
-        val t0 = System.nanoTime()
         val s = probe(next)
         converged = (s == null && prevSum == null) ||
           (s != null && prevSum != null && s.compareTo(prevSum) == 0)
         prevSum = s
-        // builder-side visibility into the round ladder (never set by
-        // the driver): per-round wall time tells plan-bound from
-        // execution-bound apart
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(f"[cc] round ${i + 1} ${(System.nanoTime() - t0) / 1e9}%.2fs" +
-            s" sum=$s converged=$converged")
         // superseded generations are checkpointed RDD blocks, not
         // CacheManager entries: the context cleaner reclaims them as
         // soon as the loop's reference drops (node-sized, disk-backed
@@ -1274,41 +1218,28 @@ object Dedup {
     * Re-appending an already-absorbed id is now a no-op rather than
     * an edge-duplicating contract violation.
     *
-    * Tombstoned ids ([[forgetInEntityStore]]) neither candidate nor
-    * verify; an append racing a compaction fails the compaction,
-    * never the append ([[Atomic.publish]]). */
+    * Tombstoned ids neither candidate nor verify. Store contract:
+    * [[Atomic]]. */
   def appendToEntityStore(names: DataFrame, storeDir: String): Unit = {
     val spark = names.sparkSession
-    def existing(table: String): Option[DataFrame] = {
-      val p = Atomic.resolve(spark, storeDir, table)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
-        Some(spark.read.parquet(p))
-      else None
-    }
+    def existing(table: String) = Atomic.existing(spark, storeDir, table)
     val batchVariants = nameVariants(names).persist()
     try {
       val freshNames = existing("names")
         .map(s => names.join(s.select("id"), Seq("id"), "left_anti"))
         .getOrElse(names)
-      freshNames.select(col("id"), col("name")).write.mode("append")
-        .parquet(Atomic.resolve(spark, storeDir, "names"))
+      Atomic.append(freshNames.select(col("id"), col("name")), storeDir, "names")
       val freshVariants = existing("variants")
         .map(s => batchVariants.join(s.select("id").distinct(), Seq("id"), "left_anti"))
         .getOrElse(batchVariants)
-      freshVariants.write.mode("append")
-        .parquet(Atomic.resolve(spark, storeDir, "variants"))
-      val stored = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, storeDir, "variants")),
-        "id", spark, storeDir)
+      Atomic.append(freshVariants, storeDir, "variants")
+      val stored = Atomic.live(spark, storeDir, "variants", "id")
       val cand = batchVariants.as("x").join(stored.as("y"),
           col("x.vh") === col("y.vh") && col("x.id") =!= col("y.id"))
         .select(least(col("x.id"), col("y.id")).as("id_a"),
           greatest(col("x.id"), col("y.id")).as("id_b"))
         .distinct()
-      val storedNames = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, storeDir, "names")),
-        "id", spark, storeDir)
+      val storedNames = Atomic.live(spark, storeDir, "names", "id")
       val verified = cand
         .join(storedNames.select(col("id").as("id_a"),
           col("name").as("name_a")), Seq("id_a"))
@@ -1318,11 +1249,9 @@ object Dedup {
         .select(col("id_a"), col("id_b"))
         .persist()
       try {
-        existing("edges")
+        Atomic.append(existing("edges")
           .map(s => verified.join(s, Seq("id_a", "id_b"), "left_anti"))
-          .getOrElse(verified)
-          .write.mode("append")
-          .parquet(Atomic.resolve(spark, storeDir, "edges"))
+          .getOrElse(verified), storeDir, "edges")
         // maintain the label fixpoint incrementally: fold ALL of the
         // batch's verified pairs (pre-anti-join — re-merging an edge a
         // crashed attempt already folded is a no-op, which keeps this
@@ -1345,11 +1274,9 @@ object Dedup {
         }
         // the commit point: an id lands in `absorbed` only once its
         // batch's edges and labels are durably committed
-        val freshAbsorbed = existing("absorbed")
+        Atomic.append(existing("absorbed")
           .map(s => names.select("id").join(s, Seq("id"), "left_anti"))
-          .getOrElse(names.select("id"))
-        freshAbsorbed.write.mode("append")
-          .parquet(Atomic.resolve(spark, storeDir, "absorbed"))
+          .getOrElse(names.select("id")), storeDir, "absorbed")
       } finally { verified.unpersist(); () }
     } finally {
       batchVariants.unpersist()
@@ -1369,22 +1296,14 @@ object Dedup {
     * Equals [[entityClusters]] over the union of all appended batches
     * (spec-pinned on a two-append fixture). */
   def entityClustersFromStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val names = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, storeDir, "names")),
-      "id", spark, storeDir)
-    val labelsPath = Atomic.resolve(spark, storeDir, "labels")
-    val hasLabels = {
-      val hp = new org.apache.hadoop.fs.Path(labelsPath)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-    }
-    if (hasLabels && Forgotten.read(spark, storeDir).isEmpty)
-      clusterReadoutFromLabels(spark.read.parquet(labelsPath), names)
-    else {
-      val edges = Forgotten.exclude(Forgotten.exclude(
-          spark.read.parquet(Atomic.resolve(spark, storeDir, "edges")),
-          "id_a", spark, storeDir), "id_b", spark, storeDir)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      entityClusterReadout(edges, names)
+    val names = Atomic.live(spark, storeDir, "names", "id")
+    Atomic.existing(spark, storeDir, "labels")
+      .filter(_ => Atomic.tombstones(spark, storeDir).isEmpty) match {
+      case Some(labels) => clusterReadoutFromLabels(labels, names)
+      case None =>
+        val edges = Atomic.live(spark, storeDir, "edges", "id_a", "id_b")
+          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+        entityClusterReadout(edges, names)
     }
   }
 
@@ -1444,57 +1363,31 @@ object Dedup {
     clusterReadoutFromLabels(mergeLabels(storedLabels, verified), names)
   }
 
-  /** Tombstone ids in the entity store — effective immediately at
-    * probe and read time; physical erasure happens at
-    * [[compactEntityStore]]. */
-  def forgetInEntityStore(spark: SparkSession, storeDir: String,
-      ids: Seq[Long]): Unit =
-    Forgotten.append(spark, storeDir, ids)
-
   /** Compact the entity store: rewrite all three tables minus
     * tombstoned ids (edges drop when EITHER endpoint is tombstoned —
     * a forgotten entity's name must not survive as the other side of
-    * an edge row) and collapse append-accumulated small files; purge
-    * superseded versions and clear tombstones once rows are
-    * physically gone — the [[compactStoredIndex]] erasure contract. */
+    * an edge row) and collapse append-accumulated small files — the
+    * [[Atomic.compact]] erasure contract. */
   def compactEntityStore(spark: SparkSession, storeDir: String,
       numFiles: Int = 8): Unit = {
-    val hadTombstones = Forgotten.read(spark, storeDir).isDefined
-    val fsys = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val spread = spreadOver(numFiles)
     // `absorbed` may be absent on a store founded before the round-14
     // replayable-append protocol; it joins the rewrite once present
     val idTables = Seq("names", "variants") ++
-      (if (fsys.exists(new org.apache.hadoop.fs.Path(
-        Atomic.resolve(spark, storeDir, "absorbed")))) Seq("absorbed") else Nil)
-    idTables.foreach { t =>
-      val live = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, storeDir, t)),
-        "id", spark, storeDir)
-      Atomic.publish(spark, storeDir, t) { staged =>
-        live.repartition(numFiles).write.mode("overwrite").parquet(staged)
-      }
+      Atomic.existing(spark, storeDir, "absorbed").map(_ => "absorbed")
+    Atomic.compact(spark, storeDir) { c =>
+      idTables.foreach(c.rewrite(_, "id")(spread))
+      c.rewrite("edges", "id_a", "id_b")(spread)
+      // labels are DERIVED state: erasure can split chains, so the only
+      // correct post-compaction fixpoint is a fresh closure over the
+      // surviving edges — compaction is the store's one full-CC moment,
+      // which is exactly where that cost belongs (and it upgrades a
+      // pre-labels store to the fast read face)
+      val liveLabels = connectedComponents(
+        spark.read.parquet(Atomic.resolve(spark, storeDir, "edges"))
+          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
+      c.publish("labels")(liveLabels.coalesce(1).write.mode("overwrite").parquet(_))
+      PlanCache.release()
     }
-    val liveEdges = Forgotten.exclude(Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, storeDir, "edges")),
-        "id_a", spark, storeDir), "id_b", spark, storeDir)
-    Atomic.publish(spark, storeDir, "edges") { staged =>
-      liveEdges.repartition(numFiles).write.mode("overwrite").parquet(staged)
-    }
-    // labels are DERIVED state: erasure can split chains, so the only
-    // correct post-compaction fixpoint is a fresh closure over the
-    // surviving edges — compaction is the store's one full-CC moment,
-    // which is exactly where that cost belongs (and it upgrades a
-    // pre-labels store to the fast read face)
-    val liveLabels = connectedComponents(
-      spark.read.parquet(Atomic.resolve(spark, storeDir, "edges"))
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-    Atomic.publish(spark, storeDir, "labels") { staged =>
-      liveLabels.coalesce(1).write.mode("overwrite").parquet(staged)
-    }
-    PlanCache.release()
-    if (hadTombstones)
-      (idTables ++ Seq("edges", "labels")).foreach(Atomic.purge(spark, storeDir, _))
-    Forgotten.clear(spark, storeDir)
   }
 }

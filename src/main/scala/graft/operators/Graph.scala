@@ -569,36 +569,28 @@ object Graph {
   def appendEpochGauges(spark: SparkSession, dir: String, storeDir: String,
       epochs: Int = 4, iters: Int = 4): Long = {
     require(epochs >= 2, "a series needs at least 2 epochs")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val axisPath = Atomic.resolve(spark, storeDir, "axis")
-    val (lo, span, n) =
-      if (fs.exists(new org.apache.hadoop.fs.Path(axisPath))) {
-        val r = spark.read.parquet(axisPath).head()
+    import spark.implicits._
+    val (lo, span, n) = Atomic.existing(spark, storeDir, "axis") match {
+      case Some(axis) =>
+        val r = axis.head()
         (r.getLong(0), r.getLong(1), r.getInt(2))
-      } else {
+      case None =>
         val (l, s) = epochAxisOf(spark, dir)
-        import spark.implicits._
-        Seq((l, s, epochs)).toDF("lo", "span", "epochs")
-          .coalesce(1).write.mode("overwrite").parquet(axisPath)
+        Atomic.append(Seq((l, s, epochs)).toDF("lo", "span", "epochs")
+          .coalesce(1), storeDir, "axis")
         (l, s, epochs)
-      }
-    val gaugesPath = Atomic.resolve(spark, storeDir, "gauges")
-    val stored: Set[Long] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(gaugesPath)))
-        spark.read.parquet(gaugesPath).select("epoch")
-          .collect().map(_.getLong(0)).toSet
-      else Set.empty
+    }
+    val stored: Set[Long] = Atomic.existing(spark, storeDir, "gauges")
+      .fold(Set.empty[Long])(_.select("epoch").collect().map(_.getLong(0)).toSet)
     val missing = (0 until (n - 1)).map(_.toLong).filterNot(stored)
     if (missing.nonEmpty) {
       val li = epochTaggedLineitem(spark, dir, lo, span, n)
-      try {
-        import spark.implicits._
+      try Atomic.append(
         Par.mapOrdered(missing)(e => epochGaugeRow(li, e.toInt, iters))
           .toDF("epoch", "n_nodes", "n_edges", "w_total", "n_communities",
             "top_size", "modularity_micro")
-          .coalesce(1).write.mode("append").parquet(gaugesPath)
-      } finally PlanCache.release()
+          .coalesce(1), storeDir, "gauges")
+      finally PlanCache.release()
     }
     missing.size.toLong
   }
@@ -616,18 +608,15 @@ object Graph {
     val axis = spark.read
       .parquet(Atomic.resolve(spark, storeDir, "axis")).head()
     val (lo, span, n) = (axis.getLong(0), axis.getLong(1), axis.getInt(2))
-    val gaugesPath = Atomic.resolve(spark, storeDir, "gauges")
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stored: Map[Long, (Long, Long, Long, Long, Long, Long, Long)] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(gaugesPath)))
-        spark.read.parquet(gaugesPath)
-          .select("epoch", "n_nodes", "n_edges", "w_total", "n_communities",
+      Atomic.existing(spark, storeDir, "gauges").fold(
+          Map.empty[Long, (Long, Long, Long, Long, Long, Long, Long)]) {
+        _.select("epoch", "n_nodes", "n_edges", "w_total", "n_communities",
             "top_size", "modularity_micro")
           .collect()
           .map(r => r.getLong(0) -> (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
-      else Map.empty
+      }
     // the open epoch is ALWAYS live (a stale stored row for it would
     // freeze the gauge mid-epoch); closed epochs are live only when a
     // crashed maintenance run left them missing
@@ -2080,8 +2069,7 @@ object Graph {
     * partition key / checkpoint replay) re-lands the same delta
     * partition idempotently before claiming it. */
   private[graft] def appendLedger(baskets: DataFrame, storeDir: String): Unit =
-    baskets.write.mode("append")
-      .parquet(Atomic.resolve(baskets.sparkSession, storeDir, "baskets"))
+    Atomic.append(baskets, storeDir, "baskets")
 
   /** One shared write convention for EVERY graph-store edge write:
     * deltas land under `ingest_batch=<key>` with dynamic partition
@@ -2118,8 +2106,7 @@ object Graph {
     * two appends would silently miss its cross-append pairs (the
     * [[Dedup.appendToStoredIndex]] append-the-batch-first discipline,
     * transposed). An exact retry rewrites its own partition (the
-    * content-derived key); an append racing a compaction fails the
-    * compaction, never the append ([[Atomic.publish]]). */
+    * content-derived key). Store contract: [[Atomic]]. */
   def appendToGraphStore(lineitemBatch: DataFrame, storeDir: String): Unit = {
     val (n, key) = batchKeyOf(lineitemBatch)
     if (n > 0) {
@@ -2138,16 +2125,9 @@ object Graph {
     * parts excluded from EITHER endpoint (right-to-be-forgotten blinds
     * a part's entire neighborhood immediately; [[compactGraphStore]]
     * erases it physically). */
-  def storedEdges(spark: SparkSession, storeDir: String): DataFrame = {
-    // no fixed read schema: the streamed layout adds an ingest_batch
-    // partition column, the batch layout does not — select normalizes
-    val raw = spark.read
-      .parquet(Atomic.resolve(spark, storeDir, "edges"))
-      .select(col("pa"), col("pb"), col("w"))
-    Forgotten.exclude(
-        Forgotten.exclude(raw, "pa", spark, storeDir), "pb", spark, storeDir)
+  def storedEdges(spark: SparkSession, storeDir: String): DataFrame =
+    Atomic.live(spark, storeDir, "edges", "pa", "pb")
       .groupBy(col("pa"), col("pb")).agg(sum(col("w")).as("w"))
-  }
 
   /** The store's ingest epochs: one row per `ingest_batch` partition
     * with its edge-delta count — the axis [[storedEdgesWhere]] windows
@@ -2170,12 +2150,7 @@ object Graph {
     * decision, not a read-face one. */
   def storedEdgesWhere(spark: SparkSession, storeDir: String,
       pred: org.apache.spark.sql.Column): DataFrame = {
-    val raw = spark.read
-      .parquet(Atomic.resolve(spark, storeDir, "edges"))
-      .filter(pred)
-      .select(col("pa"), col("pb"), col("w"))
-    Forgotten.exclude(
-        Forgotten.exclude(raw, "pa", spark, storeDir), "pb", spark, storeDir)
+    Atomic.live(spark, storeDir, "edges", "pa", "pb").filter(pred)
       .groupBy(col("pa"), col("pb")).agg(sum(col("w")).as("w"))
   }
 
@@ -2185,12 +2160,6 @@ object Graph {
   def pageRankFromStore(spark: SparkSession, storeDir: String,
       iters: Int = 5, k: Int = 25): DataFrame =
     pageRankOnEdges(storedEdges(spark, storeDir), iters, k)
-
-  /** O(request) part deletion: tombstone now, erase at compaction —
-    * the [[Forgotten]] contract the band/IVF/code stores share. */
-  def forgetInGraphStore(spark: SparkSession, storeDir: String,
-      partIds: Seq[Long]): Unit =
-    Forgotten.append(spark, storeDir, partIds)
 
   /** RECONCILE the store against the orders of record — the
     * maintenance entry point `graphTasks` schedules: a `baskets`
@@ -2211,17 +2180,11 @@ object Graph {
     * delta, no lost basket. Returns the number of baskets appended. */
   def reconcileGraphStore(spark: SparkSession, dir: String,
       storeDir: String): Long = {
-    val resolvedLedger = Atomic.resolve(spark, storeDir, "baskets")
-    val ledgerPath = new org.apache.hadoop.fs.Path(resolvedLedger)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     val allBaskets = li.select(col("l_orderkey").as("basket")).distinct()
-    val newBaskets =
-      if (fs.exists(ledgerPath))
-        allBaskets.join(spark.read.parquet(resolvedLedger),
-          Seq("basket"), "left_anti")
-      else allBaskets
+    val newBaskets = Atomic.existing(spark, storeDir, "baskets")
+      .fold(allBaskets)(allBaskets.join(_, Seq("basket"), "left_anti"))
     val increment = li.join(
       newBaskets.withColumnRenamed("basket", "l_orderkey"),
       Seq("l_orderkey"), "left_semi")
@@ -2236,31 +2199,22 @@ object Graph {
 
   /** Compact the edge store: collapse append-accumulated deltas to one
     * row per surviving edge, minus tombstoned parts' edges (the
-    * durable erasure — with tombstones the superseded version purges
-    * rather than grace-retains, the [[Atomic.purge]] erasure-beats-
-    * grace rule). */
+    * durable erasure — [[Atomic.compact]]). */
   def compactGraphStore(spark: SparkSession, storeDir: String,
       numFiles: Int = 8): Unit = {
-    val hadTombstones = Forgotten.read(spark, storeDir).isDefined
-    val merged = storedEdges(spark, storeDir)
-    Atomic.publish(spark, storeDir, "edges") { staged =>
+    Atomic.compact(spark, storeDir)(_.publish("edges") { staged =>
       // keep the shared partitioned layout: the collapsed deltas are
       // one "compacted" partition future appends sit beside
-      writeDeltas(merged.repartition(numFiles), staged, "compacted")
-    }
-    if (hadTombstones) Atomic.purge(spark, storeDir, "edges")
-    Forgotten.clear(spark, storeDir)
+      writeDeltas(storedEdges(spark, storeDir).repartition(numFiles),
+        staged, "compacted")
+    })
     // the ledger accumulates one small file per ingest (stream batches
     // especially) — collapse it on the same maintenance schedule; a
     // tombstoned part's BASKETS stay in the ledger deliberately (the
     // baskets happened; only the part's edges are erased)
-    val ledger = Atomic.resolve(spark, storeDir, "baskets")
-    val fs = new org.apache.hadoop.fs.Path(ledger)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(ledger))) {
-      val distinctBaskets = spark.read.parquet(ledger).distinct()
+    Atomic.existing(spark, storeDir, "baskets").foreach { ledger =>
       Atomic.publish(spark, storeDir, "baskets") { staged =>
-        distinctBaskets.repartition(numFiles).write.parquet(staged)
+        ledger.distinct().repartition(numFiles).write.parquet(staged)
       }
     }
   }

@@ -22,44 +22,20 @@ object IndexOps {
     * root is reported; a root's `forgotten` table is folded into its
     * siblings' `tombstones` column instead of listed as an artifact. */
   def report(spark: SparkSession, indexDirs: Map[String, String]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val rows = indexDirs.toSeq.sortBy(_._1).flatMap { case (kind, dir) =>
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) Nil
-      else {
-        val children = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-          .filterNot(_.getName.startsWith("_"))
-          .filterNot(_.getName.contains("_compacting"))
-        val tombstones = children.find(_.getName == "forgotten") match {
-          case Some(f) => spark.read.parquet(f.toString).count()
-          case None => 0L
-        }
-        // versioned artifacts (marker-committed compaction) report under
-        // their BASE name, resolving to the committed version; an
-        // unmarked stray from a crashed publish is not an artifact
-        val versioned = "(.+)_v(\\d+)".r
-        children.filterNot(_.getName == "forgotten")
-          .map(_.getName match {
-            case versioned(base, _) => base
-            case n => n
-          })
-          .distinct.toSeq.sorted
-          .flatMap { base =>
-            val t = new org.apache.hadoop.fs.Path(
-              Atomic.resolve(spark, dir, base))
-            if (!fs.exists(t)) Nil
-            else {
-              // recursive: partitioned artifacts (compacted IVF cells)
-              // keep their files under partition subdirectories
-              val it = fs.listFiles(t, true)
-              var files = 0L
-              while (it.hasNext)
-                if (it.next().getPath.getName.endsWith(".parquet")) files += 1
-              Seq((kind, base, spark.read.parquet(t.toString).count(),
-                files, tombstones))
-            }
-          }
+      val tombstones = Atomic.tombstones(spark, dir).fold(0L)(_.count())
+      // versioned artifacts report under their logical name, resolved
+      // to the committed version
+      Atomic.children(spark, dir).map { child =>
+        val t = new org.apache.hadoop.fs.Path(Atomic.resolve(spark, dir, child))
+        // recursive: partitioned artifacts (compacted IVF cells) keep
+        // their files under partition subdirectories
+        val it = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listFiles(t, true)
+        var files = 0L
+        while (it.hasNext)
+          if (it.next().getPath.getName.endsWith(".parquet")) files += 1
+        (kind, child, spark.read.parquet(t.toString).count(), files, tombstones)
       }
     }
     spark.createDataFrame(

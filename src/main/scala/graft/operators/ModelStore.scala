@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,16 +42,11 @@ object ModelStore {
 
   /** The live model, or None before the founding promotion. The read
     * is a 6-row collect — registry-sized, never corpus-sized. */
-  def liveModel(spark: SparkSession, storeDir: String): Option[(Seq[Long], Long)] = {
-    val path = Atomic.resolve(spark, storeDir, "model")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) None
-    else {
-      val kv = spark.read.parquet(path).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      Some((WeightKeys.map(kv), kv(AucKey)))
+  def liveModel(spark: SparkSession, storeDir: String): Option[(Seq[Long], Long)] =
+    Atomic.existing(spark, storeDir, "model").map { model =>
+      val kv = model.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      (WeightKeys.map(kv), kv(AucKey))
     }
-  }
 
   /** Score the WHOLE corpus with the live weights — the serving face:
     * (doc_id, logit_micro, keep). Throws before the founding

@@ -296,8 +296,7 @@ object Similarity {
   /** Write ONLY the codebook — the founding act for an index whose
     * `cells` table is owned by someone else (e.g. the streaming ingest
     * face, whose file-sink commit log must be the sole writer of its
-    * directory — batch appends into a streamed `cells` dir would be
-    * invisible behind `_spark_metadata`). */
+    * directory — [[Atomic]]'s stream-ownership rule). */
   def foundCodebook(embs: DataFrame, indexDir: String,
       numCentroids: Int = 16, trainIters: Int = 0): Unit = {
     if (trainIters > 0) {
@@ -381,15 +380,11 @@ object Similarity {
   /** Append a corpus increment to a stored IVF index: assign each new
     * vector to its cell under the EXISTING codebook (map-side argmax
     * over literal centroids — no shuffle) and append. Requires
-    * [[buildStoredIvf]] to have founded the index.
-    *
-    * Concurrency: appends may run beside probes freely; an append
-    * racing a COMPACTION of the same store fails the compaction, never
-    * the append — [[Atomic.publish]]'s append-detection contract. */
+    * [[buildStoredIvf]] to have founded the index. Store contract:
+    * [[Atomic]]. */
   def appendToStoredIvf(embs: DataFrame, indexDir: String): Unit =
-    assignCells(embs, loadCentroids(embs.sparkSession, indexDir))
-      .write.mode("append")
-      .parquet(Atomic.resolve(embs.sparkSession, indexDir, "cells"))
+    Atomic.append(assignCells(embs, loadCentroids(embs.sparkSession, indexDir)),
+      indexDir, "cells")
 
   /** Top-k ANN of `queries` against the stored index: probe cells are
     * chosen under the stored codebook, candidates come from the
@@ -401,12 +396,8 @@ object Similarity {
     val cents = loadCentroids(spark, indexDir)
     // cast: a compacted index stores centroid_id as a PARTITION column,
     // which parquet partition discovery types int — normalize to the
-    // pre-compaction long so the probe join key never drifts.
-    // Forgotten.exclude honors right-to-be-forgotten tombstones
-    // ([[forgetInStoredIvf]]) until compaction erases the rows.
-    val cells = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, indexDir, "cells")),
-        "vec_id", spark, indexDir)
+    // pre-compaction long so the probe join key never drifts
+    val cells = Atomic.live(spark, indexDir, "cells", "vec_id")
       .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
         col("centroid_id").cast("long").as("centroid_id"))
     val probes = queries
@@ -533,9 +524,7 @@ object Similarity {
     * aggregate over the cells table. */
   def ivfCellStats(spark: SparkSession, indexDir: String): DataFrame = {
     val cents = spark.read.parquet(s"$indexDir/centroids").select("centroid_id")
-    val occ = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, indexDir, "cells")),
-        "vec_id", spark, indexDir)
+    val occ = Atomic.live(spark, indexDir, "cells", "vec_id")
       .groupBy(col("centroid_id").cast("long").as("centroid_id"))
       .agg(count(lit(1)).as("n_vectors"))
     cents.join(occ, Seq("centroid_id"), "left")
@@ -549,36 +538,13 @@ object Similarity {
     * vectors become one directory of full-size files — after which a
     * probe join touches only its probed cells' directories (Spark's
     * dynamic partition pruning fires off the broadcast probe side;
-    * spec-pinned) instead of every file in the index.
-    *
-    * Swap protocol: MARKER-COMMITTED versions ([[Atomic.publish]]) —
-    * the rewrite fills `cells_v<N+1>` and an atomic marker create
-    * makes it live; a concurrent probe resolves the previous version
-    * until that instant and a crash at any step leaves the old
-    * version readable (the in-place delete+rename this replaces had a
-    * window where readers planned against an empty relation). */
-  def compactStoredIvf(spark: SparkSession, indexDir: String): Unit = {
-    // compaction is also the durable right-to-be-forgotten erasure:
-    // tombstoned vectors are dropped from the rewrite, then cleared.
-    // When tombstones existed, the superseded version is PURGED rather
-    // than grace-retained — erasure beats reader grace (Atomic.purge)
-    val hadTombstones = Forgotten.read(spark, indexDir).isDefined
-    val live = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "cells")),
-      "vec_id", spark, indexDir)
-    Atomic.publish(spark, indexDir, "cells") { staged =>
+    * spec-pinned) instead of every file in the index. It is also the
+    * durable erasure of tombstoned vectors ([[Atomic.compact]]). */
+  def compactStoredIvf(spark: SparkSession, indexDir: String): Unit =
+    Atomic.compact(spark, indexDir)(_.rewrite("cells", "vec_id") { (live, staged) =>
       live.repartition(col("centroid_id"))
         .write.mode("overwrite").partitionBy("centroid_id").parquet(staged)
-    }
-    if (hadTombstones) Atomic.purge(spark, indexDir, "cells")
-    Forgotten.clear(spark, indexDir)
-  }
-
-  /** Right-to-be-forgotten in the stored IVF index: tombstone now,
-    * probes exclude immediately, [[compactStoredIvf]] erases. */
-  def forgetInStoredIvf(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Long]): Unit =
-    Forgotten.append(spark, indexDir, vecIds)
+    })
 
   /** The stored coarse codebook — numCentroids rows, metadata-bounded
     * by construction (a codebook is picked/trained small enough to
@@ -1031,37 +997,19 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$indexDir/codes")
 
   /** Append one crawl increment's codes — signing is a pure map over
-    * the literal hyperplanes (no shuffle); old rows never rewritten
-    * (the append-only contract of the band/IVF/sketch stores). An
-    * append racing a compaction fails the compaction, never the append
-    * ([[Atomic.publish]]). */
+    * the literal hyperplanes (no shuffle); old rows never rewritten.
+    * Store contract: [[Atomic]]. */
   def appendToCodeIndex(batch: DataFrame, indexDir: String): Unit =
-    batch.select(col("vec_id"),
-        Vectors.hyperplaneSignature(col("embedding"), nBits = 60).as("sig"))
-      .write.mode("append")
-      .parquet(Atomic.resolve(batch.sparkSession, indexDir, "codes"))
+    Atomic.append(batch.select(col("vec_id"),
+        Vectors.hyperplaneSignature(col("embedding"), nBits = 60).as("sig")),
+      indexDir, "codes")
 
-  /** O(request) deletion: tombstone now, erase at compaction —
-    * the [[Forgotten]] contract the other row indexes share. */
-  def forgetInStoredCodes(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Long]): Unit =
-    Forgotten.append(spark, indexDir, vecIds)
-
-  /** Rewrite the codes minus tombstones behind a staged swap — the
-    * durable erasure + small-file compaction in one maintenance act. */
-  def compactCodeIndex(spark: SparkSession, indexDir: String): Unit = {
-    val hadTombstones = Forgotten.read(spark, indexDir).isDefined
-    val live = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "codes")),
-      "vec_id", spark, indexDir)
-    Atomic.publish(spark, indexDir, "codes") { staged =>
-      live.coalesce(1).write.mode("overwrite").parquet(staged)
-    }
-    // erasure beats reader grace: with tombstones the superseded
-    // version (still holding the forgotten rows) is purged at once
-    if (hadTombstones) Atomic.purge(spark, indexDir, "codes")
-    Forgotten.clear(spark, indexDir)
-  }
+  /** Rewrite the codes minus tombstones as one file — the durable
+    * erasure + small-file compaction in one maintenance act. */
+  def compactCodeIndex(spark: SparkSession, indexDir: String): Unit =
+    Atomic.compact(spark, indexDir)(_.rewrite("codes", "vec_id") {
+      (live, staged) => live.coalesce(1).write.mode("overwrite").parquet(staged)
+    })
 
   /** ANN evaluation harness — recall@k of every approximate path
     * against the exact cosine baseline on the same query set: the
@@ -1123,10 +1071,8 @@ object Similarity {
       shortlist: Int = 100): DataFrame = {
     val q = queries.select(col("vec_id"), col("embedding"),
       Vectors.hyperplaneSignature(col("embedding"), nBits = 60).as("sig"))
-    val codes = Forgotten.exclude(
-      spark.read.schema("vec_id LONG, sig LONG")
-        .parquet(Atomic.resolve(spark, indexDir, "codes")),
-      "vec_id", spark, indexDir)
+    val codes = Atomic.live(spark, indexDir, "codes", "vec_id")
+      .select("vec_id", "sig")
     hammingShortlistRerank(q, codes, rowStore, k, shortlist)
   }
 
@@ -1470,34 +1416,11 @@ object Similarity {
           .as("centroid_id"))
   }
 
-  /** Fail fast when `jlproj` is stream-owned: [[graft.streaming
-    * .JlStream]]'s file sink tracks its rows through a
-    * `_spark_metadata` commit log at a FIXED resolved path — a batch
-    * append would write rows the log never lists (invisible to any
-    * metadata-log reader), and a compaction would publish a fresh
-    * version dir WITHOUT the log while the stream keeps writing its
-    * stale path, silently losing every subsequent streamed row. The
-    * ownership contract is all-batch or all-stream per index; enforce
-    * it at runtime instead of by doc comment alone. */
-  private def requireBatchOwnedJl(spark: SparkSession, indexDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      Atomic.resolve(spark, indexDir, "jlproj"), "_spark_metadata")
-    require(!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"jlproj under $indexDir is owned by a streaming ingest " +
-        "(_spark_metadata present): a JL index is all-batch or " +
-        "all-stream, never mixed — stop the stream and drop its commit " +
-        "log before batch appends or compaction")
-  }
-
-  /** Append a corpus increment under the stored codebook — the
-    * [[appendToStoredIvf]] concurrency contract. */
-  def appendToJlIndex(batch: DataFrame, indexDir: String): Unit = {
-    val spark = batch.sparkSession
-    requireBatchOwnedJl(spark, indexDir)
-    jlAssignUnderStored(spark, batch, indexDir)
-      .write.mode("append")
-      .parquet(Atomic.resolve(spark, indexDir, "jlproj"))
-  }
+  /** Append a corpus increment under the stored codebook. Store
+    * contract: [[Atomic]]. */
+  def appendToJlIndex(batch: DataFrame, indexDir: String): Unit =
+    Atomic.append(jlAssignUnderStored(batch.sparkSession, batch, indexDir),
+      indexDir, "jlproj")
 
   /** Top-k against the stored JL index: queries project in-plan, the
     * probe and shortlist read ONLY the 8·outDims-byte `jlproj` rows
@@ -1508,9 +1431,7 @@ object Similarity {
       queries: DataFrame, rowStore: DataFrame, k: Int = 5,
       nprobe: Int = 4, shortlist: Int = 100): DataFrame = {
     val cents = loadJlCentroids(spark, indexDir)
-    val assigned = Forgotten.exclude(
-        spark.read.parquet(Atomic.resolve(spark, indexDir, "jlproj")),
-        "vec_id", spark, indexDir)
+    val assigned = Atomic.live(spark, indexDir, "jlproj", "vec_id")
       .select(col("vec_id").as("cand_id"), col("p"),
         col("centroid_id").cast("long").as("centroid_id"))
     val queryProj = queries.select(col("vec_id"), jlTicks.as("mi"))
@@ -1520,26 +1441,11 @@ object Similarity {
     jlProbeRerank(assigned, queryProj, cents, ticks, k, nprobe, shortlist)
   }
 
-  /** Tombstone now, erase at compaction — the shared store contract. */
-  def forgetInJlIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Long]): Unit =
-    Forgotten.append(spark, indexDir, vecIds)
-
-  /** Rewrite `jlproj` minus tombstones behind a staged swap; purge
-    * superseded versions when erasure demanded it and clear the
-    * tombstones — [[compactStoredIvf]]'s contract. */
-  def compactJlIndex(spark: SparkSession, indexDir: String): Unit = {
-    requireBatchOwnedJl(spark, indexDir)
-    val hadTombstones = Forgotten.read(spark, indexDir).isDefined
-    val live = Forgotten.exclude(
-      spark.read.parquet(Atomic.resolve(spark, indexDir, "jlproj")),
-      "vec_id", spark, indexDir)
-    Atomic.publish(spark, indexDir, "jlproj") { staged =>
-      live.coalesce(1).write.mode("overwrite").parquet(staged)
-    }
-    if (hadTombstones) Atomic.purge(spark, indexDir, "jlproj")
-    Forgotten.clear(spark, indexDir)
-  }
+  /** Rewrite `jlproj` minus tombstones as one file ([[Atomic.compact]]). */
+  def compactJlIndex(spark: SparkSession, indexDir: String): Unit =
+    Atomic.compact(spark, indexDir)(_.rewrite("jlproj", "vec_id") {
+      (live, staged) => live.coalesce(1).write.mode("overwrite").parquet(staged)
+    })
 
   /** The stored projected codebook — numCentroids rows. */
   private def loadJlCentroids(spark: SparkSession,

@@ -467,13 +467,11 @@ object Sketches {
     * per-(source, reg) max first, so the store grows by at most
     * sources × m rows per increment regardless of batch size, and old
     * rows are never rewritten (the append-only contract the band/IVF
-    * index family shares). An append racing a compaction fails the
-    * compaction, never the append ([[Atomic.publish]]). */
+    * index family shares). Store contract: [[Atomic]]. */
   def appendToSketchStore(batch: DataFrame, storeDir: String): Unit =
-    registerRows(batch)
-      .groupBy(col("source"), col("reg")).agg(max(col("rho")).as("mrho"))
-      .write.mode("append")
-      .parquet(Atomic.resolve(batch.sparkSession, storeDir, "registers"))
+    Atomic.append(registerRows(batch)
+      .groupBy(col("source"), col("reg")).agg(max(col("rho")).as("mrho")),
+      storeDir, "registers")
 
   /** The store's merged register view: max over all increments.
     *
@@ -482,7 +480,7 @@ object Sketches {
     * sketched sources means re-founding the store from the surviving
     * corpus (cheap relative to the corpus scan the reports avoid every
     * other day). The band/IVF indexes, which store per-document rows,
-    * take the tombstone path instead ([[Forgotten]]). */
+    * take the tombstone path instead ([[Atomic.forget]]). */
   def storedRegisters(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.schema("source STRING, reg LONG, mrho INT")
       .parquet(Atomic.resolve(spark, storeDir, "registers"))
@@ -490,8 +488,8 @@ object Sketches {
 
   /** Rewrite the accumulated increments as one merged register set —
     * the store's OPTIMIZE face: read-side work drops back to one row
-    * per (source, reg) after many appends. Staged-rename swap like the
-    * IVF cells compaction; reports are unchanged by construction
+    * per (source, reg) after many appends, published through
+    * [[Atomic.publish]]; reports are unchanged by construction
     * (max is idempotent/associative). */
   def compactSketchStore(spark: SparkSession, storeDir: String): Unit = {
     val live = storedRegisters(spark, storeDir)

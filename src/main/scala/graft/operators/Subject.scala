@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SUBJECT ACCESS EXPORT — the read half of the privacy pair whose
-  * write half is [[Forgotten]] (right to be forgotten): given a set of
+  * write half is [[Atomic.forget]] (right to be forgotten): given a set of
   * data subjects (customer keys), collect every row the warehouse
   * holds about them across the relational chain and write a
   * per-table export plus a row-count manifest — the artifact a

@@ -14,10 +14,9 @@ import graft.functions.Vectors
   * from the file sink's `_spark_metadata` commit log.
   *
   * Ownership contract (same as the IVF cells stream): the commit log
-  * means THIS STREAM OWNS `indexDir/codes` — a batch append into a
-  * streamed codes directory would be invisible behind the metadata
-  * log. Run an index all-batch (found/append) or all-stream, never
-  * mixed. Probes ([[graft.operators.Similarity
+  * means THIS STREAM OWNS `indexDir/codes`, and batch appends and
+  * compaction refuse it ([[graft.operators.Atomic]]'s stream-ownership
+  * rule). Probes ([[graft.operators.Similarity
   * .hammingTopKAgainstStoredCodes]]) read either form identically. */
 object CodeStream {
 

@@ -83,20 +83,12 @@ object ErStream {
       Dedup.appendToEntityStore(names, storeDir)
       // the claim lands AFTER the append: a crash here replays the
       // batch into idempotent no-ops, then claims
-      Seq(batchId).toDF("batch_id").write.mode("append")
-        .parquet(Atomic.resolve(spark, storeDir, "ingest_log"))
+      Atomic.append(Seq(batchId).toDF("batch_id"), storeDir, "ingest_log")
     } finally { names.unpersist(); () }
   }
 
-  private def lastBatch(spark: SparkSession, storeDir: String): Option[Long] = {
-    val live = Atomic.resolve(spark, storeDir, "ingest_log")
-    val p = new org.apache.hadoop.fs.Path(live)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else spark.read.schema("batch_id LONG").parquet(live)
-      .agg(max(col("batch_id"))).first() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
-      }
-  }
+  private def lastBatch(spark: SparkSession, storeDir: String): Option[Long] =
+    Atomic.existing(spark, storeDir, "ingest_log", Some("batch_id LONG"))
+      .map(_.agg(max(col("batch_id"))).first())
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }
 }

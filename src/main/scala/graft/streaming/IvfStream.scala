@@ -18,8 +18,8 @@ import graft.operators.Similarity
   * batch overwrites its own commit instead of duplicating rows. The
   * commit log also means THIS STREAM OWNS `cells`: found the index
   * with [[graft.operators.Similarity.foundCodebook]] (codebook only),
-  * not buildStoredIvf — a batch append into a streamed `cells`
-  * directory would be invisible behind the metadata log.
+  * not buildStoredIvf; batch appends and compaction refuse a streamed
+  * `cells` ([[graft.operators.Atomic]]'s stream-ownership rule).
   *
   * The codebook is loaded once at stream start: it is immutable after
   * founding (re-training is an explicit re-founding act that implies

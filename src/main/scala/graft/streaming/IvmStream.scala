@@ -161,29 +161,17 @@ object IvmStream {
     * — empty before the first publish. */
   def currentView(spark: SparkSession, storeDir: String,
       view: graft.model.IvmView = graft.model.IvmView()): DataFrame = {
-    val live = Atomic.resolve(spark, storeDir, "view")
     val aggCols = view.aggs.distinct
     val viewSchema =
       ("bucket LONG" +: aggCols.map(a => s"$a LONG")).mkString(", ")
-    val p = new org.apache.hadoop.fs.Path(live)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(p))
-      spark.read.schema(viewSchema + ", last_batch LONG").parquet(live)
-        .select("bucket", aggCols: _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(viewSchema))
+    Atomic.existing(spark, storeDir, "view", Some(viewSchema + ", last_batch LONG"))
+      .fold(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(viewSchema)))(
+        _.select("bucket", aggCols: _*))
   }
 
-  private def lastBatch(spark: SparkSession, storeDir: String): Option[Long] = {
-    val live = Atomic.resolve(spark, storeDir, "view")
-    val p = new org.apache.hadoop.fs.Path(live)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else spark.read.schema("last_batch LONG").parquet(live)
-      .agg(max(col("last_batch"))).first() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
-      }
-  }
+  private def lastBatch(spark: SparkSession, storeDir: String): Option[Long] =
+    Atomic.existing(spark, storeDir, "view", Some("last_batch LONG"))
+      .map(_.agg(max(col("last_batch"))).first())
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }
 }

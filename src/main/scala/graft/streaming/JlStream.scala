@@ -13,8 +13,9 @@ import graft.operators.Similarity
   * watermark, no state store) and landed in `jlproj` through the file
   * sink. Exactly-once comes from `_spark_metadata`; the commit log
   * means THIS STREAM OWNS `jlproj` — found with
-  * [[graft.operators.Similarity.foundJlCodebook]] (codebook only),
-  * run an index all-batch or all-stream, never mixed. Probes
+  * [[graft.operators.Similarity.foundJlCodebook]] (codebook only);
+  * batch appends and compaction refuse it ([[graft.operators.Atomic]]).
+  * Probes
   * ([[graft.operators.Similarity.jlIvfAgainstStoredIndex]]) read
   * either form identically. The codebook loads once at stream start:
   * immutable after founding, like the IVF stream's. */

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.Atomic
+import scala.jdk.CollectionConverters._
 
-/** The marker-committed version protocol behind index compaction:
-  * readers never resolve an uncommitted write, a crash mid-publish is
-  * invisible, and each publish supersedes and cleans its
-  * predecessor. */
+import graft.operators.{Atomic, Similarity}
+
+/** The store contract: the marker-committed version protocol (readers
+  * never resolve an uncommitted write, a crash mid-publish is
+  * invisible, each publish supersedes and cleans its predecessor), the
+  * compaction scope's erasure order, and stream ownership. */
 class AtomicSpec extends SparkSpec {
   import spark.implicits._
 
@@ -75,5 +77,108 @@ class AtomicSpec extends SparkSpec {
       spark.read.parquet(live).write.mode("overwrite").parquet(p)
     }
     assert(readRows(Atomic.resolve(spark, base, "cells")) == Set(1L, 2L, 3L))
+  }
+
+  /** Physical generations of `child` under `base`: legacy dir + versions. */
+  private def generations(base: String, child: String): Seq[String] =
+    new java.io.File(base).list().toSeq
+      .filter(n => n == child || n.startsWith(s"${child}_v")).sorted
+
+  private def rewriteRows(c: Atomic.Compaction): Unit =
+    c.rewrite("rows", "v")((live, staged) => live.write.parquet(staged))
+
+  test("compact with tombstones erases the rows, purges superseded versions and clears the tombstones") {
+    val base = Files.createTempDirectory("atomic").toString
+    Atomic.append(Seq(1L, 2L, 3L).toDF("v"), base, "rows")
+    Atomic.compact(spark, base)(rewriteRows)
+    Atomic.forget(spark, base, Seq(2L))
+    assert(readRows(Atomic.resolve(spark, base, "rows")) == Set(1L, 2L, 3L))
+    Atomic.compact(spark, base)(rewriteRows)
+    assert(readRows(Atomic.resolve(spark, base, "rows")) == Set(1L, 3L))
+    assert(generations(base, "rows") == Seq("rows_v1"),
+      "erasure must purge the grace-retained generations")
+    assert(Atomic.tombstones(spark, base).isEmpty)
+  }
+
+  test("compact without tombstones keeps the grace version") {
+    val base = Files.createTempDirectory("atomic").toString
+    Atomic.append(Seq(1L, 2L).toDF("v"), base, "rows")
+    Atomic.compact(spark, base)(rewriteRows)
+    assert(generations(base, "rows") == Seq("rows", "rows_v0"))
+    Atomic.compact(spark, base)(rewriteRows)
+    assert(generations(base, "rows") == Seq("rows_v0", "rows_v1"))
+    assert(readRows(s"$base/rows_v0") == Set(1L, 2L))
+  }
+
+  test("a rewrite that throws mid-scope keeps the tombstones and the prior version live") {
+    val base = Files.createTempDirectory("atomic").toString
+    Atomic.append(Seq(1L, 2L, 3L).toDF("v"), base, "rows")
+    Atomic.forget(spark, base, Seq(2L))
+    intercept[java.util.ConcurrentModificationException] {
+      Atomic.compact(spark, base)(_.rewrite("rows", "v") { (live, staged) =>
+        live.write.parquet(staged)
+        Atomic.append(Seq(4L).toDF("v"), base, "rows") // the racing append
+      })
+    }
+    assert(Atomic.resolve(spark, base, "rows") == s"$base/rows")
+    assert(generations(base, "rows") == Seq("rows"))
+    assert(Atomic.tombstones(spark, base).isDefined)
+    // the probe still excludes the forgotten id; the append survived
+    assert(Atomic.live(spark, base, "rows", "v").collect().map(_.getLong(0)).toSet ==
+      Set(1L, 3L, 4L))
+  }
+
+  test("a forget landing mid-compaction survives the tombstone clear") {
+    val base = Files.createTempDirectory("atomic").toString
+    Atomic.append(Seq(1L, 2L, 3L).toDF("v"), base, "rows")
+    Atomic.forget(spark, base, Seq(1L))
+    Atomic.compact(spark, base)(_.rewrite("rows", "v") { (live, staged) =>
+      live.write.parquet(staged)
+      Atomic.forget(spark, base, Seq(3L))
+    })
+    assert(readRows(Atomic.resolve(spark, base, "rows")) == Set(2L, 3L))
+    assert(Atomic.tombstones(spark, base).get.collect().map(_.getLong(0)).toSet ==
+      Set(3L))
+    assert(Atomic.live(spark, base, "rows", "v").collect().map(_.getLong(0)).toSet ==
+      Set(2L))
+  }
+
+  // the three stores a file-sink stream can own (IvfStream, CodeStream,
+  // JlStream): the founding act that leaves the child to the stream,
+  // a batch append and a compaction
+  private lazy val emb = Tables(spark, sf, "embeddings")
+  Seq[(String, String => Unit, String => Unit, String => Unit)](
+    ("cells", Similarity.foundCodebook(emb, _),
+      Similarity.appendToStoredIvf(emb.limit(4), _),
+      Similarity.compactStoredIvf(spark, _)),
+    ("codes", _ => (),
+      Similarity.appendToCodeIndex(emb.limit(4), _),
+      Similarity.compactCodeIndex(spark, _)),
+    ("jlproj", Similarity.foundJlCodebook(emb, _),
+      Similarity.appendToJlIndex(emb.limit(4), _),
+      Similarity.compactJlIndex(spark, _))
+  ).foreach { case (child, found, append, compact) =>
+    test(s"batch append/compact fail fast on a stream-owned $child") {
+      val indexDir = Files.createTempDirectory(s"graft_owned_$child").toString
+      found(indexDir)
+      // simulate the stream's ownership: the file sink's commit log
+      // marks the directory — a batch append would write rows the log
+      // never lists, a compaction would publish a version without it
+      Files.createDirectories(java.nio.file.Paths
+        .get(indexDir, child, "_spark_metadata"))
+      def files(): Seq[String] = {
+        val root = java.nio.file.Paths.get(indexDir)
+        val walk = Files.walk(root)
+        try walk.iterator().asScala.map(root.relativize(_).toString).toSeq.sorted
+        finally walk.close()
+      }
+      val before = files()
+      val e1 = intercept[IllegalArgumentException](append(indexDir))
+      assert(e1.getMessage.contains("all-batch or all-stream"))
+      val e2 = intercept[IllegalArgumentException](compact(indexDir))
+      assert(e2.getMessage.contains("all-batch or all-stream"))
+      assert(files() == before, "the stream-owned store must be untouched")
+      assert(Atomic.resolve(spark, indexDir, child) == s"$indexDir/$child")
+    }
   }
 }

@@ -61,7 +61,7 @@ class EntityStoreSpec extends SparkSpec {
       Set((1L, 3L, "alice"), (20L, 2L, "carol")))
     // forgetting the chain's middle member splits it: 1 and 3 lose
     // their bridge and drop out of the pair graph entirely
-    Dedup.forgetInEntityStore(spark, storeDir, Seq(2L))
+    graft.operators.Atomic.forget(spark, storeDir, Seq(2L))
     assert(clusters(Dedup.entityClustersFromStore(spark, storeDir)) ==
       Set((20L, 2L, "carol")))
     // a post-forget append never pairs against the tombstoned id:
@@ -84,7 +84,7 @@ class EntityStoreSpec extends SparkSpec {
       .parquet(graft.operators.Atomic.resolve(spark, storeDir, "edges"))
       .collect().flatMap(r => Seq(r.getLong(0), r.getLong(1)))
     assert(!edges.contains(2L), "victim still on disk in edges")
-    assert(graft.operators.Forgotten.read(spark, storeDir).isEmpty)
+    assert(graft.operators.Atomic.tombstones(spark, storeDir).isEmpty)
     assert(clusters(Dedup.entityClustersFromStore(spark, storeDir)) ==
       Set((1L, 2L, "alice"), (20L, 2L, "carol")))
   }

@@ -25,7 +25,7 @@ class ForgetSpec extends SparkSpec {
     assert(before.nonEmpty)
     // forget one member of some pair: every pair touching it must go
     val victim = before.head._1
-    Dedup.forgetInStoredIndex(spark, indexDir, Seq(victim))
+    graft.operators.Atomic.forget(spark, indexDir, Seq(victim))
     val after = probePairs()
     assert(after == before.filterNot(p => p._1 == victim || p._2 == victim))
     // compaction: physical erasure + tombstone clear, probes unchanged.
@@ -73,7 +73,7 @@ class ForgetSpec extends SparkSpec {
     // forget a returned candidate (not a query/centroid): it must drop
     // out and the freed rank refills from the remaining candidates
     val victim = before.collect { case (_, c) if c >= 16 => c }.head
-    Similarity.forgetInStoredIvf(spark, indexDir, Seq(victim))
+    graft.operators.Atomic.forget(spark, indexDir, Seq(victim))
     val after = topk()
     assert(!after.exists(_._2 == victim))
     assert(after.map(_._1) == before.map(_._1), "every query still answers")
@@ -104,7 +104,7 @@ class ForgetSpec extends SparkSpec {
     assert(before == want, "stored-codes probe must replay the in-process path")
     // tombstone one hit: probes blind immediately, survivors re-rank
     val victim = before.filter(_._2 >= 10).head._2
-    Similarity.forgetInStoredCodes(spark, indexDir, Seq(victim))
+    graft.operators.Atomic.forget(spark, indexDir, Seq(victim))
     val after = topk()
     assert(!after.exists(_._2 == victim))
     assert(after.map(_._1) == before.map(_._1), "every query still answers")

@@ -8,6 +8,17 @@ import graft.operators.Graph
   * mass accounting and a brute-force triangle recount. */
 class GraphSpec extends SparkSpec {
 
+  test("co-purchase edges are canonical and distinct: pa < pb, one row per pair") {
+    // trussPeel's founding triangle census and its per-round live
+    // filter join on the edge key — a reversed or repeated edge would
+    // inflate support
+    val edges = Graph.coPurchaseEdges(spark, sf)
+      .select("pa", "pb").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(edges.nonEmpty)
+    assert(edges.forall { case (a, b) => a < b })
+    assert(edges.distinct.length == edges.length)
+  }
+
   test("pagerank: every node scored, mass conserved up to integer truncation, floor = teleport") {
     val all = Graph.pageRank(spark, sf, k = Int.MaxValue).collect()
     val edges = Graph.coPurchaseEdges(spark, sf)

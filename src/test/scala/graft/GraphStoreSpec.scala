@@ -118,7 +118,7 @@ class GraphStoreSpec extends SparkSpec {
     Graph.appendToGraphStore(li.limit(0), storeDir) // no-op append is legal
     val before = edgeMap(Graph.storedEdges(spark, storeDir))
     val victim = before.keySet.head._1
-    Graph.forgetInGraphStore(spark, storeDir, Seq(victim))
+    Atomic.forget(spark, storeDir, Seq(victim))
     val after = edgeMap(Graph.storedEdges(spark, storeDir))
     assert(after == before.filterNot { case ((a, b), _) => a == victim || b == victim })
     Graph.compactGraphStore(spark, storeDir)
@@ -177,7 +177,7 @@ class GraphStoreSpec extends SparkSpec {
     assert(modWindow == modLocal)
     // a forgotten part is blind in every window — RTBF has no as-of
     val victim = edgeMap(Graph.pairDeltas(early)).keySet.head._1
-    Graph.forgetInGraphStore(spark, storeDir, Seq(victim))
+    Atomic.forget(spark, storeDir, Seq(victim))
     val blinded = edgeMap(Graph.storedEdgesWhere(spark, storeDir,
       col("ingest_batch") === earlyKey.get))
     assert(blinded.keySet.forall { case (a, b) =>

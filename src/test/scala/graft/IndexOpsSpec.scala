@@ -22,7 +22,7 @@ class IndexOpsSpec extends SparkSpec {
     Similarity.appendToCodeIndex(emb.filter(col("vec_id") % 2 =!= 0), codes)
     Sketches.foundSketchStore(docs.join(
       Tables(spark, sf, "documents").select("doc_id", "source"), "doc_id"), sketch)
-    Similarity.forgetInStoredCodes(spark, codes, Seq(7L))
+    graft.operators.Atomic.forget(spark, codes, Seq(7L))
 
     def rep(): Map[(String, String), (Long, Long, Long)] =
       IndexOps.report(spark,

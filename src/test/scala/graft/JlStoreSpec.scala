@@ -72,7 +72,7 @@ class JlStoreSpec extends SparkSpec {
     // forget a returned candidate: every row naming it must go, and
     // lower-ranked survivors take its place (ranks stay dense 1..k)
     val victim = before.head._2
-    Similarity.forgetInJlIndex(spark, indexDir, Seq(victim))
+    graft.operators.Atomic.forget(spark, indexDir, Seq(victim))
     val after = rows(Similarity.jlIvfAgainstStoredIndex(spark, indexDir,
       queries, emb))
     assert(!after.exists(_._2 == victim))
@@ -83,29 +83,10 @@ class JlStoreSpec extends SparkSpec {
       .parquet(graft.operators.Atomic.resolve(spark, indexDir, "jlproj"))
       .select("vec_id").collect().map(_.getLong(0)).contains(victim),
       "victim still on disk in jlproj")
-    assert(graft.operators.Forgotten.read(spark, indexDir).isEmpty)
+    assert(graft.operators.Atomic.tombstones(spark, indexDir).isEmpty)
     val compacted = rows(Similarity.jlIvfAgainstStoredIndex(spark, indexDir,
       queries, emb))
     assert(compacted == after)
     graft.operators.PlanCache.release()
-  }
-
-  test("batch append/compact fail fast on a stream-owned jlproj") {
-    val indexDir = Files.createTempDirectory("graft_jl_owned").toString
-    val emb = Tables(spark, sf, "embeddings")
-    Similarity.foundJlCodebook(emb, indexDir)
-    // simulate JlStream ownership: the file sink's commit log marks
-    // the directory — batch mutation would write rows the log never
-    // lists (append) or publish a version without the log (compact)
-    Files.createDirectories(java.nio.file.Paths
-      .get(indexDir, "jlproj", "_spark_metadata"))
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.appendToJlIndex(emb.limit(4), indexDir)
-    }
-    assert(e1.getMessage.contains("all-batch or all-stream"))
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.compactJlIndex(spark, indexDir)
-    }
-    assert(e2.getMessage.contains("all-batch or all-stream"))
   }
 }
