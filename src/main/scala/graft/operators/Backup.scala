@@ -196,7 +196,7 @@ object Backup {
   def readSql(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.Row
-    val rows = spark.read.textFile(path).flatMap { line =>
+    spark.read.textFile(path).flatMap { line =>
       parseInsertTuples(line).map { tuple =>
         require(tuple.length == schema.fields.length,
           s"tuple arity ${tuple.length} != schema arity ${schema.fields.length}")
@@ -205,7 +205,6 @@ object Backup {
         })
       }
     }(org.apache.spark.sql.Encoders.row(schema))
-    spark.createDataFrame(rows.rdd, schema)
   }
 
   /** Decode one [[writeSql]] literal back to the JVM-external value for

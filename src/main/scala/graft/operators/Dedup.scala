@@ -689,11 +689,7 @@ object Dedup {
     * never rows; iteration count is bounded by the LOG of the component
     * diameter (each round also folds in the pointer-jumped label
     * label(label(x)) — path halving) and hard-capped by `maxIters`.
-    * Each generation is lineage-truncated via a lazy localCheckpoint so
-    * iteration i+1 reads the previous generation's materialized blocks
-    * through a constant-size plan — without truncation the
-    * self-referencing plan grows 3^rounds and driver-side analysis
-    * dominates the runtime (the round-14 failure mode).
+    * Generations are cut and released by [[Iterate.fixpoint]].
     *
     * Input columns: `doc_a`, `doc_b`. Output: (`doc_id`, `cluster_id`).
     *
@@ -723,103 +719,61 @@ object Dedup {
       .select(col("e.a").as("a"), col("e.b").as("b"))
     val edges = PlanCache.tracked(
       if (prePartitionEdges) both.repartition(col("b")) else both)
-    // Every generation is lineage-TRUNCATED (lazy localCheckpoint, so
-    // nothing materializes before the convergence probe runs anyway).
-    // A self-referencing loop like this one references the previous
-    // generation's plan 3× per round (own label ∪ neighbor labels ∪
-    // pointer jump), so without truncation the ANALYZED logical plan
-    // grows 3^rounds — analysis, canonicalization, and cache lookup all
-    // walk that tree, which turned the round-14 q281 closure into
-    // seconds of pure driver planning per round (its committed plan
-    // dump was 235 K lines) and OOM'd the driver once the jump term
-    // landed. Truncation makes every round's plan constant-size. The
-    // trade (checkpoint blocks are the only copy — a lost executor
-    // fails the job instead of recomputing) is the standard iterative-
-    // graph posture: recompute-from-lineage of an exponentially deep
-    // label chain was never a real recovery story, and the blocks are
-    // disk-backed node-sized rows.
-    var labels = edges.groupBy(col("a")).agg(min(col("b")).as("mn"))
+    val init = edges.groupBy(col("a")).agg(min(col("b")).as("mn"))
       .select(col("a").as("doc_id"), least(col("a"), col("mn")).as("cluster_id"))
-      .localCheckpoint(false)
     // labels only ever DECREASE, so the label sum strictly decreases
     // until the fixpoint: an iteration whose sum equals the previous
     // generation's IS convergence (decimal(38,0) — a Long sum could
     // overflow on 64-bit ids at scale). A null sum with rows present
     // means the DECIMAL overflowed (non-ANSI sum returns null): that
     // must not read as "converged" — it would return non-fixpoint labels
-    def probe(df: DataFrame): java.math.BigDecimal = {
+    def probe(df: DataFrame): Option[BigDecimal] = {
       val r = df.agg(sum(col("cluster_id").cast("decimal(38,0)")), count(lit(1))).first()
       if (r.isNullAt(0) && r.getLong(1) > 0)
         throw new IllegalStateException(
           "connectedComponents: label-sum overflow in the convergence probe")
-      r.getDecimal(0)
+      Option(r.getDecimal(0)).map(BigDecimal(_))
     }
-    {
-      // baseline from the initial labels (this also materializes the
-      // first checkpoint), so an already-converged graph is detected on
-      // its FIRST iteration rather than needing two probes to see a repeat
-      var prevSum = probe(labels)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIters) {
-        // next(x) = min(label(x), min over neighbors b of label(b),
-        // label(label(x))) in TWO joins + ONE aggregate: union the
-        // node's own label and the POINTER-JUMPED label under the
-        // neighbor labels and take the group min. The jump term is the
-        // classic path-halving shortcut — label(x) names a same-component
-        // node whose own label is already ≤ it, so following one hop of
-        // the label chain per round makes the propagation radius grow
-        // multiplicatively instead of one hop per round: a diameter-D
-        // chain converges in O(log D) rounds instead of D (round 15,
-        // guide §1.2 "the distributed algorithm" — fewer passes). Each
-        // candidate label is always the id of a same-component node, so
-        // the fixpoint is unchanged: labels decrease monotonically to
-        // the component min, and the label-sum convergence probe is
-        // untouched. The jump join reads the PREVIOUS generation's
-        // cached labels (no extra persist, no recompute).
-        // No join-strategy hint on either join: dedup/ER closures run
-        // over anything from a 3-edge quotient graph (q314's merge step)
-        // to a corpus-sized pair graph, and a forced SHUFFLE_HASH costs
-        // a tiny closure two exchanges a broadcast avoids (measured
-        // q314 4.3 s → 6.6 s). The planner broadcasts while the label
-        // frame is provably small; past the broadcast threshold the
-        // b-partitioned cached edge list sits shuffle-free under the
-        // planner's shuffled join (the shipped session keeps Spark's
-        // default preferSortMergeJoin=true — per-join hints only where
-        // the build side provably never broadcasts).
-        val nbr = edges
-          .join(labels.select(col("doc_id").as("b"), col("cluster_id").as("lbl")), "b")
-          .select(col("a").as("doc_id"), col("lbl"))
-        val jump = labels.select(col("doc_id"), col("cluster_id").as("j"))
-          .join(labels.select(col("doc_id").as("j"), col("cluster_id").as("lbl")),
-            Seq("j"))
-          .select(col("doc_id"), col("lbl"))
-        val next = labels.select(col("doc_id"), col("cluster_id").as("lbl"))
-          .union(nbr)
-          .union(jump)
-          .groupBy("doc_id").agg(min(col("lbl")).as("cluster_id"))
-          .localCheckpoint(false)
-        val s = probe(next)
-        converged = (s == null && prevSum == null) ||
-          (s != null && prevSum != null && s.compareTo(prevSum) == 0)
-        prevSum = s
-        // superseded generations are checkpointed RDD blocks, not
-        // CacheManager entries: the context cleaner reclaims them as
-        // soon as the loop's reference drops (node-sized, disk-backed
-        // in the meantime)
-        labels = next
-        i += 1
-      }
-      // a silent non-converged return would break the contract
-      // downstream dedup relies on (cluster_id = component min ⇒ exactly
-      // one canonical member): a chain longer than maxIters must surface
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations — " +
-          "a component's diameter exceeds the cap; raise maxIters")
-      // already materialized by the final probe, plan already a leaf —
-      // no extra PlanCache persist layer needed on top of the
-      // checkpoint blocks
-      labels
+    // the baseline probe on the initial labels detects an
+    // already-converged graph on its FIRST iteration; a chain longer
+    // than maxIters surfaces instead of returning non-fixpoint labels
+    // (cluster_id = component min ⇒ exactly one canonical member)
+    Iterate.fixpoint(init, maxIters)(probe) { labels =>
+      // next(x) = min(label(x), min over neighbors b of label(b),
+      // label(label(x))) in TWO joins + ONE aggregate: union the
+      // node's own label and the POINTER-JUMPED label under the
+      // neighbor labels and take the group min. The jump term is the
+      // classic path-halving shortcut — label(x) names a same-component
+      // node whose own label is already ≤ it, so following one hop of
+      // the label chain per round makes the propagation radius grow
+      // multiplicatively instead of one hop per round: a diameter-D
+      // chain converges in O(log D) rounds instead of D. Each
+      // candidate label is always the id of a same-component node, so
+      // the fixpoint is unchanged: labels decrease monotonically to
+      // the component min, and the label-sum convergence probe is
+      // untouched. The jump join reads the PREVIOUS generation's
+      // cached labels (no extra persist, no recompute).
+      // No join-strategy hint on either join: dedup/ER closures run
+      // over anything from a 3-edge quotient graph (q314's merge step)
+      // to a corpus-sized pair graph, and a forced SHUFFLE_HASH costs
+      // a tiny closure two exchanges a broadcast avoids (measured
+      // q314 4.3 s → 6.6 s). The planner broadcasts while the label
+      // frame is provably small; past the broadcast threshold the
+      // b-partitioned cached edge list sits shuffle-free under the
+      // planner's shuffled join (the shipped session keeps Spark's
+      // default preferSortMergeJoin=true — per-join hints only where
+      // the build side provably never broadcasts).
+      val nbr = edges
+        .join(labels.select(col("doc_id").as("b"), col("cluster_id").as("lbl")), "b")
+        .select(col("a").as("doc_id"), col("lbl"))
+      val jump = labels.select(col("doc_id"), col("cluster_id").as("j"))
+        .join(labels.select(col("doc_id").as("j"), col("cluster_id").as("lbl")),
+          Seq("j"))
+        .select(col("doc_id"), col("lbl"))
+      labels.select(col("doc_id"), col("cluster_id").as("lbl"))
+        .union(nbr)
+        .union(jump)
+        .groupBy("doc_id").agg(min(col("lbl")).as("cluster_id"))
     }
   }
 

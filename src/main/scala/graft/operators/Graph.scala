@@ -55,6 +55,28 @@ object Graph {
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("w"))
   }
 
+  /** Both orientations of an undirected (pa, pb, …) edge list as
+    * directed (src, dst, `cols`…) rows. */
+  private def directed(und: DataFrame, cols: Column*): DataFrame =
+    und.select(col("pa").as("src") +: col("pb").as("dst") +: cols: _*)
+      .union(und.select(col("pb").as("src") +: col("pa").as("dst") +: cols: _*))
+
+  /** The `n` smallest source keys of a directed edge list — the
+    * deterministic, SF-stable seed set (an `n`-bounded driver fold). */
+  private def smallestSeeds(edges: DataFrame, n: Int): Seq[Long] =
+    edges.select(col("src")).distinct()
+      .orderBy(col("src").asc).limit(n)
+      .collect().map(_.getLong(0)).toSeq
+
+  /** `n` sources of a directed edge list in `salt`-ed md5 order, as
+    * `sample` — a deterministic source sample the oracle replays (an
+    * md5 ORDER BY + LIMIT: TakeOrdered, no global sort). */
+  private def md5Samples(edges: DataFrame, salt: String, n: Int): DataFrame =
+    edges.select(col("src")).distinct()
+      .orderBy(md5(concat(lit(salt), col("src").cast("string"))).asc)
+      .limit(n)
+      .select(col("src").as("sample"))
+
   /** Rank scale: picoshares (1e-12 of total mass) — coarser grids lose
     * too much mass to the per-edge integer division at five rounds. */
   private[graft] val PrScale = 1000000000000L
@@ -96,8 +118,7 @@ object Graph {
     // its HashPartitioning(src), so each of the five iteration joins
     // shuffles only the node-sized rank frame, never the edge list
     // (the window reuses the same partitioning: one shuffle total)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val edges = PlanCache.tracked(sym.repartition(col("src"))
       .withColumn("outw", sum(col("w")).over(Window.partitionBy(col("src")))))
     val nNodes = edges.select(col("src")).distinct().count()
@@ -150,13 +171,10 @@ object Graph {
       nSeeds: Int = 3, iters: Int = 5, k: Int = 25): DataFrame = {
     import spark.implicits._
     val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val edges = PlanCache.tracked(sym.repartition(col("src"))
       .withColumn("outw", sum(col("w")).over(Window.partitionBy(col("src")))))
-    val seeds: Seq[Long] = edges.select(col("src")).distinct()
-      .orderBy(col("src").asc).limit(nSeeds)
-      .collect().map(_.getLong(0)).toSeq
+    val seeds = smallestSeeds(edges, nSeeds)
     val base = PrScale / seeds.size
     val teleport = 15L * base / 100L
     val seedRows = seeds.toDF("part").withColumn("r", lit(base))
@@ -209,8 +227,7 @@ object Graph {
     * node labeled. Shared by [[labelPropagation]]'s size table and
     * [[communityModularity]]'s quality readout. */
   private[graft] def lpaLabels(und: DataFrame, iters: Int): DataFrame = {
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val edges = PlanCache.tracked(sym.repartition(col("src")))
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
@@ -265,8 +282,7 @@ object Graph {
       iters: Int, k: Int): DataFrame = {
     val und = PlanCache.tracked(undIn)
     val labels = PlanCache.tracked(lpaLabels(und, iters))
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val m2 = sym.agg(sum(col("w")).as("m2")) // 2m: each edge, both ways
     val tot = sym.groupBy(col("src").as("node")).agg(sum(col("w")).as("wdeg"))
       .join(labels, Seq("node"))
@@ -438,8 +454,7 @@ object Graph {
     val und = PlanCache.tracked(
       pairDeltas(Tables(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))))
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
+    val sym = directed(und)
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
     sym
@@ -661,8 +676,7 @@ object Graph {
   private def halfGauges(und0: DataFrame, iters: Int): HalfGauges = {
     val und = PlanCache.tracked(und0)
     val labels = PlanCache.tracked(lpaLabels(und, iters))
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val tot = sym.groupBy(col("src").as("node")).agg(sum(col("w")).as("wdeg"))
       .join(labels, Seq("node"))
       .groupBy(col("lbl")).agg(sum(col("wdeg")).as("tot_w"))
@@ -823,58 +837,53 @@ object Graph {
     * (round 15, guide §2.4 — remove recomputation across rounds).
     * Support is the 3-row explode + edge-keyed count as before; the
     * peel is an equi-join on the edge key. Every frame is edge- or
-    * triangle-bounded. */
+    * triangle-bounded. Each peeled edge set is a generation of
+    * [[Iterate.rounds]]. */
   def trussPeel(spark: SparkSession, dir: String, k: Int = 4,
       rounds: Int = 2): DataFrame = {
     require(k >= 3,
       s"trussPeel implements k >= 3 semantics (a 2-truss keeps every " +
         s"edge; the inner join on support drops triangle-free edges, " +
         s"which is only correct for k >= 3) — got $k")
-    var edges = PlanCache.tracked(
+    val edges0 = PlanCache.tracked(
       coPurchaseEdges(spark, dir).select(col("pa"), col("pb")))
-    val deg0 = edges.select(col("pa").as("node"))
-      .union(edges.select(col("pb").as("node")))
+    val deg0 = edges0.select(col("pa").as("node"))
+      .union(edges0.select(col("pb").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // the founding census, one row per triangle with its three
     // canonical (min, max) edges — cached once, filtered every round
-    val tri0 = PlanCache.tracked(triangleRows(edges, deg0)
+    val tri0 = PlanCache.tracked(triangleRows(edges0, deg0)
       .select(
         least(col("a"), col("b")).as("e1a"), greatest(col("a"), col("b")).as("e1b"),
         least(col("a"), col("c")).as("e2a"), greatest(col("a"), col("c")).as("e2b"),
         least(col("b"), col("c")).as("e3a"), greatest(col("b"), col("c")).as("e3b")))
-    val out = (0 to rounds).map { r =>
-      if (r > 0) {
-        // round 1 censuses the founding set (no filter); later rounds
-        // keep the founding triangles whose three edges all survive
-        val live = if (r == 1) tri0 else tri0
-          .join(edges.select(col("pa").as("e1a"), col("pb").as("e1b")), Seq("e1a", "e1b"))
-          .join(edges.select(col("pa").as("e2a"), col("pb").as("e2b")), Seq("e2a", "e2b"))
-          .join(edges.select(col("pa").as("e3a"), col("pb").as("e3b")), Seq("e3a", "e3b"))
-        val support = live
-          .select(explode(array(
-            struct(col("e1a").as("pa"), col("e1b").as("pb")),
-            struct(col("e2a").as("pa"), col("e2b").as("pb")),
-            struct(col("e3a").as("pa"), col("e3b").as("pb")))).as("e"))
-          .groupBy(col("e.pa").as("pa"), col("e.pb").as("pb"))
-          .agg(count(lit(1)).as("support"))
-        // an edge in no triangle has no support row: the inner join
-        // drops it, which IS the k ≥ 3 peel semantics.
-        // Lineage-truncated per round (lazy localCheckpoint): round r's
-        // peel references round r−1's edges four times (three live-
-        // triangle joins + the peel join), so an untruncated plan grows
-        // 4^rounds copies of the whole co-purchase pipeline and driver
-        // analysis swamps execution — the same pathology the CC loop hit
-        edges = edges.join(support, Seq("pa", "pb"))
-          .filter(col("support") >= k - 2)
-          .select(col("pa"), col("pb"))
-          .localCheckpoint(false)
-      }
+    val gens = edges0 +: Iterate.rounds(edges0, rounds) { edges =>
+      // the founding set censuses every founding triangle (no filter);
+      // later rounds keep the founding triangles whose three edges all
+      // survive
+      val live = if (edges eq edges0) tri0 else tri0
+        .join(edges.select(col("pa").as("e1a"), col("pb").as("e1b")), Seq("e1a", "e1b"))
+        .join(edges.select(col("pa").as("e2a"), col("pb").as("e2b")), Seq("e2a", "e2b"))
+        .join(edges.select(col("pa").as("e3a"), col("pb").as("e3b")), Seq("e3a", "e3b"))
+      val support = live
+        .select(explode(array(
+          struct(col("e1a").as("pa"), col("e1b").as("pb")),
+          struct(col("e2a").as("pa"), col("e2b").as("pb")),
+          struct(col("e3a").as("pa"), col("e3b").as("pb")))).as("e"))
+        .groupBy(col("e.pa").as("pa"), col("e.pb").as("pb"))
+        .agg(count(lit(1)).as("support"))
+      // an edge in no triangle has no support row: the inner join
+      // drops it, which IS the k ≥ 3 peel semantics
+      edges.join(support, Seq("pa", "pb"))
+        .filter(col("support") >= k - 2)
+        .select(col("pa"), col("pb"))
+    }
+    gens.zipWithIndex.map { case (edges, r) =>
       edges.select(explode(array(col("pa"), col("pb"))).as("node"))
         .agg(expr("count(1) div 2").as("n_edges"),
           count_distinct(col("node")).as("n_nodes"))
         .select(lit(r.toLong).as("round"), col("n_edges"), col("n_nodes"))
-    }
-    out.reduce(_ union _)
+    }.reduce(_ union _)
   }
 
   /** GRAPH DATASHEET — the one-row structural summary read before
@@ -980,8 +989,7 @@ object Graph {
     // window into the bounded-heap TopKPerGroup operator instead of a
     // full per-seed sort a hub part would pay at catalog scale
     // (PlanSpec pins the fusion)
-    val ranked = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val ranked = directed(und, col("w"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
       .filter(col("rnk") <= lit(ks.max))
@@ -1021,8 +1029,7 @@ object Graph {
   def recCoverageEval(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
     val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val ranked = PlanCache.tracked(sym
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
@@ -1072,8 +1079,7 @@ object Graph {
   def recExposureGini(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
     val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val exposures = sym
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
@@ -1110,8 +1116,7 @@ object Graph {
   def intraListSimilarity(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
     val und = PlanCache.tracked(coPurchaseEdges(spark, dir))
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+    val sym = directed(und, col("w"))
     val topk = PlanCache.tracked(sym
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
@@ -1185,10 +1190,7 @@ object Graph {
       concat_ws("-", lit("linkpred"), col("pa"), col("pb"))), lit(10L)))
     val train = tagged.filter(col("h") < 8).select("pa", "pb", "w")
     val test = tagged.filter(col("h") >= 8).select("pa", "pb")
-    val trainSym = PlanCache.tracked(
-      train.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-        .union(train.select(col("pb").as("src"), col("pa").as("dst"),
-          col("w"))))
+    val trainSym = PlanCache.tracked(directed(train, col("w")))
     // full train degree — each undirected pair appears once per
     // orientation, so count(*) per src IS the distinct-neighbor degree
     val deg = trainSym.groupBy(col("src").as("node"))
@@ -1357,37 +1359,42 @@ object Graph {
     * absent (the fixed-round snapshot is the deterministic contract —
     * both engines walk the same rounds).
     *
-    * Scale: the PPR data movement minus the damping arithmetic — per
-    * round the FRONTIER (new nodes only, not the cumulative set)
-    * joins the pre-partitioned edge list shuffle_hash, and the
-    * anti-join that strips already-seen nodes runs against the
-    * node-bounded distance frame; every frame in flight is node-sized
-    * or smaller, and early rounds ship only the seeds' neighborhoods
-    * (the frontier sparsity BFS is loved for). */
+    * Scale: the PPR data movement minus the damping arithmetic — the
+    * [[bfsLevels]] walk, whose early rounds ship only the seeds'
+    * neighborhoods (the frontier sparsity BFS is loved for). */
   def seedDistances(spark: SparkSession, dir: String, nSeeds: Int = 3,
       maxHops: Int = 4): DataFrame = {
     import spark.implicits._
-    val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
-    val edges = PlanCache.tracked(sym.repartition(col("src")))
-    val seeds: Seq[Long] = edges.select(col("src")).distinct()
-      .orderBy(col("src").asc).limit(nSeeds)
-      .collect().map(_.getLong(0)).toSeq // nSeeds-bounded driver fold
-    var dist = PlanCache.tracked(
-      seeds.toDF("part").withColumn("hops", lit(0L)))
-    var frontier = dist.select(col("part"))
-    for (k <- 1 to maxHops) {
+    val edges = PlanCache.tracked(directed(coPurchaseEdges(spark, dir))
+      .repartition(col("src")))
+    // one constant sample: the seed set is walked as a single source
+    val seeds = smallestSeeds(edges, nSeeds).toDF("node")
+      .select(lit(0L).as("sample"), col("node"))
+    bfsLevels(edges, seeds, maxHops).select(col("node").as("part"), col("hops"))
+  }
+
+  /** Breadth-first levels over a src-partitioned directed edge list
+    * from `sources` (`sample`, `node`): (`sample`, `node`, `hops`) for
+    * every node within `maxHops` of its sample, `hops` the first-reach
+    * distance. Per hop only the FRONTIER (new nodes, not the cumulative
+    * set) joins the edge list shuffle_hash, and the anti-join that
+    * strips already-reached nodes runs against the node-bounded reached
+    * frame: every frame in flight is node-sized or smaller. */
+  private def bfsLevels(edges: DataFrame, sources: DataFrame,
+      maxHops: Int): DataFrame = {
+    var reached = PlanCache.tracked(sources.withColumn("hops", lit(0L)))
+    var frontier = sources
+    for (h <- 1 to maxHops) {
       val next = PlanCache.tracked(
         frontier.hint("shuffle_hash").join(edges,
-            frontier("part") === edges("src"))
-          .select(col("dst").as("part")).distinct()
-          .join(dist, Seq("part"), "left_anti")
-          .withColumn("hops", lit(k.toLong)))
-      dist = PlanCache.tracked(dist.union(next))
-      frontier = next.select(col("part"))
+            frontier("node") === edges("src"))
+          .select(col("sample"), col("dst").as("node")).distinct()
+          .join(reached, Seq("sample", "node"), "left_anti")
+          .withColumn("hops", lit(h.toLong)))
+      reached = PlanCache.tracked(reached.union(next))
+      frontier = next.select(col("sample"), col("node"))
     }
-    dist
+    reached
   }
 
   /** WEIGHTED SEED DISTANCE (min-plus relaxation, the Bellman–Ford
@@ -1412,12 +1419,8 @@ object Graph {
     val und = coPurchaseEdges(spark, dir)
     val cost = expr("CAST(1000000000000 AS BIGINT) div w")
     val edges = PlanCache.tracked(
-      und.select(col("pa").as("src"), col("pb").as("dst"), cost.as("cost"))
-        .union(und.select(col("pb").as("src"), col("pa").as("dst"), cost.as("cost")))
-        .repartition(col("src")))
-    val seeds: Seq[Long] = edges.select(col("src")).distinct()
-      .orderBy(col("src").asc).limit(nSeeds)
-      .collect().map(_.getLong(0)).toSeq // nSeeds-bounded driver fold
+      directed(und, cost.as("cost")).repartition(col("src")))
+    val seeds = smallestSeeds(edges, nSeeds)
     var dist = PlanCache.tracked(
       seeds.toDF("part").withColumn("dist_cost", lit(0L)))
     for (_ <- 1 to rounds) {
@@ -1448,42 +1451,30 @@ object Graph {
     * two semi-joins back onto it — edge-bounded data movement,
     * node-sized survivor frames; the census rows fold from ONE
     * union-aggregate per round (no 1-row cross joins — the
-    * no-cartesian plan rule holds engine-wide).
-    *
-    * Round boundary: each peeled edge list crosses an RDD boundary
-    * (`createDataFrame(df.rdd, schema)`). Unlike every other iterative
-    * operator here (whose rounds reference the iterated frame ONCE, so
-    * plans grow linearly), the peel references it from the degree
-    * aggregate AND both semi-joins — the Catalyst tree would compound
-    * ~5× per round and round 5's plan explodes (measured: analysis
-    * succeeds but the executor's plan-string rendering alone OOMs).
-    * The RDD boundary resets the plan to a leaf per round while RDD
-    * lineage — and with it fault-tolerant recompute and cache
-    * evictability — stays intact, which is exactly the scale
-    * objection [[PlanCache]] documents against `localCheckpoint`. The
-    * price is one row ser/deser boundary per round on the
-    * already-peeled (shrinking) edge list. */
+    * no-cartesian plan rule holds engine-wide). Each peeled edge list
+    * is a generation of [[Iterate.rounds]]. */
   def kCorePeel(spark: SparkSession, dir: String, k: Int = 100,
       rounds: Int = 5): DataFrame = {
-    var edges = PlanCache.tracked(
-      coPurchaseEdges(spark, dir).select(col("pa"), col("pb")))
-    val censusRows = (1 to rounds).map { r =>
+    // each round's survivors, kept for its census row
+    val survivors = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val gens = Iterate.rounds(PlanCache.tracked(
+        coPurchaseEdges(spark, dir).select(col("pa"), col("pb"))), rounds) { edges =>
       val deg = edges.select(explode(array(col("pa"), col("pb"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val surv = PlanCache.tracked(
         deg.filter(col("deg") >= k).select(col("node")))
-      val peeled = edges
+      survivors += surv
+      edges
         .join(surv.withColumnRenamed("node", "pa"), Seq("pa"), "left_semi")
         .join(surv.withColumnRenamed("node", "pb"), Seq("pb"), "left_semi")
-      edges = PlanCache.tracked(
-        spark.createDataFrame(peeled.rdd, peeled.schema))
+    }
+    survivors.zip(gens).zipWithIndex.map { case ((surv, edges), i) =>
       // nodes and edges counted in ONE aggregate over a tagged union
       surv.select(lit(1L).as("t")).union(edges.select(lit(0L).as("t")))
         .agg(coalesce(sum(col("t")), lit(0L)).as("n_nodes"),
           coalesce(sum(lit(1L) - col("t")), lit(0L)).as("n_edges"))
-        .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
-    }
-    censusRows.reduce(_ union _)
+        .select(lit(i + 1L).as("round"), col("n_nodes"), col("n_edges"))
+    }.reduce(_ union _)
   }
 
   /** RANDOM-WALK POSITIVE-PAIR GENERATION (the node2vec/DeepWalk
@@ -1508,8 +1499,7 @@ object Graph {
   def randomWalkPairs(spark: SparkSession, dir: String,
       walkLen: Int = 4): DataFrame = {
     val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
+    val sym = directed(und)
     // neighbor rank + degree share one window partitioning: one
     // exchange builds the whole index
     val bysrc = Window.partitionBy(col("src"))
@@ -1581,19 +1571,6 @@ object Graph {
         col("pmi_rate_u"), col("rnk").cast("long").as("rnk"))
   }
 
-  /** SAMPLED-SOURCE NEIGHBORHOOD FUNCTION (exact twin of
-    * [[neighborhoodSketch]]): for `nSamples` md5-chosen parts, the
-    * exact ball size |B(v, h)| at each hop h ≤ `maxHops` — the
-    * distance-distribution probe behind "what's the effective
-    * diameter of the co-purchase graph", answered the way ANF-style
-    * estimators validate themselves: exact BFS from a deterministic
-    * source sample. Sampling sources (not sketching all nodes) keeps
-    * the answer exact; the sketch twin covers every node at once.
-    *
-    * Scale: per hop the cumulative reached frame is ≤ samples·nodes
-    * rows and the frontier join ships only the NEW nodes' adjacency
-    * (the q248 BFS shape, one extra sample column); the source pick
-    * is an md5 ORDER BY + LIMIT (TakeOrdered, no global sort). */
   /** SAMPLED-SOURCE BETWEENNESS (Brandes, hop-bounded) — WHICH nodes
     * do shortest paths route THROUGH: the brokerage question none of
     * the existing centralities answer (PageRank rewards being linked,
@@ -1622,14 +1599,9 @@ object Graph {
     * through the same edge partitioning. Nothing node² anywhere. */
   def sampledBetweenness(spark: SparkSession, dir: String,
       nSamples: Int = 8, maxHops: Int = 3, k: Int = 25): DataFrame = {
-    val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
-    val edges = PlanCache.tracked(sym.repartition(col("src")))
-    val samples = edges.select(col("src")).distinct()
-      .orderBy(md5(concat(lit("btw-"), col("src").cast("string"))).asc)
-      .limit(nSamples)
-      .select(col("src").as("sample"))
+    val edges = PlanCache.tracked(directed(coPurchaseEdges(spark, dir))
+      .repartition(col("src")))
+    val samples = md5Samples(edges, "btw-", nSamples)
     var reached = PlanCache.tracked(
       samples.select(col("sample"), col("sample").as("node")))
     var frontier = PlanCache.tracked(
@@ -1820,30 +1792,7 @@ object Graph {
     * one node-sized aggregate and a TopKPerGroup-shaped rank. */
   def sampledHarmonic(spark: SparkSession, dir: String,
       nSamples: Int = 8, maxHops: Int = 3, k: Int = 25): DataFrame = {
-    val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
-    val edges = PlanCache.tracked(sym.repartition(col("src")))
-    val samples = PlanCache.tracked(
-      edges.select(col("src")).distinct()
-        .orderBy(md5(concat(lit("anf-"), col("src").cast("string"))).asc)
-        .limit(nSamples)
-        .select(col("src").as("sample")))
-    var reached = PlanCache.tracked(
-      samples.select(col("sample"), col("sample").as("node"))
-        .withColumn("hops", lit(0L)))
-    var frontier = reached.select(col("sample"), col("node"))
-    for (h <- 1 to maxHops) {
-      val next = PlanCache.tracked(
-        frontier.hint("shuffle_hash").join(edges,
-            frontier("node") === edges("src"))
-          .select(col("sample"), col("dst").as("node")).distinct()
-          .join(reached, Seq("sample", "node"), "left_anti")
-          .withColumn("hops", lit(h.toLong)))
-      reached = PlanCache.tracked(reached.union(next))
-      frontier = next.select(col("sample"), col("node"))
-    }
-    reached.filter(col("hops") > 0)
+    bfsFromSamples(spark, dir, nSamples, maxHops).filter(col("hops") > 0)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_sources"),
         sum(expr("1000000 div hops")).as("h_micro"))
@@ -1855,34 +1804,37 @@ object Graph {
       .select(col("rank"), col("part"), col("n_sources"), col("h_micro"))
   }
 
+  /** SAMPLED-SOURCE NEIGHBORHOOD FUNCTION (exact twin of
+    * [[neighborhoodSketch]]): for `nSamples` md5-chosen parts, the
+    * exact ball size |B(v, h)| at each hop h ≤ `maxHops` — the
+    * distance-distribution probe behind "what's the effective
+    * diameter of the co-purchase graph", answered the way ANF-style
+    * estimators validate themselves: exact BFS from a deterministic
+    * source sample. Sampling sources (not sketching all nodes) keeps
+    * the answer exact; the sketch twin covers every node at once.
+    *
+    * Scale: the [[bfsLevels]] walk — the cumulative reached frame is
+    * ≤ samples·nodes rows — read once, each row counted in the balls
+    * of every radius from its hop to `maxHops`. */
   def sampledNeighborhood(spark: SparkSession, dir: String,
       nSamples: Int = 8, maxHops: Int = 3): DataFrame = {
-    val und = coPurchaseEdges(spark, dir)
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
-    val edges = PlanCache.tracked(sym.repartition(col("src")))
-    val samples = PlanCache.tracked(
-      edges.select(col("src")).distinct()
-        .orderBy(md5(concat(lit("anf-"), col("src").cast("string"))).asc)
-        .limit(nSamples)
-        .select(col("src").as("sample")))
-    var reached = PlanCache.tracked(
-      samples.select(col("sample"), col("sample").as("node")))
-    var frontier = reached
-    val rows = (1 to maxHops).map { h =>
-      val next = PlanCache.tracked(
-        frontier.hint("shuffle_hash").join(edges,
-            frontier("node") === edges("src"))
-          .select(col("sample"), col("dst").as("node")).distinct()
-          .join(reached, Seq("sample", "node"), "left_anti"))
-      reached = PlanCache.tracked(reached.union(next))
-      frontier = next
-      reached.groupBy(col("sample"))
-        .agg(count(lit(1)).as("ball_n"))
-        .select(col("sample").as("part"), lit(h.toLong).as("hops"),
-          col("ball_n"))
-    }
-    rows.reduce(_ union _)
+    // a node first reached at hop d lies in every ball of radius ≥ d
+    bfsFromSamples(spark, dir, nSamples, maxHops)
+      .select(col("sample").as("part"), explode(
+        sequence(greatest(col("hops"), lit(1L)), lit(maxHops.toLong))).as("hops"))
+      .groupBy(col("part"), col("hops")).agg(count(lit(1)).as("ball_n"))
+  }
+
+  /** [[bfsLevels]] over the co-purchase graph from the `anf-` md5
+    * source sample that [[sampledNeighborhood]] and [[sampledHarmonic]]
+    * share. */
+  private def bfsFromSamples(spark: SparkSession, dir: String,
+      nSamples: Int, maxHops: Int): DataFrame = {
+    val edges = PlanCache.tracked(directed(coPurchaseEdges(spark, dir))
+      .repartition(col("src")))
+    val samples = PlanCache.tracked(md5Samples(edges, "anf-", nSamples))
+    bfsLevels(edges, samples.select(col("sample"), col("sample").as("node")),
+      maxHops)
   }
 
   /** Register count for the neighborhood sketch: 2⁵ = 32 registers,
@@ -1966,8 +1918,7 @@ object Graph {
   private[graft] def neighborhoodSketchOnEdges(und: DataFrame,
       maxHops: Int): DataFrame = {
     val m = AnfRegisters
-    val sym = und.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(und.select(col("pb").as("src"), col("pa").as("dst")))
+    val sym = directed(und)
     val nodes = sym.select(col("src")).distinct()
     // self-loops let the round's single join carry the "keep your own
     // registers" leg, so each round references the iterated frame once

@@ -5,6 +5,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.sql.SparkSession
+
 /** Driver-side overlap of INDEPENDENT Spark actions: Spark's scheduler
   * happily runs several jobs at once inside one application — actions
   * are only sequential because driver code calls them sequentially.
@@ -21,21 +23,32 @@ import scala.concurrent.duration.Duration
   * to fill a straggler tail, not so many that concurrent jobs fight
   * for executor slots. Concurrent first-touch of a shared persisted
   * frame is safe — the block manager's per-block get-or-compute lock
-  * makes one job compute a cached block while the others wait. */
+  * makes one job compute a cached block while the others wait.
+  *
+  * The first failure wins: the call's Spark jobs (one job tag per call)
+  * are cancelled and the pool threads interrupted, so no sibling keeps
+  * running beside the failed item. */
 object Par {
   def mapOrdered[A, B](items: Seq[A], width: Int = 4)(f: A => B): Seq[B] =
     if (items.lengthCompare(2) < 0) items.map(f)
     else {
       val pool = Executors.newFixedThreadPool(math.min(width, items.size))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .map(_.sparkContext)
+      val tag = s"graft-par-${java.util.UUID.randomUUID()}"
       try {
-        val out = Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
+        val out = Await.result(Future.sequence(items.map(a => Future {
+          sc.foreach(_.addJobTag(tag))
+          f(a)
+        })), Duration.Inf)
         pool.shutdown()
         out
       } catch {
-        // the first failure wins: interrupt the siblings still running
-        // instead of leaving them to finish beside the failed one
-        case e: Throwable => pool.shutdownNow(); throw e
+        case e: Throwable =>
+          sc.foreach(_.cancelJobsWithTag(tag))
+          pool.shutdownNow()
+          throw e
       }
     }
 }

@@ -8,27 +8,25 @@ import org.apache.spark.sql.DataFrame
   * cached intermediate more than once (LSH banding + verify both scan
   * the hashed documents; the signature feeds both sides of a self-join).
   *
-  * Previous shape: persist → build → `.localCheckpoint()` → unpersist in
-  * `finally`. localCheckpoint materializes EAGERLY into unreplicated
-  * executor-local blocks: on a real cluster, losing one executor after
-  * the checkpoint fails every downstream action instead of recomputing
-  * from lineage — a scale liability — and the eager materialization runs
-  * even if the caller never executes the plan.
-  *
-  * Now the intermediate stays a plain `persist()` (lineage intact,
+  * The intermediate stays a plain `persist()` (lineage intact,
   * evictable, recomputable) registered here, and the returned plan is
   * lazy and checkpoint-free. Lifetime belongs to the CALLER: loop-style
   * jobs call [[release]] between iterations; one-shot drivers may leave
   * eviction to the LRU block manager, which can always drop these blocks
-  * safely precisely because lineage survives.
+  * safely precisely because lineage survives. Iterated generations are
+  * cut by [[Iterate]]; the ones a caller's lazy frame still reads are
+  * freed here too.
   */
 object PlanCache {
-  private val live = new ConcurrentLinkedQueue[DataFrame]
+  private val live = new ConcurrentLinkedQueue[() => Unit]
 
   /** Persist `df` and track it for a later [[release]]. */
-  def tracked(df: DataFrame): DataFrame = { val c = df.persist(); live.add(c); c }
+  def tracked(df: DataFrame): DataFrame = { val c = df.persist(); live.add(() => c.unpersist()); c }
+
+  /** Run `free` at the next [[release]]. */
+  private[operators] def onRelease(free: () => Unit): Unit = live.add(free)
 
   /** Unpersist every tracked intermediate. */
   def release(): Unit =
-    Iterator.continually(live.poll()).takeWhile(_ != null).foreach(_.unpersist())
+    Iterator.continually(live.poll()).takeWhile(_ != null).foreach(_())
 }

@@ -188,4 +188,61 @@ class GraphSpec extends SparkSpec {
       assert(rows.length <= 5)
     }
   }
+
+  /** The corpus co-purchase graph as a driver-side undirected edge set. */
+  private def corpusEdges(): Set[(Long, Long)] =
+    Graph.coPurchaseEdges(spark, sf).select("pa", "pb").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def adjacency(es: Set[(Long, Long)]): Map[Long, Set[Long]] =
+    es.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
+
+  test("k-core peel: per-round census replays a driver-side synchronous peel") {
+    val k = 70 // this fixture's degrees run 49..109: every round peels
+    val got = Graph.kCorePeel(spark, sf, k = k).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    var es = corpusEdges()
+    graft.operators.PlanCache.release()
+    val want = (1 to 5).map { r =>
+      val surv = adjacency(es).filter(_._2.size >= k).keySet
+      es = es.filter { case (a, b) => surv(a) && surv(b) }
+      (r.toLong, surv.size.toLong, es.size.toLong)
+    }
+    assert(got == want, s"got $got, want $want")
+    assert(want.map(_._3).distinct.length == 5 && want.last._3 > 0,
+      s"the fixture must peel each round and keep a core: $want")
+  }
+
+  test("truss peel: per-round census on the corpus graph replays a driver-side support recompute") {
+    val k = 40 // this fixture's edge supports run 13..58
+    val got = Graph.trussPeel(spark, sf, k = k).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    var es = corpusEdges()
+    graft.operators.PlanCache.release()
+    val want = (0 to 2).map { r =>
+      if (r > 0) {
+        val adj = adjacency(es)
+        es = es.filter { case (a, b) => (adj(a) & adj(b)).size >= k - 2 }
+      }
+      (r.toLong, es.size.toLong, es.toSeq.flatMap(e => Seq(e._1, e._2)).distinct.size.toLong)
+    }
+    assert(got == want, s"got $got, want $want")
+    assert(want.map(_._2).distinct.length == 3, s"the fixture must peel each round: $want")
+  }
+
+  test("seed distances: replay a driver-side BFS from the three smallest parts") {
+    val got = Graph.seedDistances(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val adj = adjacency(corpusEdges())
+    graft.operators.PlanCache.release()
+    var dist = adj.keys.toSeq.sorted.take(3).map(_ -> 0L).toMap
+    var frontier = dist.keySet
+    for (h <- 1 to 4) {
+      frontier = frontier.flatMap(adj) -- dist.keySet
+      dist ++= frontier.map(_ -> h.toLong)
+    }
+    assert(got == dist)
+    assert(dist.values.max >= 2, "the walk must go past the seeds' neighbors")
+  }
 }
