@@ -60,6 +60,10 @@ object GraftSession {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // every Iterate.release unpersists a locally checkpointed generation
+    // on purpose, and RDD.unpersist warns about each one on this logger
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

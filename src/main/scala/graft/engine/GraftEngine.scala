@@ -1136,8 +1136,7 @@ object GraftEngine {
         Similarity.buildStoredIvf(emb, ivfRoot)
         parts += "ivf founded"
       } else {
-        val (fresh, n) = increment(
-          spark.read.parquet(Atomic.resolve(spark, ivfRoot, "cells")))
+        val (fresh, n) = increment(Atomic.live(spark, ivfRoot, "cells"))
         if (n > 0) Similarity.appendToStoredIvf(fresh, ivfRoot)
         parts += s"ivf +$n"
       }
@@ -1161,8 +1160,7 @@ object GraftEngine {
         Similarity.foundJlIndex(emb, jlRoot)
         parts += "jl founded"
       } else {
-        val (fresh, n) = increment(
-          spark.read.parquet(Atomic.resolve(spark, jlRoot, "jlproj")))
+        val (fresh, n) = increment(Atomic.live(spark, jlRoot, "jlproj"))
         if (n > 0) Similarity.appendToJlIndex(fresh, jlRoot)
         parts += s"jl +$n"
       }

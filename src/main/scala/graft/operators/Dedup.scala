@@ -535,7 +535,7 @@ object Dedup {
       // prefix-filter index convention; compaction is the rebuild
       // point. Probes read these instead of re-ranking the corpus.
       val batchHs = postings.select(col("h")).distinct()
-      val dfq = spark.read.parquet(Atomic.resolve(spark, indexDir, "census_inc"))
+      val dfq = Atomic.live(spark, indexDir, "census_inc")
         .join(batchHs, Seq("h"))
         .groupBy(col("h")).agg(sum(col("delta")).as("df"))
         .filter(col("df") <= maxDf)
@@ -619,10 +619,10 @@ object Dedup {
       (Seq("hashed", "bands") ++ (if (hasPostings) Seq("postings") else Nil))
         .foreach(c.rewrite(_, "doc_id")(spread))
       if (hasPostings) {
-        val post = spark.read.parquet(Atomic.resolve(spark, indexDir, "postings"))
+        val post = Atomic.live(spark, indexDir, "postings")
         c.publish("census_inc")(
           spread(post.groupBy(col("h")).agg(count(lit(1)).as("delta")), _))
-        val dfq = spark.read.parquet(Atomic.resolve(spark, indexDir, "census_inc"))
+        val dfq = Atomic.live(spark, indexDir, "census_inc")
           .groupBy(col("h")).agg(sum(col("delta")).as("df"))
           .filter(col("df") <= maxDf)
         c.publish("rare")(spread(post.join(dfq, Seq("h"))
@@ -1297,9 +1297,7 @@ object Dedup {
       d
     })
     val batchVar = nameVariants(names.filter(col("id") % 10 === 0))
-    val allVar = spark.read
-      .parquet(Atomic.resolve(spark, storeDir, "variants"))
-      .unionByName(batchVar)
+    val allVar = Atomic.live(spark, storeDir, "variants").unionByName(batchVar)
     val cand = batchVar.as("x").join(allVar.as("y"),
         col("x.vh") === col("y.vh") && col("x.id") =!= col("y.id"))
       .select(least(col("x.id"), col("y.id")).as("id_a"),
@@ -1312,8 +1310,7 @@ object Dedup {
         Seq("id_b"))
       .filter(levenshtein(col("name_a"), col("name_b")) <= 1)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val storedLabels = spark.read
-      .parquet(Atomic.resolve(spark, storeDir, "labels"))
+    val storedLabels = Atomic.live(spark, storeDir, "labels")
     clusterReadoutFromLabels(mergeLabels(storedLabels, verified), names)
   }
 
@@ -1338,7 +1335,7 @@ object Dedup {
       // which is exactly where that cost belongs (and it upgrades a
       // pre-labels store to the fast read face)
       val liveLabels = connectedComponents(
-        spark.read.parquet(Atomic.resolve(spark, storeDir, "edges"))
+        Atomic.live(spark, storeDir, "edges")
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
       c.publish("labels")(liveLabels.coalesce(1).write.mode("overwrite").parquet(_))
       PlanCache.release()

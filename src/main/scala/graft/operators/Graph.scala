@@ -620,8 +620,7 @@ object Graph {
     * which is the 100 TB posture for an axis that only ever grows. */
   def evolutionSeriesFromStore(spark: SparkSession, dir: String,
       storeDir: String, iters: Int = 4): DataFrame = {
-    val axis = spark.read
-      .parquet(Atomic.resolve(spark, storeDir, "axis")).head()
+    val axis = Atomic.live(spark, storeDir, "axis").head()
     val (lo, span, n) = (axis.getLong(0), axis.getLong(1), axis.getInt(2))
     val stored: Map[Long, (Long, Long, Long, Long, Long, Long, Long)] =
       Atomic.existing(spark, storeDir, "gauges").fold(
@@ -2084,7 +2083,7 @@ object Graph {
     * with its edge-delta count — the axis [[storedEdgesWhere]] windows
     * over. Listing is partition-directory-sized. */
   def ingestBatches(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(Atomic.resolve(spark, storeDir, "edges"))
+    Atomic.live(spark, storeDir, "edges")
       .groupBy(col("ingest_batch")).agg(count(lit(1)).as("n_deltas"))
 
   /** EPOCH-WINDOWED read face: [[storedEdges]] restricted to the

@@ -21,9 +21,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * instead of recomputing the generation from lineage. That is the
   * standard iterative-graph posture — recomputing an exponentially deep
   * chain was never a real recovery story — and it is why a released
-  * generation can never be read again. The k-core peel takes the same
-  * trade: an RDD round trip (`createDataFrame(df.rdd, schema)`) would
-  * keep lineage, at a row ser/deser per round and a second policy.
+  * generation can never be read again (Spark warns so on every release;
+  * [[graft.GraftSession.local]] mutes that one logger, since the release
+  * is the intent). The k-core peel takes the same trade: an RDD round
+  * trip (`createDataFrame(df.rdd, schema)`) would keep lineage, at a
+  * row ser/deser per round and a second policy.
   *
   * Which loops come here: only those that read the previous generation
   * more than once per round. A loop that reads it once (PageRank, LPA,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming daily-anomaly monitor — the online face of
   * [[graft.operators.EventFlow.dailyAnomalies]] (q90): per event type,
@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * and integer moments, variance from (n·Σx² − (Σx)²).
   *
   * Shape: watermarked tumbling-day aggregation in append mode (a day
-  * emits once, finalized) → `foreachBatch`: alerts first, then the
-  * idempotent history append (anti-join on (type, day), so a replayed
+  * emits once, finalized) → [[Sink.foreachBatch]]: alerts first, then
+  * the idempotent history append (anti-join on (type, day), so a replayed
   * batch cannot duplicate a day; a completed batch never re-alerts,
   * and a crash mid-batch re-fires rather than drops — at-least-once
   * alerts) + per-type moment fold (≤ types rows collected —
@@ -170,17 +170,9 @@ object AnomalyStream {
       historyDir: String, checkpoint: String, alerts: Alerts.Sink,
       threshold: Double, minHistory: Int, late: String,
       availableNow: Boolean): StreamingQuery =
-    dailyTotals(stream, late)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        scoreBatch(spark, batch, historyDir, threshold, minHistory, alerts)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.foreachBatch(dailyTotals(stream, late), checkpoint, availableNow) {
+      (batch, _) => scoreBatch(spark, batch, historyDir, threshold, minHistory, alerts)
+    }
 
   /** Read face over the durable daily history. */
   def currentHistory(spark: SparkSession, historyDir: String): DataFrame =

@@ -1,14 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Security
 import graft.model.FieldSecurity
 import graft.operators.Upsert
 
 /** The CDC pipeline (SURVEY §3.1): a file-based change-event stream →
-  * optional PII transforms → checkpointed foreachBatch keyed upsert.
+  * optional PII transforms → keyed upsert in a [[Sink.foreachBatch]].
   *
   * Reference stages it replaces (mongodb.go:527-815): the hand-rolled
   * channel buffering, disk spill files, smart batch packing, and ≤8
@@ -43,44 +43,25 @@ object CdcPipeline {
       sourceFormat: String = "json")
 
   /** Start the stream. With `availableNow=true` it drains all pending
-    * input then stops (test/batch-catchup mode); otherwise it runs on a
-    * 2 s cadence like the reference's flush timer (mongodb.go:698-699). */
+    * input then stops (test/batch-catchup mode); otherwise it runs on
+    * [[Sink.ReplicationCadence]] (the [[Sink]] contract). */
   def start(spark: SparkSession, cfg: Config, availableNow: Boolean = true): StreamingQuery = {
-    // ST3: the reference's smart batch controller caps a batch by bytes
-    // (256 MB default) or by count; Spark's file source exposes the
-    // same two knobs but only one may be active — the byte cap wins
-    // when configured (it is the one that tracks memory, not file
-    // count, which is what the controller is actually protecting).
     val raw = if (cfg.sourceFormat == "changelog")
       spark.readStream.format("changelog")
         .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
         .load(cfg.sourceDir)
-    else {
-      val reader = spark.readStream.schema(ChangeEvents.schema)
-      cfg.maxBytesPerTrigger match {
-        case Some(b) => reader.option("maxBytesPerTrigger", b)
-        case None    => reader.option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      }
-      reader.json(cfg.sourceDir)
-    }
+    else Sink.admittedJson(spark, ChangeEvents.schema, cfg.sourceDir,
+      cfg.maxFilesPerTrigger, cfg.maxBytesPerTrigger)
     val matched = cfg.nsFilter.map { case (db, t) =>
       ChangeEvents.matchStage(raw, db, t) }.getOrElse(raw)
     val included = ChangeEvents.includeTables(matched, cfg.includeTableRegex)
     val secured = Security.applyFieldSecurity(included, cfg.fieldSecurity)
-
-    val q = secured.writeStream
-      .queryName(s"cdc->${cfg.targetDir}")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("2 seconds"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try Upsert.mergeIntoParquet(batch.sparkSession, cfg.targetDir, batch, cfg.keyCol, cfg.ignoreDeleteOps)
-        catch {
-          case e: Exception => // DLQ'd batch counts as processed (ST10)
-            Dlq.park(batch, batchId, e, cfg.dlqDir)
-        }
-      }
-      .start()
-    q
+    Sink.foreachBatch(secured, cfg.checkpointDir, availableNow,
+        Sink.ReplicationCadence, Some(s"cdc->${cfg.targetDir}"))(
+      Dlq.applyOrPark(cfg.dlqDir) { batch =>
+        Upsert.mergeIntoParquet(batch.sparkSession, cfg.targetDir, batch,
+          cfg.keyCol, cfg.ignoreDeleteOps)
+      })
   }
 
   /** True when the DLQ holds batches a [[retryDlq]] pass would touch. */

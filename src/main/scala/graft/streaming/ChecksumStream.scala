@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.Relational
 
@@ -78,30 +78,17 @@ object ChecksumStream {
       .select(col("month").cast("string").as("month"), col("h"), col("delta"))
 
   /** Start the checksum maintenance over a JSONL change stream into a
-    * parquet snapshot log — file sink + checkpoint, exactly-once
-    * through `_spark_metadata`. */
+    * [[Sink.parquetLog]] of snapshots. */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    checksumStream(deltasOf(spark.readStream.schema(
+    Sink.parquetLog(checksumStream(deltasOf(spark.readStream.schema(
         "op STRING, o_orderkey LONG, o_custkey LONG, o_orderstatus STRING, " +
           "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING")
-      .json(sourceDir)))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+      .json(sourceDir))),
+      outDir, checkpoint, availableNow)
 
   /** Read face: the latest snapshot per month from the append log. */
-  def currentChecksums(spark: SparkSession, outDir: String): DataFrame = {
-    val log = spark.read.schema(
-        "month STRING, updates LONG, n_rows LONG, checksum LONG")
-      .parquet(outDir)
-    val latest = org.apache.spark.sql.expressions.Window.partitionBy(col("month"))
-      .orderBy(col("updates").desc)
-    log.withColumn("rn", row_number().over(latest)).filter(col("rn") === 1)
-      .select("month", "updates", "n_rows", "checksum")
-  }
+  def currentChecksums(spark: SparkSession, outDir: String): DataFrame =
+    Sink.latest(spark, outDir, "month STRING, updates LONG, n_rows LONG, checksum LONG",
+      "updates", "month")
 }

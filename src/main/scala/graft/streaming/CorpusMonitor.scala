@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.functions.Text
@@ -47,20 +47,14 @@ object CorpusMonitor {
         sum(col("quality")).as("sum_quality"),
         sum(col("is_en")).as("n_en"))
 
-  /** Start the monitor over a JSONL document stream into an in-memory
-    * update log named `queryName`. Update mode: each trigger emits only
+  /** Start the monitor over a JSONL document stream into the
+    * [[Sink.memoryTable]] update log `queryName`. Update mode: each trigger emits only
     * the sources whose stats changed; [[currentStats]] is the snapshot
     * face. */
   def start(spark: SparkSession, sourceDir: String, queryName: String,
       availableNow: Boolean = true): StreamingQuery =
-    runningStats(spark.readStream.schema(schema).json(sourceDir))
-      .writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .format("memory")
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.memoryTable(runningStats(spark.readStream.schema(schema).json(sourceDir)),
+      queryName, "update", availableNow)
 
   /** Snapshot face over the update log, shaped exactly like the batch
     * [[graft.operators.TextOps.corpusStats]] report. The log holds one

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A6 — daily counter reset as a streaming windowed aggregation.
   *
@@ -45,7 +45,7 @@ object DailyRollup {
       .agg(max(col("n")).as("n"))
 
   /** Run the rollup over a file stream of change events into an
-    * in-memory sink. UPDATE mode, deliberately: each trigger emits only
+    * [[Sink.memoryTable]]. UPDATE mode, deliberately: each trigger emits only
     * the day-windows whose counts changed, and — unlike complete mode,
     * where watermarks never evict aggregation state — a window whose end
     * falls below the watermark is finalized, its state dropped, and late
@@ -53,13 +53,8 @@ object DailyRollup {
     * state is bounded by the lateness horizon, not by stream lifetime. */
   def start(spark: SparkSession, sourceDir: String, queryName: String,
       availableNow: Boolean = true): StreamingQuery =
-    dailyCounts(
+    Sink.memoryTable(dailyCounts(
       spark.readStream.schema(ChangeEvents.schema).json(sourceDir)
-        .select(col("ts"), col("op").as("event_type")))
-      .writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .format("memory")
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+        .select(col("ts"), col("op").as("event_type"))),
+      queryName, "update", availableNow)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
@@ -20,9 +20,9 @@ import graft.functions.{SetCard, Text}
   * codebook fold), and each incoming document's n_hits is the
   * codegen'd sorted-intersect kernel ([[SetCard]]) over its own
   * distinct shingle hashes — a stateless per-row map: no shuffle, no
-  * watermark, no state store. Exactly-once comes from the file sink's
-  * `_spark_metadata` commit log, so a restart never re-scores a
-  * committed batch. The identical [[score]] runs on a batch frame —
+  * watermark, no state store; the scored log is a [[Sink.parquetLog]],
+  * so a restart never re-scores a committed batch. The identical
+  * [[score]] runs on a batch frame —
   * batch↔stream parity with the q56 operator is spec-pinned.
   */
 object DecontamStream {
@@ -73,12 +73,7 @@ object DecontamStream {
       outDir: String, checkpoint: String, availableNow: Boolean = true,
       k: Int = 4, minHits: Int = 2, evalMod: Int = 10): StreamingQuery = {
     val eval = evalHashes(spark, corpusDir, k, evalMod)
-    score(spark.readStream.schema(schema).json(sourceDir), eval, k, minHits)
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(score(spark.readStream.schema(schema).json(sourceDir), eval, k, minHits),
+      outDir, checkpoint, availableNow)
   }
 }

@@ -41,6 +41,13 @@ object Dlq {
       .withColumn("dlq_retry_count", lit(0))
       .write.mode(SaveMode.Overwrite).json(batchDir(dlqDir, batchId))
 
+  /** The pillars' [[Sink.foreachBatch]] function: `apply` the batch,
+    * or [[park]] it when `apply` throws. */
+  def applyOrPark(dlqDir: String)(apply: DataFrame => Unit): (DataFrame, Long) => Unit =
+    (batch, batchId) =>
+      try apply(batch)
+      catch { case e: Exception => park(batch, batchId, e, dlqDir) }
+
   /** True when the DLQ holds batches a [[retry]] pass would touch
     * (pending `batch_N` dirs or recoverable `.tmp` orphans; permanently
     * `parked_*` batches don't count). */

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 /** Streaming DORMANCY detection — the online face of
@@ -94,24 +94,15 @@ object DormancyStream {
         GroupStateTimeout.EventTimeTimeout)(onUser(horizonMs))
   }
 
-  /** JSON activity stream → transition log in durable parquet
-    * (checkpointed file sink: restart-recoverable, exactly-once). */
+  /** JSON activity stream → transitions in a [[Sink.parquetLog]]. */
   def start(spark: org.apache.spark.sql.SparkSession, sourceDir: String,
       outDir: String, checkpoint: String, horizonMs: Long = 3600000L,
       late: String = "30 minutes", availableNow: Boolean = true): StreamingQuery =
-    transitions(
+    Sink.parquetLog(transitions(
       spark.readStream.schema(schema)
         .option("timestampFormat", SessionStream.TsFormat).json(sourceDir)
-        .withWatermark("ts", late), horizonMs)
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+        .withWatermark("ts", late), horizonMs),
+      outDir, checkpoint, availableNow)
 
   /** The raw transition log (append: a user oscillating around the
     * horizon legitimately carries many rows). */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Online distribution-drift tracking — the STREAMING face of
   * [[graft.operators.DataQuality.valueDrift]]: the reference
@@ -94,22 +94,15 @@ object DriftStream {
         foldBatch(ref))
   }
 
-  /** Start the drift watch over a JSONL event stream into a parquet
-    * snapshot log — file sink + checkpoint, exactly-once through
-    * `_spark_metadata`. */
+  /** Start the drift watch over a JSONL event stream into a
+    * [[Sink.parquetLog]] of snapshots. */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, ref: Reference,
       availableNow: Boolean = true): StreamingQuery =
-    driftStream(spark.readStream
+    Sink.parquetLog(driftStream(spark.readStream
         .schema("event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE")
-        .json(sourceDir), ref)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+        .json(sourceDir), ref),
+      outDir, checkpoint, availableNow)
 
   /** Read face: the latest drift row per event type — INCLUDING
     * reference types the stream has never (or no longer) delivered.
@@ -123,14 +116,8 @@ object DriftStream {
   def currentDrift(spark: SparkSession, outDir: String,
       ref: Reference = Map.empty): DataFrame = {
     import spark.implicits._
-    val log = spark.read.schema(
-        "event_type STRING, updates LONG, n_cur LONG, tvd_micro LONG")
-      .parquet(outDir)
-    val latest = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("updates").desc)
-    val seen = log.withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
-      .select("event_type", "updates", "n_cur", "tvd_micro")
+    val seen = Sink.latest(spark, outDir,
+      "event_type STRING, updates LONG, n_cur LONG, tvd_micro LONG", "updates", "event_type")
     if (ref.isEmpty) seen
     else {
       // reference is gauge metadata (types × buckets): the driver-side

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType, TimestampType}
 
@@ -17,10 +17,10 @@ import graft.operators.{Atomic, Dedup}
   * arrive, so record linkage stays fresh between maintenance windows
   * instead of aging a day.
   *
-  * Exactly-once per micro-batch (the [[IvmStream]] precedent): each
-  * absorbed batch claims its Structured-Streaming batch id in the
-  * store's `ingest_log` AFTER the append lands, and a replayed batch
-  * id short-circuits. The claim is belt-and-braces — the append
+  * Idempotent per [[Sink.foreachBatch]] batch id (the [[IvmStream]]
+  * precedent): each absorbed batch claims its batch id in the store's
+  * `ingest_log` AFTER the append lands, and a replayed batch id
+  * short-circuits. The claim is belt-and-braces — the append
   * itself is idempotent per table (the round-14 crash-replay
   * protocol) — so a crash between the append and the claim replays
   * into no-ops, never duplicates.
@@ -50,20 +50,12 @@ object ErStream {
 
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    spark.readStream.schema(schema).json(sourceDir)
-      .filter(col("op").isin("insert", "update") &&
-        col("after.name").isNotNull)
-      .select(col("key").as("id"), col("after.name").as("name"),
-        col("offset"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, storeDir, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.foreachBatch(spark.readStream.schema(schema).json(sourceDir)
+        .filter(col("op").isin("insert", "update") &&
+          col("after.name").isNotNull)
+        .select(col("key").as("id"), col("after.name").as("name"),
+          col("offset")),
+      checkpoint, availableNow)(ingestBatch(_, storeDir, _))
 
   private[streaming] def ingestBatch(batch: DataFrame, storeDir: String,
       batchId: Long): Unit = {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Exactly-once-within-horizon event dedup: an at-least-once ingest
   * (retried producers, replayed partitions) collapsed to one row per
@@ -21,15 +21,10 @@ object EventDedupStream {
   def deduped(events: DataFrame, late: String = "1 hour"): DataFrame =
     events.withWatermark("ts", late).dropDuplicatesWithinWatermark("event_id")
 
-  /** JSON file stream → in-memory append sink, micros-preserving. */
+  /** JSON file stream → append [[Sink.memoryTable]], micros-preserving. */
   def start(spark: SparkSession, sourceDir: String, queryName: String,
       late: String = "1 hour"): StreamingQuery =
-    deduped(spark.readStream.schema(IntervalJoinStream.schema)
-        .option("timestampFormat", IntervalJoinStream.TsFormat).json(sourceDir), late)
-      .writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .format("memory")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.memoryTable(deduped(spark.readStream.schema(IntervalJoinStream.schema)
+        .option("timestampFormat", IntervalJoinStream.TsFormat).json(sourceDir), late),
+      queryName, "append", availableNow = false)
 }

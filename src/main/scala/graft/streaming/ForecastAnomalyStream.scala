@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** SEASONALITY-AWARE streaming anomaly monitor — [[AnomalyStream]]'s
   * plain causal z pages on every weekly-cycle peak (a Friday spike is
@@ -24,8 +24,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * including within a single from-scratch AvailableNow batch.
   *
   * Shape: the [[AnomalyStream]] contract verbatim — watermarked
-  * tumbling-day totals in append mode → `foreachBatch`: alerts first
-  * (at-least-once across the crash window), then the idempotent
+  * tumbling-day totals in append mode → [[Sink.foreachBatch]]: alerts
+  * first (at-least-once across the crash window), then the idempotent
   * (type, day) history append (exactly-once rows). Each batch re-folds
   * the HW walk from the durable history — types × calendar-days rows,
   * metadata-bounded by construction, the monitor convention — so no
@@ -175,18 +175,10 @@ object ForecastAnomalyStream {
       threshold: Double, minHistory: Int, late: String,
       availableNow: Boolean,
       kind: String = "forecast_anomaly"): StreamingQuery =
-    AnomalyStream.dailyTotals(stream, late)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        scoreBatch(spark, batch, historyDir, threshold, minHistory, alerts,
-          kind)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.foreachBatch(AnomalyStream.dailyTotals(stream, late), checkpoint,
+        availableNow) { (batch, _) =>
+      scoreBatch(spark, batch, historyDir, threshold, minHistory, alerts, kind)
+    }
 
   /** Read face over the durable daily history. */
   def currentHistory(spark: SparkSession, historyDir: String): DataFrame =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Online Holt level/trend forecasting — the STREAMING face of
   * [[graft.operators.Relational.holtForecast]]: the batch operator
@@ -68,21 +68,13 @@ object ForecastStream {
   }
 
   /** Start the forecaster over a JSONL day-total stream into a
-    * parquet snapshot log — file sink + checkpoint, exactly-once
-    * through `_spark_metadata`. */
+    * [[Sink.parquetLog]] of snapshots. */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    forecastStream(spark.readStream
+    Sink.parquetLog(forecastStream(spark.readStream
         .schema("series_key STRING, day DATE, cents LONG")
-        .json(sourceDir))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .start()
+        .json(sourceDir)),
+      outDir, checkpoint, availableNow)
 
   // ---- Holt-Winters (weekly-seasonal) live face ----------------------
 
@@ -156,45 +148,22 @@ object ForecastStream {
   }
 
   /** Start the seasonal forecaster over a JSONL day-total stream into
-    * a parquet snapshot log (the [[start]] sink contract). */
+    * a [[Sink.parquetLog]] of snapshots. */
   def startHw(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    hwForecastStream(spark.readStream
+    Sink.parquetLog(hwForecastStream(spark.readStream
         .schema("series_key STRING, day DATE, cents LONG")
-        .json(sourceDir))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .start()
+        .json(sourceDir)),
+      outDir, checkpoint, availableNow)
 
   /** Read face: the freshest seasonal forecast per series. */
-  def currentHwForecast(spark: SparkSession, outDir: String): DataFrame = {
-    val log = spark.read.schema("series_key STRING, day DATE, n_days LONG," +
-        " level_cents LONG, trend_cents LONG, seasonal_next_cents LONG," +
-        " next_cents LONG")
-      .parquet(outDir)
-    val latest = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series_key")).orderBy(col("n_days").desc)
-    log.withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
-      .select("series_key", "day", "n_days", "level_cents", "trend_cents",
-        "seasonal_next_cents", "next_cents")
-  }
+  def currentHwForecast(spark: SparkSession, outDir: String): DataFrame =
+    Sink.latest(spark, outDir, "series_key STRING, day DATE, n_days LONG," +
+      " level_cents LONG, trend_cents LONG, seasonal_next_cents LONG," +
+      " next_cents LONG", "n_days", "series_key")
 
   /** Read face: the freshest forecast per series. */
-  def currentForecast(spark: SparkSession, outDir: String): DataFrame = {
-    val log = spark.read.schema("series_key STRING, day DATE, n_days LONG," +
-        " level_cents LONG, trend_cents LONG, next_cents LONG")
-      .parquet(outDir)
-    val latest = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series_key")).orderBy(col("n_days").desc)
-    log.withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
-      .select("series_key", "day", "n_days", "level_cents", "trend_cents",
-        "next_cents")
-  }
+  def currentForecast(spark: SparkSession, outDir: String): DataFrame =
+    Sink.latest(spark, outDir, "series_key STRING, day DATE, n_days LONG," +
+      " level_cents LONG, trend_cents LONG, next_cents LONG", "n_days", "series_key")
 }

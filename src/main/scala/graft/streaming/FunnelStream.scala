@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Streaming conversion funnel — the online face of
@@ -86,24 +86,15 @@ object FunnelStream {
         GroupStateTimeout.EventTimeTimeout)(onUser(horizonMs))
   }
 
-  /** JSON clickstream → finalized journeys in a durable parquet log
-    * (checkpointed file sink: restart-recoverable, exactly-once). */
+  /** JSON clickstream → finalized journeys in a [[Sink.parquetLog]]. */
   def start(spark: org.apache.spark.sql.SparkSession, sourceDir: String,
       outDir: String, checkpoint: String, horizonMs: Long = 3600000L,
       late: String = "30 minutes", availableNow: Boolean = true): StreamingQuery =
-    journeys(
+    Sink.parquetLog(journeys(
       spark.readStream.schema(schema)
         .option("timestampFormat", SessionStream.TsFormat).json(sourceDir)
-        .withWatermark("ts", late), horizonMs)
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-               else Trigger.ProcessingTime("1 second"))
-      .start()
+        .withWatermark("ts", late), horizonMs),
+      outDir, checkpoint, availableNow)
 
   /** Read face over the durable journey log — the APPEND log: a user
     * who re-activates after their journey finalized and its state

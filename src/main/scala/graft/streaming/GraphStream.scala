@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.{Atomic, Graph}
@@ -15,8 +15,8 @@ import graft.operators.{Atomic, Graph}
   * Unlike the stateless IVF assignment, the pair expansion AGGREGATES
   * within the batch (collect the basket, expand i<j pairs), which the
   * append-mode file sink cannot express — so this face is a
-  * `foreachBatch` writer with idempotence built from DYNAMIC PARTITION
-  * OVERWRITE: each batch writes its deltas under
+  * [[Sink.foreachBatch]] writer with idempotence built from DYNAMIC
+  * PARTITION OVERWRITE: each batch writes its deltas under
   * `edges/ingest_batch=stream-<id>/` with overwrite mode, so a
   * replayed batch (crash between sink write and checkpoint commit)
   * REPLACES its own partition instead of double-counting deltas. The
@@ -36,27 +36,21 @@ object GraphStream {
 
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    spark.readStream.schema(schema).json(sourceDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // resolve the LIVE edge dir per batch (not once at start):
-        // after a compaction publishes edges_v<N>, the legacy `edges`
-        // path is a dead directory the next publish deletes — deltas
-        // written there would be checkpoint-committed yet invisible
-        // and then physically lost (the round-10 advice finding)
-        val spark = batch.sparkSession
-        Graph.writeDeltas(Graph.pairDeltas(batch),
-          Atomic.resolve(spark, storeDir, "edges"), s"stream-$batchId")
-        // ledger AFTER deltas (the reconcile crash-order contract): a
-        // replayed batch re-lands its own delta partition idempotently
-        // and at worst duplicates ledger rows, which the reconcile
-        // anti-join reads as mere presence
-        Graph.appendLedger(
-          batch.select(col("l_orderkey").as("basket")).distinct(), storeDir)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.foreachBatch(spark.readStream.schema(schema).json(sourceDir),
+        checkpoint, availableNow) { (batch, batchId) =>
+      // resolve the LIVE edge dir per batch (not once at start):
+      // after a compaction publishes edges_v<N>, the legacy `edges`
+      // path is a dead directory the next publish deletes — deltas
+      // written there would be checkpoint-committed yet invisible
+      // and then physically lost (the round-10 advice finding)
+      val spark = batch.sparkSession
+      Graph.writeDeltas(Graph.pairDeltas(batch),
+        Atomic.resolve(spark, storeDir, "edges"), s"stream-$batchId")
+      // ledger AFTER deltas (the reconcile crash-order contract): a
+      // replayed batch re-lands its own delta partition idempotently
+      // and at worst duplicates ledger rows, which the reconcile
+      // anti-join reads as mere presence
+      Graph.appendLedger(
+        batch.select(col("l_orderkey").as("basket")).distinct(), storeDir)
+    }
 }

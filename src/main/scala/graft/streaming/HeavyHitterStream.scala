@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.functions.Text
 
@@ -87,34 +87,21 @@ object HeavyHitterStream {
   def tokenRows(docs: DataFrame): DataFrame =
     docs.select(col("source"), explode(Text.tokens(col("text"))).as("token"))
 
-  /** Start the summary over a JSONL document stream into a parquet
-    * snapshot log — file sink + checkpoint, exactly-once through
-    * `_spark_metadata`, resumable state like every stream here. */
+  /** Start the summary over a JSONL document stream into a
+    * [[Sink.parquetLog]] of snapshots. */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, k: Int = 16,
       availableNow: Boolean = true): StreamingQuery =
-    summaryStream(tokenRows(
+    Sink.parquetLog(summaryStream(tokenRows(
         spark.readStream.schema("doc_id LONG, text STRING, source STRING")
-          .json(sourceDir)), k)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .start()
+          .json(sourceDir)), k),
+      outDir, checkpoint, availableNow)
 
   /** Read face: the latest summary per source from the append log
     * (sentinel rows — an empty summary's freshness marker — included,
     * recognizable as token = "" / est_count = 0). */
-  def currentSummary(spark: SparkSession, outDir: String): DataFrame = {
-    val log = spark.read.schema(
-        "source STRING, updates LONG, token STRING, est_count LONG, n_processed LONG")
-      .parquet(outDir)
-    log.withColumn("mx", max(col("updates")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("source"))))
-      .filter(col("updates") === col("mx"))
-      .select("source", "updates", "token", "est_count", "n_processed")
-  }
+  def currentSummary(spark: SparkSession, outDir: String): DataFrame =
+    Sink.latest(spark, outDir,
+      "source STRING, updates LONG, token STRING, est_count LONG, n_processed LONG",
+      "updates", "source")
 }

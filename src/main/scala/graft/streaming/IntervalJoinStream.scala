@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Stream-stream event-time INTERVAL join: purchases attributed to the
@@ -61,16 +61,10 @@ object IntervalJoinStream {
         col("purchase_ts"), col("view_id"), col("view_ts"))
   }
 
-  /** Run over a JSON file stream into an in-memory append sink. */
+  /** Run over a JSON file stream into an append [[Sink.memoryTable]]. */
   def start(spark: SparkSession, sourceDir: String, queryName: String,
       horizon: String = "1 hour", joinType: String = "inner"): StreamingQuery =
-    attributed(spark.readStream.schema(schema)
+    Sink.memoryTable(attributed(spark.readStream.schema(schema)
         .option("timestampFormat", TsFormat).json(sourceDir), horizon,
-      joinType = joinType)
-      .writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .format("memory")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+      joinType = joinType), queryName, "append", availableNow = false)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.Atomic
 
@@ -13,7 +13,7 @@ import graft.operators.Atomic
   * (ts, offset — INCLUDING delete tombstones, so a stale update can
   * never resurrect a deleted key: the DLQ resurrect-guard discipline)
   * and emits retraction rows when the winner changes: −1/−cents of the
-  * old contribution, +1/+cents of the new. A `foreachBatch` merger
+  * old contribution, +1/+cents of the new. A [[Sink.foreachBatch]] merger
   * folds the (buckets-sized) delta aggregate into the Atomic-versioned
   * view.
   *
@@ -111,16 +111,9 @@ object IvmStream {
   def start(spark: SparkSession, sourceDir: String, storeDir: String,
       checkpoint: String, view: graft.model.IvmView,
       availableNow: Boolean): StreamingQuery =
-    deltaStream(spark.readStream.schema(schemaFor(view)).json(sourceDir), view)
-      .writeStream
-      .foreachBatch { (batch: Dataset[DeltaRow], batchId: Long) =>
-        applyDeltas(batch.toDF(), storeDir, batchId, view)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.foreachBatch(
+        deltaStream(spark.readStream.schema(schemaFor(view)).json(sourceDir), view).toDF(),
+        checkpoint, availableNow)(applyDeltas(_, storeDir, _, view))
 
   /** Fold one batch's delta rows into the live view and publish the
     * replacement version — skipping batches the view has already

@@ -1,14 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.KvStore
 
 /** Redis keyspace-notification / stream-consumer pipeline (SURVEY S9/S10,
-  * ST8): a file-based stream of KV ops → checkpointed foreachBatch KV
-  * merge.
+  * ST8): a file-based stream of KV ops → KV merge in a
+  * [[Sink.foreachBatch]].
   *
   * Checkpointing: the reference persists the last XACK'd stream id per
   * message (reference redis.go:266-269,319-343) and replays from it;
@@ -46,28 +46,16 @@ object KvPipeline {
     * the DLQ and COMMITS — same bounded-retry contract as the CDC
     * pillar (the reference's Redis path has no DLQ and wedges on a
     * poisoned batch; the upgrade is symmetric with [[CdcPipeline]]). */
-  def start(spark: SparkSession, cfg: Config, availableNow: Boolean = true): StreamingQuery = {
-    val reader = spark.readStream.schema(opSchema)
-    cfg.maxBytesPerTrigger match {
-      case Some(b) => reader.option("maxBytesPerTrigger", b)
-      case None    => reader.option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-    }
-    reader
-      .json(cfg.sourceDir)
-      .writeStream
-      .queryName(s"kv->${cfg.targetDir}")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("2 seconds"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch.sparkSession, not the captured outer session: correct
-        // under Spark Connect and multi-session deployments.
-        try KvStore.mergeKvIntoParquet(batch.sparkSession, cfg.targetDir, batch)
-        catch {
-          case e: Exception => Dlq.park(batch, batchId, e, cfg.dlqDir)
-        }
-      }
-      .start()
-  }
+  def start(spark: SparkSession, cfg: Config, availableNow: Boolean = true): StreamingQuery =
+    Sink.foreachBatch(
+        Sink.admittedJson(spark, opSchema, cfg.sourceDir, cfg.maxFilesPerTrigger,
+          cfg.maxBytesPerTrigger),
+        cfg.checkpointDir, availableNow, Sink.ReplicationCadence,
+        Some(s"kv->${cfg.targetDir}"))(
+      // batch.sparkSession, not the captured outer session: correct
+      // under Spark Connect and multi-session deployments.
+      Dlq.applyOrPark(cfg.dlqDir)(batch =>
+        KvStore.mergeKvIntoParquet(batch.sparkSession, cfg.targetDir, batch)))
 
   /** True when the DLQ holds batches a [[retryDlq]] pass would touch. */
   def hasPendingBatches(spark: SparkSession, cfg: Config): Boolean =

@@ -68,19 +68,14 @@ object Metrics {
       .agg(count(lit(1)).as("n"))
 
   /** Run the accumulating counters over a file stream of change events
-    * into an in-memory sink. Update mode: each trigger emits only the
+    * into a [[Sink.memoryTable]]. Update mode: each trigger emits only the
     * (table, op) rows whose totals changed, so the memory table is an
     * update LOG — read it through [[currentOpCounters]]. */
   def startOpCounters(spark: SparkSession, sourceDir: String, queryName: String,
       availableNow: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery =
-    opCounters(spark.readStream.schema(ChangeEvents.schema).json(sourceDir))
-      .writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .format("memory")
-      .trigger(if (availableNow) org.apache.spark.sql.streaming.Trigger.AvailableNow()
-               else org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.memoryTable(
+      opCounters(spark.readStream.schema(ChangeEvents.schema).json(sourceDir)),
+      queryName, "update", availableNow)
 
   /** Snapshot face over [[startOpCounters]]'s update log: a running
     * COUNT only ever grows, so the live value per key is `max(n)`. */

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.Sketches
 
@@ -70,30 +69,18 @@ object QuantileStream {
   }
 
   /** Start the sketch over a JSONL document stream (`doc_id`, `text`,
-    * `source`) into a parquet snapshot log — file sink + checkpoint,
-    * so a restarted query resumes its histograms and the log is
-    * exactly-once through `_spark_metadata`. */
+    * `source`) into a [[Sink.parquetLog]] of snapshots. */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    quantileStream(Sketches.bucketRows(
-        spark.readStream.schema("doc_id LONG, text STRING, source STRING").json(sourceDir)))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(quantileStream(Sketches.bucketRows(
+        spark.readStream.schema("doc_id LONG, text STRING, source STRING").json(sourceDir))),
+      outDir, checkpoint, availableNow)
 
   /** Read face: the latest quantile rows per source from the append
     * log, shaped like [[Sketches.logQuantiles]]' output. */
-  def currentQuantiles(spark: SparkSession, outDir: String): DataFrame = {
-    val log = spark.read.schema(
-        "source STRING, updates LONG, p INT, bucket INT, est_tokens LONG")
-      .parquet(outDir)
-    val latest = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source"), col("p")).orderBy(col("updates").desc)
-    log.withColumn("rn", row_number().over(latest)).filter(col("rn") === 1)
-      .select("source", "p", "bucket", "est_tokens")
-  }
+  def currentQuantiles(spark: SparkSession, outDir: String): DataFrame =
+    Sink.latest(spark, outDir,
+        "source STRING, updates LONG, p INT, bucket INT, est_tokens LONG",
+        "updates", "source", "p")
+      .drop("updates")
 }

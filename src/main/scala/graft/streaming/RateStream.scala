@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
 
 /** Rolling event-rate monitor as a SLIDING-window streaming
@@ -47,38 +47,22 @@ object RateStream {
       .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
         col("event_type"), col("n_events"), col("cents"))
 
-  /** JSON file stream → in-memory table of finalized windows (test /
+  /** JSON file stream → [[Sink.memoryTable]] of finalized windows (test /
     * inspection face). */
   def start(spark: SparkSession, sourceDir: String, queryName: String,
       width: String = "1 hour", slide: String = "15 minutes",
       late: String = "1 hour"): StreamingQuery =
-    rates(spark.readStream.schema(schema)
+    Sink.memoryTable(rates(spark.readStream.schema(schema)
         .option("timestampFormat", SessionStream.TsFormat).json(sourceDir),
-      width, slide, late)
-      .writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .format("memory")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+      width, slide, late), queryName, "append", availableNow = false)
 
-  /** Durable face: finalized windows land in a parquet log with a
-    * checkpoint (the SessionStream/StreamingDedup sink shape) —
-    * exactly-once through the file sink's `_spark_metadata` commit
-    * log, restart-recoverable. */
+  /** Durable face: finalized windows land in a [[Sink.parquetLog]]. */
   def startDurable(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, width: String = "1 hour",
       slide: String = "15 minutes", late: String = "1 hour"): StreamingQuery =
-    rates(spark.readStream.schema(schema)
+    Sink.parquetLog(rates(spark.readStream.schema(schema)
         .option("timestampFormat", SessionStream.TsFormat).json(sourceDir),
-      width, slide, late)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+      width, slide, late), outDir, checkpoint, availableNow = false)
 
   /** Read face over the durable window log. */
   def currentRates(spark: SparkSession, outDir: String): DataFrame =
@@ -96,13 +80,7 @@ object RateStream {
     * log + checkpoint. */
   def startChangeEvents(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    rates(spark.readStream.schema(ChangeEvents.schema).json(sourceDir)
-        .select(col("op").as("event_type"), col("ts"), lit(0.0).as("value")))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(rates(spark.readStream.schema(ChangeEvents.schema).json(sourceDir)
+        .select(col("op").as("event_type"), col("ts"), lit(0.0).as("value"))),
+      outDir, checkpoint, availableNow)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 /** Gap sessionization as a STREAMING aggregation — the online twin of
@@ -45,7 +45,7 @@ object SessionStream {
       .select(col("user_id"), col("n_events"),
         col("session_start"), col("session_end"))
 
-  /** Run over a JSON file stream into an in-memory sink. APPEND mode —
+  /** Run over a JSON file stream into a [[Sink.memoryTable]]. APPEND mode —
     * the only mode Spark supports for session-window aggregations, and
     * the right contract anyway: a session row emits exactly once, when
     * the watermark passes its window end (last event + gap), i.e. when
@@ -57,34 +57,20 @@ object SessionStream {
     * advances the watermark past them. */
   def start(spark: SparkSession, sourceDir: String, queryName: String,
       availableNow: Boolean = true): StreamingQuery =
-    sessions(spark.readStream.schema(schema)
-        .option("timestampFormat", TsFormat).json(sourceDir))
-      .writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .format("memory")
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.memoryTable(sessions(spark.readStream.schema(schema)
+        .option("timestampFormat", TsFormat).json(sourceDir)),
+      queryName, "append", availableNow)
 
-  /** Durable twin of [[start]]: finalized sessions land in a parquet
-    * log with a checkpoint — the StreamingDedup sink shape — so a
-    * restarted query resumes from where it left off and a finalized
-    * session survives the process (the memory sink cannot recover).
-    * Exactly-once through the file sink's `_spark_metadata` commit
-    * log; read results through [[currentSessions]]. */
+  /** Durable twin of [[start]]: finalized sessions land in a
+    * [[Sink.parquetLog]], which, unlike the memory table, survives a
+    * restart; read results through [[currentSessions]]. */
   def startDurable(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true,
       gap: String = s"${graft.operators.EventFlow.DefaultGapHours} hours",
       late: String = "1 hour"): StreamingQuery =
-    sessions(spark.readStream.schema(schema)
-        .option("timestampFormat", TsFormat).json(sourceDir), gap, late)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(sessions(spark.readStream.schema(schema)
+        .option("timestampFormat", TsFormat).json(sourceDir), gap, late),
+      outDir, checkpoint, availableNow)
 
   /** Read face over the durable session log. */
   def currentSessions(spark: SparkSession, outDir: String): DataFrame =
@@ -99,13 +85,7 @@ object SessionStream {
     * pipeline; owns only its log + checkpoint. */
   def startChangeEvents(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    sessions(spark.readStream.schema(ChangeEvents.schema).json(sourceDir)
-        .select(col("key").as("user_id"), col("ts")))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(sessions(spark.readStream.schema(ChangeEvents.schema).json(sourceDir)
+        .select(col("key").as("user_id"), col("ts"))),
+      outDir, checkpoint, availableNow)
 }

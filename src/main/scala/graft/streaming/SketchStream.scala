@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.operators.Sketches
 
@@ -69,29 +69,15 @@ object SketchStream {
   }
 
   /** Start the sketch over a JSONL document stream (`doc_id`, `text`,
-    * `source`) into a parquet snapshot log — file sink + checkpoint,
-    * so a restarted query resumes its registers and the log is
-    * exactly-once through `_spark_metadata`. */
+    * `source`) into a [[Sink.parquetLog]] of snapshots. */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       checkpoint: String, availableNow: Boolean = true): StreamingQuery =
-    sketchStream(Sketches.registerRows(
-        spark.readStream.schema("doc_id LONG, text STRING, source STRING").json(sourceDir)))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(sketchStream(Sketches.registerRows(
+        spark.readStream.schema("doc_id LONG, text STRING, source STRING").json(sourceDir))),
+      outDir, checkpoint, availableNow)
 
   /** Read face: the latest snapshot per source from the append log. */
-  def currentEstimates(spark: SparkSession, outDir: String): DataFrame = {
-    val log = spark.read.schema(
-        "source STRING, updates LONG, m_hit LONG, est_distinct DOUBLE")
-      .parquet(outDir)
-    val latest = org.apache.spark.sql.expressions.Window.partitionBy(col("source"))
-      .orderBy(col("updates").desc)
-    log.withColumn("rn", row_number().over(latest)).filter(col("rn") === 1)
-      .select("source", "updates", "m_hit", "est_distinct")
-  }
+  def currentEstimates(spark: SparkSession, outDir: String): DataFrame =
+    Sink.latest(spark, outDir,
+      "source STRING, updates LONG, m_hit LONG, est_distinct DOUBLE", "updates", "source")
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.functions.Text
 import graft.operators.Dedup
@@ -168,11 +168,8 @@ object StreamingDedup {
   }
 
   /** Start online dedup over a JSONL document stream (`doc_id`, `text`,
-    * and `ts` when a horizon is set) into a parquet pair log at
-    * `outDir` — a FILE sink, so the query restarts from its checkpoint
-    * (the memory sink cannot recover) and emissions are exactly-once
-    * through the sink's `_spark_metadata` commit log. Read results
-    * through [[currentPairs]].
+    * and `ts` when a horizon is set) into a [[Sink.parquetLog]] of
+    * pairs at `outDir`. Read results through [[currentPairs]].
     *
     * `horizonMs` bounds dedup history: only documents whose event times
     * fall within the horizon pair up, and bucket state ages out with
@@ -186,14 +183,8 @@ object StreamingDedup {
                  else "doc_id LONG, text STRING"
     val raw = spark.readStream.schema(schema).json(sourceDir)
     val stream = if (horizonMs.isDefined) raw.withWatermark("ts", lateness) else raw
-    pairStream(bandedDocs(stream), threshold, horizonMs)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("1 second"))
-      .start()
+    Sink.parquetLog(pairStream(bandedDocs(stream), threshold, horizonMs),
+      outDir, checkpoint, availableNow)
   }
 
   /** Read face over the pair log: emissions are at-least-once per PAIR
