@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute load average above which a timing row is flagged
     * `suspect` — between the quiet builder board's observed ceiling

@@ -64,6 +64,11 @@ object GraftSession {
     // on purpose, and RDD.unpersist warns about each one on this logger
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+    // AQE stays on for batch queries, and every stream start warns here
+    // that streaming disables it
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

@@ -73,139 +73,53 @@ object ConfigReader {
   def parse(json: String): EngineConfig = {
     val root = mapper.readTree(json)
     EngineConfig(
-      syncTasks = root.path("syncTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseSyncTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed sync task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      backupTasks = root.path("backupTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseBackupTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed backup task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      trainingTasks = root.path("trainingTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseTrainingTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed training task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      optimizeTasks = root.path("optimizeTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseOptimizeTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed optimize task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      dqTasks = root.path("dqTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseDqTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed dq task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      annIndexTasks = root.path("annIndexTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseAnnIndexTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed annIndex task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      ivmTasks = root.path("ivmTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseIvmTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed ivm task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      decontamTasks = root.path("decontamTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseDecontamTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed decontam task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      checksumTasks = root.path("checksumTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseChecksumTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed checksum task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      annEvalTasks = root.path("annEvalTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseAnnEvalTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed annEval task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      modelEvalTasks = root.path("modelEvalTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseModelEvalTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed modelEval task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      privacyTasks = root.path("privacyTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parsePrivacyTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed privacy task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      graphTasks = root.path("graphTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseGraphTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed graph task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      retrainTasks = root.path("retrainTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseRetrainTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed retrain task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      driftTasks = root.path("driftTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseDriftTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed drift task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      graphHealthTasks =
-        root.path("graphHealthTasks").elements.asScala.toSeq.flatMap { n =>
-          try Some(parseGraphHealthTask(n))
-          catch { case e: Exception =>
-            logger.warn(s"skipping malformed graph health task ${n.path("id").asText("?")}: ${e.getMessage}")
-            None
-          }
-        },
-      erTasks = root.path("erTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseErTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed er task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
+      syncTasks = tasks(root, "syncTasks")(parseSyncTask),
+      backupTasks = tasks(root, "backupTasks")(parseBackupTask),
+      trainingTasks = tasks(root, "trainingTasks")(parseTrainingTask),
+      optimizeTasks = tasks(root, "optimizeTasks")(parseOptimizeTask),
+      dqTasks = tasks(root, "dqTasks")(parseDqTask),
+      annIndexTasks = tasks(root, "annIndexTasks")(parseAnnIndexTask),
+      ivmTasks = tasks(root, "ivmTasks")(parseIvmTask),
+      decontamTasks = tasks(root, "decontamTasks")(parseDecontamTask),
+      checksumTasks = tasks(root, "checksumTasks")(parseChecksumTask),
+      annEvalTasks = tasks(root, "annEvalTasks")(parseAnnEvalTask),
+      modelEvalTasks = tasks(root, "modelEvalTasks")(parseModelEvalTask),
+      privacyTasks = tasks(root, "privacyTasks")(parsePrivacyTask),
+      graphTasks = tasks(root, "graphTasks")(parseGraphTask),
+      retrainTasks = tasks(root, "retrainTasks")(parseRetrainTask),
+      driftTasks = tasks(root, "driftTasks")(parseDriftTask),
+      graphHealthTasks = tasks(root, "graphHealthTasks")(parseGraphHealthTask),
+      erTasks = tasks(root, "erTasks")(parseErTask),
       metricsDir = optText(root, "metricsDir"))
   }
 
-  private def parseErTask(n: JsonNode): graft.model.ErTaskSpec = {
-    val schedule = optText(n, "schedule").getOrElse("15 5 * * *")
+  /** Every entry of the `key` array, parsed. A malformed entry is
+    * skipped with a warning naming the key and its id; its siblings
+    * still load. */
+  private def tasks[T](root: JsonNode, key: String)(parse: JsonNode => T): Seq[T] =
+    root.path(key).elements.asScala.toSeq.flatMap { n =>
+      try Some(parse(n))
+      catch { case e: Exception =>
+        logger.warn(s"skipping malformed $key entry ${n.path("id").asText("?")}: ${e.getMessage}")
+        None
+      }
+    }
+
+  /** A scheduled task's `schedule`, or its family's default, validated
+    * at load: a bad schedule skips THIS task only. */
+  private def scheduleOf(n: JsonNode, default: String): String = {
+    val schedule = optText(n, "schedule").getOrElse(default)
     graft.operators.Cron.parse(schedule)
+    schedule
+  }
+
+  private def parseErTask(n: JsonNode): graft.model.ErTaskSpec =
     graft.model.ErTaskSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "15 5 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       storeDir = reqText(n, "storeDir"),
       compact = n.path("compact").asBoolean(false))
-  }
 
   private def reqText(n: JsonNode, field: String): String = {
     val v = n.path(field)
@@ -326,9 +240,7 @@ object ConfigReader {
       })
   }
 
-  private def parseBackupTask(n: JsonNode): BackupSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 2 * * *")
-    graft.operators.Cron.parse(schedule) // validate here: a bad schedule skips THIS task only
+  private def parseBackupTask(n: JsonNode): BackupSpec =
     BackupSpec(
       id = n.path("id").asInt(0),
       format = optText(n, "format").getOrElse("json"),
@@ -344,17 +256,14 @@ object ConfigReader {
           endOffsetDays = t.path("endOffsetDays").asInt(-1))
       },
       compress = n.path("compress").asBoolean(true),
-      schedule = schedule,
+      schedule = scheduleOf(n, "0 2 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       outDir = reqText(n, "outDir"),
       // gcsAddress is the reference's field name for the upload
       // destination (config.go:19); uploadDir wins when both appear
       uploadDir = optText(n, "uploadDir").orElse(optText(n, "gcsAddress")))
-  }
 
   private def parseTrainingTask(n: JsonNode): TrainingExportSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 3 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
     val rates = {
       val r = n.path("rates")
       if (r.isObject)
@@ -368,7 +277,7 @@ object ConfigReader {
     }
     TrainingExportSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "0 3 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       outDir = reqText(n, "outDir"),
       minQuality = n.path("minQuality").asDouble(0.66),
@@ -380,14 +289,12 @@ object ConfigReader {
   }
 
   private def parseOptimizeTask(n: JsonNode): OptimizeSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 4 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
     val by = n.path("zorderBy")
     require(by.isArray && by.size == 2 && by.get(0).isTextual && by.get(1).isTextual,
       "zorderBy must be a two-column array")
     OptimizeSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "0 4 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       outDir = reqText(n, "outDir"),
       zorderBy = (by.get(0).asText, by.get(1).asText),
@@ -456,11 +363,9 @@ object ConfigReader {
   }
 
   private def parseAnnIndexTask(n: JsonNode): graft.model.AnnIndexSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 5 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
     val spec = graft.model.AnnIndexSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "0 5 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       indexDir = reqText(n, "indexDir"),
       ivf = n.path("ivf").asBoolean(true),
@@ -475,8 +380,6 @@ object ConfigReader {
 
   private def parseDqTask(n: JsonNode): DqSpec = {
     import graft.operators.DataQuality._
-    val schedule = optText(n, "schedule").getOrElse("0 6 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
     val rules = n.path("rules").elements.asScala.toSeq.map { r =>
       val name = reqText(r, "name"); val column = reqText(r, "column")
       reqText(r, "kind") match {
@@ -498,54 +401,43 @@ object ConfigReader {
     require(rules.nonEmpty, "dq task needs at least one rule")
     DqSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "0 6 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       table = reqText(n, "table"),
       rules = rules)
   }
 
-  private def parseChecksumTask(n: JsonNode): ChecksumSpec = {
-    val schedule = optText(n, "schedule").getOrElse("30 5 * * *")
-    graft.operators.Cron.parse(schedule)
+  private def parseChecksumTask(n: JsonNode): ChecksumSpec =
     ChecksumSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "30 5 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       targetDir = reqText(n, "targetDir"))
-  }
 
-  private def parseAnnEvalTask(n: JsonNode): AnnEvalSpec = {
-    val schedule = optText(n, "schedule").getOrElse("45 4 * * *")
-    graft.operators.Cron.parse(schedule)
+  private def parseAnnEvalTask(n: JsonNode): AnnEvalSpec =
     AnnEvalSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "45 4 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       indexDir = reqText(n, "indexDir"),
       k = n.path("k").asInt(5),
       nprobe = n.path("nprobe").asInt(4),
       minRecallMicro = n.path("minRecallMicro").asLong(800000L))
-  }
 
-  private def parseModelEvalTask(n: JsonNode): ModelEvalSpec = {
-    val schedule = optText(n, "schedule").getOrElse("55 4 * * *")
-    graft.operators.Cron.parse(schedule)
+  private def parseModelEvalTask(n: JsonNode): ModelEvalSpec =
     ModelEvalSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "55 4 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       minKappaMicro = n.path("minKappaMicro").asLong(200000L),
       minAucMicro = n.path("minAucMicro").asLong(700000L),
       maxEceMicro = n.path("maxEceMicro").asLong(150000L))
-  }
 
   private def parsePrivacyTask(n: JsonNode): PrivacySpec = {
-    val schedule = optText(n, "schedule").getOrElse("10 6 * * *")
-    graft.operators.Cron.parse(schedule)
     val qis = n.path("quasiIds").elements.asScala.map(_.asText).toSeq
     val spec = PrivacySpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "10 6 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       table = optText(n, "table").getOrElse("customer"),
       quasiIds = if (qis.nonEmpty) qis else Seq("c_nationkey", "c_mktsegment"),
@@ -559,23 +451,18 @@ object ConfigReader {
     spec
   }
 
-  private def parseGraphTask(n: JsonNode): GraphTaskSpec = {
-    val schedule = optText(n, "schedule").getOrElse("20 5 * * *")
-    graft.operators.Cron.parse(schedule)
+  private def parseGraphTask(n: JsonNode): GraphTaskSpec =
     GraphTaskSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "20 5 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       storeDir = reqText(n, "storeDir"),
       compact = n.path("compact").asBoolean(false))
-  }
 
   private def parseRetrainTask(n: JsonNode): RetrainSpec = {
-    val schedule = optText(n, "schedule").getOrElse("40 3 * * *")
-    graft.operators.Cron.parse(schedule)
     val spec = RetrainSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "40 3 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       storeDir = reqText(n, "storeDir"),
       iters = n.path("iters").asInt(20),
@@ -587,11 +474,9 @@ object ConfigReader {
   }
 
   private def parseGraphHealthTask(n: JsonNode): GraphHealthSpec = {
-    val schedule = optText(n, "schedule").getOrElse("45 6 * * *")
-    graft.operators.Cron.parse(schedule)
     val spec = GraphHealthSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "45 6 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       iters = n.path("iters").asInt(4),
       minQMicro = n.path("minQMicro").asLong(100000L),
@@ -604,11 +489,9 @@ object ConfigReader {
   }
 
   private def parseDriftTask(n: JsonNode): DriftSpec = {
-    val schedule = optText(n, "schedule").getOrElse("25 6 * * *")
-    graft.operators.Cron.parse(schedule)
     val spec = DriftSpec(
       id = n.path("id").asInt(0),
-      schedule = schedule,
+      schedule = scheduleOf(n, "25 6 * * *"),
       sourceDir = reqText(n, "sourceDir"),
       bucketWidth = n.path("bucketWidth").asDouble(5.0),
       maxTvdMicro = n.path("maxTvdMicro").asLong(200000L))

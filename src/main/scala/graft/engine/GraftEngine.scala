@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.engine.ConfigReader.EngineConfig
 import graft.functions.TimeWindows
-import graft.model.{BackupSpec, TrainingExportSpec}
+import graft.model.{BackupSpec, Scheduled, TrainingExportSpec}
 import graft.operators.{Backup, Cron, Upsert}
 import graft.streaming.{Alerts, CdcPipeline, ControlLoop, DailyRollup, Dlq, Guardian, KvPipeline, Metrics, RateStream, SessionStream}
 
@@ -18,12 +19,15 @@ import graft.streaming.{Alerts, CdcPipeline, ControlLoop, DailyRollup, Dlq, Guar
   * config, compile every enabled task to per-table pipeline defs
   * ([[Compiler]]), and reconcile the running set per pipeline
   * ([[ControlLoop.Supervisor]] — only added/changed/dead pipelines
-  * restart; checkpoints make each swap lossless). Backup tasks compile
-  * to [[Cron]] jobs fired by [[tickCron]] (cronjob.go:100-192), and
-  * [[retryDlq]] sweeps every CDC pipeline's dead-letter queue, alerting
-  * on parked batches (mongodb.go:1876-1969). [[Guardian]] wraps each
-  * pipeline start (transient start failures back off and retry);
-  * crash-during-run is covered by the supervisor's restart-on-death.
+  * restart; checkpoints make each swap lossless). Every scheduled task
+  * family (backup, training export, optimize, the watchdogs, the store
+  * maintainers) compiles to [[Cron]] jobs through one table, each
+  * family in its own job-id namespace with one failure alert, fired by
+  * [[tickCron]] (cronjob.go:100-192), and [[retryDlq]] sweeps every
+  * CDC pipeline's dead-letter queue, alerting on parked batches
+  * (mongodb.go:1876-1969). [[Guardian]] wraps each pipeline start
+  * (transient start failures back off and retry); crash-during-run is
+  * covered by the supervisor's restart-on-death.
   *
   * Scale posture: the engine itself only moves metadata — specs, names,
   * cron fires. All data movement happens inside the checkpointed
@@ -41,20 +45,7 @@ final class GraftEngine(
   private val supervisor = new ControlLoop.Supervisor[Compiler.PipelineDef](startPipeline)
   @volatile private var stopping = false
   @volatile private var pipelineDefs = Map.empty[String, Compiler.PipelineDef]
-  @volatile private var backupSpecs: Seq[BackupSpec] = Nil
-  @volatile private var trainingSpecs: Seq[TrainingExportSpec] = Nil
-  @volatile private var optimizeSpecs: Seq[graft.model.OptimizeSpec] = Nil
-  @volatile private var dqSpecs: Seq[graft.model.DqSpec] = Nil
-  @volatile private var annIndexSpecs: Seq[graft.model.AnnIndexSpec] = Nil
-  @volatile private var checksumSpecs: Seq[graft.model.ChecksumSpec] = Nil
-  @volatile private var annEvalSpecs: Seq[graft.model.AnnEvalSpec] = Nil
-  @volatile private var modelEvalSpecs: Seq[graft.model.ModelEvalSpec] = Nil
-  @volatile private var retrainSpecs: Seq[graft.model.RetrainSpec] = Nil
-  @volatile private var driftSpecs: Seq[graft.model.DriftSpec] = Nil
-  @volatile private var graphHealthSpecs: Seq[graft.model.GraphHealthSpec] = Nil
-  @volatile private var erSpecs: Seq[graft.model.ErTaskSpec] = Nil
-  @volatile private var privacySpecs: Seq[graft.model.PrivacySpec] = Nil
-  @volatile private var graphSpecs: Seq[graft.model.GraphTaskSpec] = Nil
+  @volatile private var scheduledSpecs: Seq[Scheduled] = Nil
   @volatile private var scheduler = new Cron.Scheduler(Nil)
   @volatile private var recorder: Option[(String, Metrics.Recorder)] = None
 
@@ -176,8 +167,8 @@ final class GraftEngine(
   }
 
   /** One reload tick (main.go:92-145): parse config, rebuild the cron
-    * schedule if the backup set changed (an unchanged reload must keep
-    * the fired-this-minute dedup state), reconcile pipelines.
+    * schedule if the scheduled-task set changed (an unchanged reload
+    * must keep the fired-this-minute dedup state), reconcile pipelines.
     *
     * A config file that fails to LOAD (unreadable / syntactically
     * invalid — e.g. caught mid-edit, since config writes are not
@@ -217,225 +208,129 @@ final class GraftEngine(
       }
     }
     recorder.foreach(_._2.flush())
-    if (cfg.backupTasks != backupSpecs || cfg.trainingTasks != trainingSpecs ||
-        cfg.optimizeTasks != optimizeSpecs || cfg.dqTasks != dqSpecs ||
-        cfg.annIndexTasks != annIndexSpecs || cfg.checksumTasks != checksumSpecs ||
-        cfg.annEvalTasks != annEvalSpecs || cfg.modelEvalTasks != modelEvalSpecs ||
-        cfg.privacyTasks != privacySpecs || cfg.graphTasks != graphSpecs ||
-        cfg.retrainTasks != retrainSpecs || cfg.driftTasks != driftSpecs ||
-        cfg.graphHealthTasks != graphHealthSpecs || cfg.erTasks != erSpecs) {
-      backupSpecs = cfg.backupTasks
-      trainingSpecs = cfg.trainingTasks
-      optimizeSpecs = cfg.optimizeTasks
-      dqSpecs = cfg.dqTasks
-      annIndexSpecs = cfg.annIndexTasks
-      checksumSpecs = cfg.checksumTasks
-      annEvalSpecs = cfg.annEvalTasks
-      modelEvalSpecs = cfg.modelEvalTasks
-      privacySpecs = cfg.privacyTasks
-      graphSpecs = cfg.graphTasks
-      retrainSpecs = cfg.retrainTasks
-      driftSpecs = cfg.driftTasks
-      graphHealthSpecs = cfg.graphHealthTasks
-      erSpecs = cfg.erTasks
+    val specs = families.flatMap(_.specs(cfg))
+    if (specs != scheduledSpecs) {
+      scheduledSpecs = specs
       // carry the fired-this-minute state forward: a config edit landing
       // during a job's fire minute must not double-run surviving jobs
-      scheduler = new Cron.Scheduler(
-        backupSpecs.map(toJob) ++ trainingSpecs.map(toTrainingJob) ++
-          optimizeSpecs.map(toOptimizeJob) ++ dqSpecs.map(toDqJob) ++
-          annIndexSpecs.map(toAnnIndexJob) ++ checksumSpecs.map(toChecksumJob) ++
-          annEvalSpecs.map(toAnnEvalJob) ++ modelEvalSpecs.map(toModelEvalJob) ++
-          privacySpecs.map(toPrivacyJob) ++ graphSpecs.map(toGraphJob) ++
-          retrainSpecs.map(toRetrainJob) ++ driftSpecs.map(toDriftJob) ++
-          graphHealthSpecs.map(toGraphHealthJob) ++ erSpecs.map(toErJob),
-        scheduler.firedState)
+      scheduler = new Cron.Scheduler(families.flatMap(_.jobs(cfg, alerts)), scheduler.firedState)
     }
     pipelineDefs = defs
     supervisor.reconcile(pipelineDefs)
   }
 
-  private def toJob(spec: BackupSpec): Cron.Job =
-    Cron.Job(spec.id, spec.schedule, () =>
-      // a failing export alerts and yields the tick — it must not abort
-      // the scheduler pass for the other due jobs
-      try { GraftEngine.runBackup(spark, spec, clock()); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("backup_failed", s"backup${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
+  import GraftEngine.Family
 
-  private def toTrainingJob(spec: TrainingExportSpec): Cron.Job =
-    // id-offset into its own namespace: the scheduler's at-most-once
-    // dedup state is keyed by job id, and a backup task and a training
-    // task that share a numeric id must not share dedup entries
-    Cron.Job(GraftEngine.TrainingJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runTrainingExport(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("training_export_failed", s"training${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toOptimizeJob(spec: graft.model.OptimizeSpec): Cron.Job =
-    Cron.Job(GraftEngine.OptimizeJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runOptimize(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("optimize_failed", s"optimize${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toAnnIndexJob(spec: graft.model.AnnIndexSpec): Cron.Job =
-    Cron.Job(GraftEngine.AnnIndexJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runAnnIndexMaintenance(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("ann_index_failed", s"annIndex${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toAnnEvalJob(spec: graft.model.AnnEvalSpec): Cron.Job =
-    Cron.Job(GraftEngine.AnnEvalJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val recall = GraftEngine.runAnnEval(spark, spec)
-        if (recall < spec.minRecallMicro)
-          alerts.send(Alerts.Alert("ann_recall_low", s"annEval${spec.id}",
-            s"mean recall ${recall}u < bound ${spec.minRecallMicro}u"))
+  /** Every scheduled config family, in firing order. */
+  private val families: Seq[Family[_ <: Scheduled]] = Seq(
+    Family(_.backupTasks, 0, "backup_failed", "backup") { spec =>
+      GraftEngine.runBackup(spark, spec, clock())
+    },
+    Family(_.trainingTasks, GraftEngine.TrainingJobIdOffset,
+        "training_export_failed", "training") { spec =>
+      GraftEngine.runTrainingExport(spark, spec)
+    },
+    Family(_.optimizeTasks, GraftEngine.OptimizeJobIdOffset,
+        "optimize_failed", "optimize") { spec =>
+      GraftEngine.runOptimize(spark, spec)
+    },
+    Family(_.dqTasks, GraftEngine.DqJobIdOffset, "dq_failed", "dq") { spec =>
+      GraftEngine.runDqCheck(spark, spec).foreach { case (rule, n) =>
+        alerts.send(Alerts.Alert("dq_violation", s"dq${spec.id}/${spec.table}",
+          s"rule $rule: $n violations"))
       }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("ann_eval_failed", s"annEval${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toModelEvalJob(spec: graft.model.ModelEvalSpec): Cron.Job =
-    Cron.Job(GraftEngine.ModelEvalJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val m = GraftEngine.runModelEval(spark, spec)
-        m.kappaMicro.filter(_ < spec.minKappaMicro).foreach(k =>
-          alerts.send(Alerts.Alert("model_agreement_low", s"modelEval${spec.id}",
-            s"kappa ${k}u < bound ${spec.minKappaMicro}u")))
-        m.aucMicro.filter(_ < spec.minAucMicro).foreach(a =>
-          alerts.send(Alerts.Alert("model_auc_low", s"modelEval${spec.id}",
-            s"auc ${a}u < bound ${spec.minAucMicro}u")))
-        if (m.eceMicro > spec.maxEceMicro)
-          alerts.send(Alerts.Alert("model_calibration_off", s"modelEval${spec.id}",
-            s"ece ${m.eceMicro}u > bound ${spec.maxEceMicro}u"))
+    },
+    Family(_.annIndexTasks, GraftEngine.AnnIndexJobIdOffset,
+        "ann_index_failed", "annIndex") { spec =>
+      GraftEngine.runAnnIndexMaintenance(spark, spec)
+    },
+    Family(_.checksumTasks, GraftEngine.ChecksumJobIdOffset,
+        "checksum_failed", "checksum") { spec =>
+      GraftEngine.runChecksumCompare(spark, spec).foreach {
+        case (month, src, tgt) =>
+          alerts.send(Alerts.Alert("checksum_mismatch", s"checksum${spec.id}",
+            s"month $month: source $src != target $tgt"))
       }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("model_eval_failed", s"modelEval${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toPrivacyJob(spec: graft.model.PrivacySpec): Cron.Job =
-    Cron.Job(GraftEngine.PrivacyJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val a = GraftEngine.runPrivacyAudit(spark, spec)
-        if (a.minGroupSize < spec.minK)
-          alerts.send(Alerts.Alert("privacy_k_low", s"privacy${spec.id}/${spec.table}",
-            s"smallest QI group ${a.minGroupSize} < k=${spec.minK}"))
-        if (a.minLValue < spec.minL)
-          alerts.send(Alerts.Alert("privacy_l_low", s"privacy${spec.id}/${spec.table}",
-            s"least-diverse QI group l=${a.minLValue} < l=${spec.minL}"))
-        if (a.maxEmdMicro > spec.maxEmdMicro)
-          alerts.send(Alerts.Alert("privacy_t_distance_high",
-            s"privacy${spec.id}/${spec.table}",
-            s"furthest QI group EMD ${a.maxEmdMicro}u > t=${spec.maxEmdMicro}u"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("privacy_audit_failed", s"privacy${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toGraphJob(spec: graft.model.GraphTaskSpec): Cron.Job =
-    Cron.Job(GraftEngine.GraphJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runGraphMaintenance(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("graph_maintenance_failed", s"graph${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toDriftJob(spec: graft.model.DriftSpec): Cron.Job =
-    Cron.Job(GraftEngine.DriftJobIdOffset + spec.id, spec.schedule, () =>
-      try GraftEngine.runDriftAudit(spark, spec).foreach {
+    },
+    Family(_.annEvalTasks, GraftEngine.AnnEvalJobIdOffset,
+        "ann_eval_failed", "annEval") { spec =>
+      val recall = GraftEngine.runAnnEval(spark, spec)
+      if (recall < spec.minRecallMicro)
+        alerts.send(Alerts.Alert("ann_recall_low", s"annEval${spec.id}",
+          s"mean recall ${recall}u < bound ${spec.minRecallMicro}u"))
+    },
+    Family(_.modelEvalTasks, GraftEngine.ModelEvalJobIdOffset,
+        "model_eval_failed", "modelEval") { spec =>
+      val m = GraftEngine.runModelEval(spark, spec)
+      m.kappaMicro.filter(_ < spec.minKappaMicro).foreach(k =>
+        alerts.send(Alerts.Alert("model_agreement_low", s"modelEval${spec.id}",
+          s"kappa ${k}u < bound ${spec.minKappaMicro}u")))
+      m.aucMicro.filter(_ < spec.minAucMicro).foreach(a =>
+        alerts.send(Alerts.Alert("model_auc_low", s"modelEval${spec.id}",
+          s"auc ${a}u < bound ${spec.minAucMicro}u")))
+      if (m.eceMicro > spec.maxEceMicro)
+        alerts.send(Alerts.Alert("model_calibration_off", s"modelEval${spec.id}",
+          s"ece ${m.eceMicro}u > bound ${spec.maxEceMicro}u"))
+    },
+    Family(_.privacyTasks, GraftEngine.PrivacyJobIdOffset,
+        "privacy_audit_failed", "privacy") { spec =>
+      val a = GraftEngine.runPrivacyAudit(spark, spec)
+      if (a.minGroupSize < spec.minK)
+        alerts.send(Alerts.Alert("privacy_k_low", s"privacy${spec.id}/${spec.table}",
+          s"smallest QI group ${a.minGroupSize} < k=${spec.minK}"))
+      if (a.minLValue < spec.minL)
+        alerts.send(Alerts.Alert("privacy_l_low", s"privacy${spec.id}/${spec.table}",
+          s"least-diverse QI group l=${a.minLValue} < l=${spec.minL}"))
+      if (a.maxEmdMicro > spec.maxEmdMicro)
+        alerts.send(Alerts.Alert("privacy_t_distance_high",
+          s"privacy${spec.id}/${spec.table}",
+          s"furthest QI group EMD ${a.maxEmdMicro}u > t=${spec.maxEmdMicro}u"))
+    },
+    Family(_.graphTasks, GraftEngine.GraphJobIdOffset,
+        "graph_maintenance_failed", "graph") { spec =>
+      GraftEngine.runGraphMaintenance(spark, spec)
+    },
+    Family(_.retrainTasks, GraftEngine.RetrainJobIdOffset,
+        "model_retrain_failed", "retrain") { spec =>
+      val r = GraftEngine.runModelRetrain(spark, spec)
+      if (r.promoted)
+        alerts.send(Alerts.Alert("model_promoted", s"retrain${spec.id}",
+          s"candidate AUC ${r.candidateAucMicro}u replaces " +
+            r.incumbentAucMicro.fold("(founding)")(a => s"${a}u")))
+    },
+    Family(_.driftTasks, GraftEngine.DriftJobIdOffset, "drift_audit_failed", "drift") { spec =>
+      GraftEngine.runDriftAudit(spark, spec).foreach {
         case (eventType, tvd) =>
           alerts.send(Alerts.Alert("value_drift_high",
             s"drift${spec.id}/$eventType",
             s"TVD ${tvd}u > bound ${spec.maxTvdMicro}u"))
       }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("drift_audit_failed", s"drift${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toGraphHealthJob(spec: graft.model.GraphHealthSpec): Cron.Job =
-    Cron.Job(GraftEngine.GraphHealthJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        GraftEngine.runGraphHealth(spark, spec).foreach { h =>
-          if (h.qMicro < spec.minQMicro)
-            alerts.send(Alerts.Alert("graph_modularity_low",
+    },
+    Family(_.graphHealthTasks, GraftEngine.GraphHealthJobIdOffset,
+        "graph_health_failed", "graphHealth") { spec =>
+      GraftEngine.runGraphHealth(spark, spec).foreach { h =>
+        if (h.qMicro < spec.minQMicro)
+          alerts.send(Alerts.Alert("graph_modularity_low",
+            s"graphHealth${spec.id}",
+            s"Q ${h.qMicro}u < bound ${spec.minQMicro}u over " +
+              s"${h.nCommunities} communities"))
+      }
+      // drift watch (q298, opt-in): a structure that DECAYS epoch
+      // over epoch pages even while absolute Q still clears the bar
+      if (spec.maxDriftMicro != Long.MaxValue)
+        GraftEngine.runGraphEvolution(spark, spec).foreach {
+          case (epoch, drop) =>
+            alerts.send(Alerts.Alert("graph_modularity_drift",
               s"graphHealth${spec.id}",
-              s"Q ${h.qMicro}u < bound ${spec.minQMicro}u over " +
-                s"${h.nCommunities} communities"))
+              s"epoch $epoch dropped ${drop}u > bound " +
+                s"${spec.maxDriftMicro}u"))
         }
-        // drift watch (q298, opt-in): a structure that DECAYS epoch
-        // over epoch pages even while absolute Q still clears the bar
-        if (spec.maxDriftMicro != Long.MaxValue)
-          GraftEngine.runGraphEvolution(spark, spec).foreach {
-            case (epoch, drop) =>
-              alerts.send(Alerts.Alert("graph_modularity_drift",
-                s"graphHealth${spec.id}",
-                s"epoch $epoch dropped ${drop}u > bound " +
-                  s"${spec.maxDriftMicro}u"))
-          }
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("graph_health_failed",
-          s"graphHealth${spec.id}", String.valueOf(e.getMessage)))
-      })
+    },
+    Family(_.erTasks, GraftEngine.ErJobIdOffset, "er_maintenance_failed", "er") { spec =>
+      GraftEngine.runErMaintenance(spark, spec)
+    })
 
-  private def toErJob(spec: graft.model.ErTaskSpec): Cron.Job =
-    Cron.Job(GraftEngine.ErJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runErMaintenance(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("er_maintenance_failed", s"er${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toRetrainJob(spec: graft.model.RetrainSpec): Cron.Job =
-    Cron.Job(GraftEngine.RetrainJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val r = GraftEngine.runModelRetrain(spark, spec)
-        if (r.promoted)
-          alerts.send(Alerts.Alert("model_promoted", s"retrain${spec.id}",
-            s"candidate AUC ${r.candidateAucMicro}u replaces " +
-              r.incumbentAucMicro.fold("(founding)")(a => s"${a}u")))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("model_retrain_failed", s"retrain${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toChecksumJob(spec: graft.model.ChecksumSpec): Cron.Job =
-    Cron.Job(GraftEngine.ChecksumJobIdOffset + spec.id, spec.schedule, () =>
-      try GraftEngine.runChecksumCompare(spark, spec).foreach {
-        case (month, src, tgt) =>
-          alerts.send(Alerts.Alert("checksum_mismatch", s"checksum${spec.id}",
-            s"month $month: source $src != target $tgt"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("checksum_failed", s"checksum${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toDqJob(spec: graft.model.DqSpec): Cron.Job =
-    Cron.Job(GraftEngine.DqJobIdOffset + spec.id, spec.schedule, () =>
-      try GraftEngine.runDqCheck(spark, spec).foreach { case (rule, n) =>
-        alerts.send(Alerts.Alert("dq_violation", s"dq${spec.id}/${spec.table}",
-          s"rule $rule: $n violations"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("dq_failed", s"dq${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  /** Minute tick for scheduled backups; returns fired job ids. */
+  /** Minute tick for every scheduled task; returns fired job ids. */
   def tickCron(now: LocalDateTime = clock()): Seq[Int] = scheduler.tick(now)
 
   // --- incremental count monitoring ----------------------------------
@@ -786,6 +681,27 @@ object GraftEngine {
   private lazy val jdbcBoundOnce: Unit =
     java.sql.DriverManager.setLoginTimeout(JdbcConnectBoundSecs)
   private[engine] def ensureJdbcConnectBound(): Unit = jdbcBoundOnce
+
+  /** One row of the scheduled-task table: where the family's specs sit
+    * in the config, its job-id namespace (the scheduler's at-most-once
+    * dedup state is keyed by job id, so two families sharing a numeric
+    * task id must not share dedup entries), the alert a failed run
+    * raises (subject `<prefix><id>`), and the run itself, which raises
+    * the family's own threshold alerts. */
+  private final case class Family[S <: Scheduled](tasks: EngineConfig => Seq[S],
+      idOffset: Int, failedKind: String, prefix: String)(run: S => Unit) {
+    def specs(cfg: EngineConfig): Seq[Scheduled] = tasks(cfg)
+    def jobs(cfg: EngineConfig, alerts: Alerts.Sink): Seq[Cron.Job] = tasks(cfg).map { spec =>
+      Cron.Job(idOffset + spec.id, spec.schedule, () =>
+        // a failing run alerts and yields the tick — it must not abort
+        // the scheduler pass for the other due jobs
+        try run(spec)
+        catch { case e: Exception =>
+          alerts.send(Alerts.Alert(failedKind, s"$prefix${spec.id}",
+            String.valueOf(e.getMessage)))
+        })
+    }
+  }
 
   /** Training-task job ids live [[TrainingJobIdOffset]] above backup ids
     * so the two task families never share scheduler-dedup keys. */

@@ -91,7 +91,7 @@ object DistinctCard {
   final class RewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
       plan.transformAllExpressions {
-        case s @ Size(ArrayDistinct(child), false)
+        case Size(ArrayDistinct(child), false)
             if child.dataType.isInstanceOf[ArrayType] &&
               child.dataType.asInstanceOf[ArrayType].elementType == StringType =>
           StringDistinctCard(child)

@@ -70,6 +70,15 @@ final case class SyncTaskSpec(
     forecastMonitor: Boolean = false, // seasonal HW-residual alerts off the change stream
     valueForecastMonitor: Boolean = false) // seasonal HW-residual alerts on the after-image CENT MASS
 
+/** A config task the engine runs on a five-field cron schedule
+  * (cronjob.go:100-192): `id` is unique within its family, and the
+  * engine's scheduled-task table maps each family to its own job-id
+  * namespace. */
+trait Scheduled {
+  def id: Int
+  def schedule: String
+}
+
 /** A scheduled entity-resolution store maintenance task — the
   * append/probe steady state of [[graft.operators.Dedup.appendToEntityStore]]
   * under the engine's cron discipline: each run appends the source's
@@ -82,7 +91,7 @@ final case class ErTaskSpec(
     schedule: String = "15 5 * * *",
     sourceDir: String = "",   // table root holding `customer`
     storeDir: String = "",    // entity store root
-    compact: Boolean = false)
+    compact: Boolean = false) extends Scheduled
 
 /** Backup/export task spec (reference pkg/backup/executor.go:157-271). */
 final case class BackupTableSpec(
@@ -100,7 +109,7 @@ final case class BackupSpec(
     schedule: String = "0 2 * * *", // five-field cron (cronjob.go:100-192)
     sourceDir: String = "",         // table root the export scans
     outDir: String = "",            // artifact root
-    uploadDir: Option[String] = None) // zip + store destination (≙ gcsAddress)
+    uploadDir: Option[String] = None) extends Scheduled // zip + store destination (≙ gcsAddress)
 
 /** A scheduled training-data build: the curate → epoch-mix → pack
   * chain ([[graft.operators.TextOps.trainingExport]]) run as a cron
@@ -114,7 +123,7 @@ final case class TrainingExportSpec(
     outDir: String = "",       // manifest root
     minQuality: Double = 0.66,
     capacity: Int = 512,
-    rates: Map[String, Double] = Map.empty)
+    rates: Map[String, Double] = Map.empty) extends Scheduled
 
 /** A scheduled layout-maintenance job (the lakehouse `OPTIMIZE ZORDER
   * BY` face): rewrite a parquet table Z-clustered on two integer
@@ -128,7 +137,7 @@ final case class OptimizeSpec(
     sourceDir: String = "",    // input parquet table (file or dir)
     outDir: String = "",       // optimized mirror
     zorderBy: (String, String) = ("", ""),
-    numFiles: Int = 8)
+    numFiles: Int = 8) extends Scheduled
 
 /** A scheduled data-quality gate: the declarative rule list
   * ([[graft.operators.DataQuality]]) evaluated against one table on a
@@ -140,7 +149,7 @@ final case class DqSpec(
     schedule: String = "0 6 * * *",
     sourceDir: String = "",
     table: String = "",
-    rules: Seq[graft.operators.DataQuality.Rule] = Nil)
+    rules: Seq[graft.operators.DataQuality.Rule] = Nil) extends Scheduled
 
 /** A scheduled source↔target CONTENT reconciliation: both ends'
   * monthly XOR checksums ([[graft.operators.Relational.monthlyChecksums]])
@@ -152,7 +161,7 @@ final case class ChecksumSpec(
     id: Int,
     schedule: String = "30 5 * * *",
     sourceDir: String = "",
-    targetDir: String = "")
+    targetDir: String = "") extends Scheduled
 
 /** A scheduled ANN index-quality watchdog: recall@k of the stored IVF
   * index's probes against exact-cosine truth over the corpus of
@@ -167,7 +176,7 @@ final case class AnnEvalSpec(
     indexDir: String = "",      // stored IVF root
     k: Int = 5,
     nprobe: Int = 4,
-    minRecallMicro: Long = 800000L)
+    minRecallMicro: Long = 800000L) extends Scheduled
 
 /** A scheduled quality-model eval watchdog — the model-drift gauge for
   * the classifier gating the curation pipeline: Cohen's kappa against
@@ -184,7 +193,7 @@ final case class ModelEvalSpec(
     sourceDir: String = "",     // documents corpus root
     minKappaMicro: Long = 200000L,
     minAucMicro: Long = 700000L,
-    maxEceMicro: Long = 150000L)
+    maxEceMicro: Long = 150000L) extends Scheduled
 
 /** A scheduled co-purchase-graph maintenance job — `annIndexTasks`'
   * discipline for the graph store: reconcile the edge store against
@@ -197,7 +206,7 @@ final case class GraphTaskSpec(
     schedule: String = "20 5 * * *",
     sourceDir: String = "",   // orders-of-record root (lineitem table)
     storeDir: String = "",    // graph store root (edges/ + baskets/)
-    compact: Boolean = false)
+    compact: Boolean = false) extends Scheduled
 
 /** A scheduled graph-health audit over the co-purchase graph — the
   * watchdog face of the q239 datasheet / q267 modularity pair: each
@@ -223,7 +232,7 @@ final case class GraphHealthSpec(
     // optional persisted epoch-gauge store: when set, each audit
     // appends newly-closed epochs' gauges and reads the series
     // through the store — one open-epoch LPA per run instead of N
-    storeDir: String = "")
+    storeDir: String = "") extends Scheduled
 
 /** A scheduled distribution-drift audit over the event stream — the
   * watchdog face of the q253 monitor: each run computes the per-type
@@ -237,7 +246,7 @@ final case class DriftSpec(
     schedule: String = "25 6 * * *",
     sourceDir: String = "",
     bucketWidth: Double = 5.0,
-    maxTvdMicro: Long = 200000L)
+    maxTvdMicro: Long = 200000L) extends Scheduled
 
 /** A scheduled quality-model retrain — the promote-if-better loop
   * closing the q245 lifecycle: train candidate weights on the salted
@@ -255,7 +264,7 @@ final case class RetrainSpec(
     storeDir: String = "",    // model registry root
     iters: Int = 20,
     lr: Long = 16L,
-    minGainMicro: Long = 5000L)
+    minGainMicro: Long = 5000L) extends Scheduled
 
 /** A scheduled privacy-risk audit over a shared/exported table — the
   * watchdog face of the k-anonymity / l-diversity / t-closeness trio:
@@ -280,7 +289,7 @@ final case class PrivacySpec(
     bandWidth: Long = 1000L,
     minK: Long = 5L,
     minL: Long = 2L,
-    maxEmdMicro: Long = 200000L)
+    maxEmdMicro: Long = 200000L) extends Scheduled
 
 /** A scheduled vector-index maintenance job — the index-ops face of
   * the ANN family, composing the persisted-index operators the way
@@ -302,7 +311,7 @@ final case class AnnIndexSpec(
     codes: Boolean = true,
     jl: Boolean = false,
     trainPq: Boolean = false,
-    compact: Boolean = false)
+    compact: Boolean = false) extends Scheduled
 
 /** A resident decontamination pipeline
   * ([[graft.streaming.DecontamStream]]): a JSON document stream at

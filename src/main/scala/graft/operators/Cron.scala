@@ -2,11 +2,13 @@ package graft.operators
 
 import java.time.LocalDateTime
 
-/** ST13 — scheduled backup jobs (reference pkg/backup/cronjob.go:100-192).
+/** ST13 — scheduled task jobs (reference pkg/backup/cronjob.go:100-192).
   *
   * The reference materializes each backup task's five-field cron
   * schedule into the system crontab, which curls the task's execute
-  * endpoint on schedule. Re-expressed engine-side: a tiny cron
+  * endpoint on schedule. The engine schedules every task family that
+  * way (backups, training exports, optimize, the watchdogs and the
+  * store maintainers). Re-expressed engine-side: a tiny cron
   * evaluator plus an in-process scheduler that fires due jobs on each
   * minute tick — no OS crontab, same five-field semantics, and the
   * same at-most-once-per-minute firing contract (a crontab line runs
@@ -61,8 +63,9 @@ object Cron {
     e.minute(t.getMinute) && e.hour(t.getHour) && e.month(t.getMonthValue) && dayMatch
   }
 
-  /** A schedulable job: the engine-side stand-in for one BackupTask row
-    * (cronjob.go:107-125) — `run` executes the backup export. */
+  /** A schedulable job: the engine-side stand-in for one scheduled task
+    * row (a BackupTask in cronjob.go:107-125) — `run` executes the task
+    * and owns its failure handling. */
   final case class Job(id: Int, schedule: String, run: () => Unit) {
     val expr: CronExpr = parse(schedule)
   }

@@ -294,7 +294,6 @@ object EventFlow {
     * one aggregate on that metadata-sized frame. */
   def purchaseReachability(spark: SparkSession, dir: String,
       steps: Int = 5, target: String = "purchase"): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val trans = PlanCache.tracked(
       Tables(spark, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))

@@ -2301,7 +2301,6 @@ object Relational {
     * years × nations grid; everything after runs there. */
   def marketConcentration(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val rev = Tables(spark, dir, "orders")
       .join(Tables(spark, dir, "customer"),
         col("o_custkey") === col("c_custkey"))

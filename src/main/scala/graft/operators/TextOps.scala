@@ -2074,7 +2074,6 @@ object TextOps {
     * deciles, counts and micro shares. One scan, one ≤100-cell
     * hash-agg, one windowed share. */
   def lengthQualityHistogram(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val qTick = round(Text.qualityScore(col("text")) * 10000).cast("long")
     Tables(spark, dir, "documents")
       .select((Text.tokenCount(col("text")).cast("long")).as("n_tokens"),

@@ -59,7 +59,7 @@ object IvmStream {
     KeyState(r.op != "delete", b, cents, r.tsMicros, r.offset)
   }
 
-  private def foldKey(buckets: Int)(key: String, rows: Iterator[ChangeRow],
+  private def foldKey(buckets: Int)(rows: Iterator[ChangeRow],
       state: GroupState[KeyState]): Iterator[DeltaRow] = {
     val winner = rows.maxBy(r => (r.tsMicros, r.offset))
     val prev = state.getOption
@@ -98,7 +98,7 @@ object IvmStream {
       // of crashing the primitive-Long encoder
       .groupByKey(r => String.valueOf(r.key))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        foldKey(view.buckets))
+        (_, rows, state) => foldKey(view.buckets)(rows, state))
   }
 
   def start(spark: SparkSession, sourceDir: String, storeDir: String,

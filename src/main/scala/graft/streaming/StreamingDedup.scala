@@ -83,7 +83,7 @@ object StreamingDedup {
     * watermark − horizon before pairing, and re-arm their timeout at
     * newest-member-time + horizon. */
   private def dedupeBucket(threshold: Double, horizonMs: Option[Long])(
-      key: (Int, String), docs: Iterator[BandedDoc],
+      docs: Iterator[BandedDoc],
       state: GroupState[BucketMembers]): Iterator[DupPair] = {
     if (horizonMs.isDefined && state.hasTimedOut) {
       // idle past the horizon: every member is older than any document
@@ -164,7 +164,7 @@ object StreamingDedup {
       .as[BandedDoc]
       .groupByKey(d => (d.band, d.bucket))
       .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        dedupeBucket(threshold, horizonMs))
+        (_, docs, state) => dedupeBucket(threshold, horizonMs)(docs, state))
   }
 
   /** Start online dedup over a JSONL document stream (`doc_id`, `text`,
