@@ -101,20 +101,20 @@ class CdcSpec extends SparkSpec {
       }
 
     CdcPipeline.start(spark, cfg).awaitTermination()
-    val got = spark.read.parquet(cfg.targetDir)
+    val got = Upsert.readTarget(spark, cfg.targetDir)
     val want = Cdc.finalState(spark, sf)
     assert(normalize(got.withColumnRenamed("key", "user_id")) == normalize(want))
 
     // restart with no new input: checkpoint prevents re-processing; state unchanged
     CdcPipeline.start(spark, cfg).awaitTermination()
-    val again = spark.read.parquet(cfg.targetDir)
+    val again = Upsert.readTarget(spark, cfg.targetDir)
     assert(normalize(again.withColumnRenamed("key", "user_id")) == normalize(want))
 
     // replay the FULL log through a fresh checkpoint (simulated duplicate
     // delivery): merge idempotence keeps the state identical
     val cfg2 = cfg.copy(checkpointDir = tmp() + "/ckpt2")
     CdcPipeline.start(spark, cfg2).awaitTermination()
-    val replayed = spark.read.parquet(cfg.targetDir)
+    val replayed = Upsert.readTarget(spark, cfg.targetDir)
     assert(normalize(replayed.withColumnRenamed("key", "user_id")) == normalize(want))
     changes.unpersist()
   }
@@ -219,7 +219,7 @@ class CdcSpec extends SparkSpec {
     drop(2 * maxOff / 3 + 1, maxOff)
     CdcPipeline.start(spark, cfg).awaitTermination()
     val want = Cdc.finalState(spark, sf)
-    assert(normalize(spark.read.parquet(cfg.targetDir)
+    assert(normalize(Upsert.readTarget(spark, cfg.targetDir)
       .withColumnRenamed("key", "user_id")) == normalize(want))
     val tok2 = ChangeLogMicroBatchStream.resumeToken(spark, cfg.checkpointDir)
     assert(tok2.exists(t => t.n >= 2 && t.n <= 3), tok2.toString)
@@ -228,7 +228,7 @@ class CdcSpec extends SparkSpec {
     // token stays at the committed prefix (no batch constructs, so the
     // lazy source-commit cannot advance — and must not)
     CdcPipeline.start(spark, cfg).awaitTermination()
-    assert(normalize(spark.read.parquet(cfg.targetDir)
+    assert(normalize(Upsert.readTarget(spark, cfg.targetDir)
       .withColumnRenamed("key", "user_id")) == normalize(want))
     val tok3 = ChangeLogMicroBatchStream.resumeToken(spark, cfg.checkpointDir)
     assert(tok3.exists(_.n <= 3), tok3.toString)
@@ -240,7 +240,7 @@ class CdcSpec extends SparkSpec {
     CdcPipeline.start(spark, cfg).awaitTermination()
     assert(ChangeLogMicroBatchStream.resumeToken(spark, cfg.checkpointDir)
       .exists(_.n >= 3))
-    assert(normalize(spark.read.parquet(cfg.targetDir)
+    assert(normalize(Upsert.readTarget(spark, cfg.targetDir)
       .withColumnRenamed("key", "user_id")) == normalize(want))
 
     // the custom source and the generic file stream converge to the
@@ -249,7 +249,7 @@ class CdcSpec extends SparkSpec {
       targetDir = tmp() + "/target_json", checkpointDir = tmp() + "/ckpt_json",
       dlqDir = tmp() + "/dlq_json")
     CdcPipeline.start(spark, cfgJson).awaitTermination()
-    assert(normalize(spark.read.parquet(cfgJson.targetDir)
+    assert(normalize(Upsert.readTarget(spark, cfgJson.targetDir)
       .withColumnRenamed("key", "user_id")) == normalize(want))
 
     // admission control (ST3 parity): capped at one file per trigger,
@@ -259,7 +259,7 @@ class CdcSpec extends SparkSpec {
       targetDir = tmp() + "/target_cap", checkpointDir = tmp() + "/ckpt_cap",
       dlqDir = tmp() + "/dlq_cap")
     CdcPipeline.start(spark, cfgCap).awaitTermination()
-    assert(normalize(spark.read.parquet(cfgCap.targetDir)
+    assert(normalize(Upsert.readTarget(spark, cfgCap.targetDir)
       .withColumnRenamed("key", "user_id")) == normalize(want))
     val offsetsDir = new org.apache.hadoop.fs.Path(cfgCap.checkpointDir, "offsets")
     val ofs = offsetsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -285,7 +285,7 @@ class CdcSpec extends SparkSpec {
       ignoreDeleteOps = true)
     ChangeEvents.fromEvents(spark, sf).coalesce(1).write.mode("append").json(src)
     CdcPipeline.start(spark, cfg).awaitTermination()
-    val got = spark.read.parquet(cfg.targetDir)
+    val got = Upsert.readTarget(spark, cfg.targetDir)
     val want = Cdc.finalStateIgnoreDeletes(spark, sf)
     assert(normalize(got.withColumnRenamed("key", "user_id")) == normalize(want))
   }
@@ -327,7 +327,7 @@ class CdcSpec extends SparkSpec {
       .withColumn("key", col("key") + 1000000L)
       .coalesce(1).write.mode("append").json(src)
     CdcPipeline.start(spark, cfg).awaitTermination()
-    val got = spark.read.parquet(cfg.targetDir)
+    val got = Upsert.readTarget(spark, cfg.targetDir)
     assert(got.filter(col("key") >= 1000000L).count() == 0)
     val want = Cdc.finalState(spark, sf)
     assert(normalize(got.withColumnRenamed("key", "user_id")) == normalize(want))
@@ -340,7 +340,7 @@ class CdcSpec extends SparkSpec {
     assert(Upsert.snapshot(spark, s1, "key", dir))
     val s2 = Seq((2L, 2.0)).toDF("key", "v")
     assert(!Upsert.snapshot(spark, s2, "key", dir)) // skipped
-    assert(spark.read.parquet(dir).select("key").head().getLong(0) == 1L)
+    assert(Upsert.readTarget(spark, dir).select("key").head().getLong(0) == 1L)
   }
 
   test("snapshot's schema sidecar survives its static overwrite; a sidecar-only dir re-snapshots") {

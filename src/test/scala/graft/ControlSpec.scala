@@ -6,7 +6,7 @@ import java.time.LocalDateTime
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cdc, Cron}
+import graft.operators.{Cdc, Cron, Upsert}
 import graft.streaming.{CdcPipeline, ChangeEvents, ControlLoop}
 
 /** ST11 (config hot-reload) + ST13 (scheduled jobs). */
@@ -121,7 +121,7 @@ class ControlSpec extends SparkSpec {
       val q1 = sup.activeQueries("cdc")
       q1.processAllAvailable()
       val want = normalize(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
-      assert(normalize(spark.read.parquet(cfg.targetDir)) == want)
+      assert(normalize(Upsert.readTarget(spark, cfg.targetDir)) == want)
 
       // identical spec: kept running, same query instance
       val r2 = sup.reconcile(Map("cdc" -> cfg))
@@ -135,7 +135,7 @@ class ControlSpec extends SparkSpec {
       val q2 = sup.activeQueries("cdc")
       assert(!(q2 eq q1) && !q1.isActive && q2.isActive)
       q2.processAllAvailable()
-      assert(normalize(spark.read.parquet(cfg.targetDir)) == want)
+      assert(normalize(Upsert.readTarget(spark, cfg.targetDir)) == want)
 
       // spec removed: pipeline stopped
       val r4 = sup.reconcile(Map.empty)
@@ -163,7 +163,7 @@ class ControlSpec extends SparkSpec {
       assert(r2.started == Set("cdc") && r2.stopped == Set("cdc")) // restarted, same spec
       sup.activeQueries("cdc").awaitTermination()
       // checkpoint honored: the restart re-processed nothing
-      val got = normalize(spark.read.parquet(cfg.targetDir))
+      val got = normalize(Upsert.readTarget(spark, cfg.targetDir))
       val want = normalize(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
       assert(got == want)
     } finally sup.stopAll()

@@ -190,8 +190,8 @@ class EngineSpec extends SparkSpec {
       engine.processAllAvailable()
 
       val cdcWant = normCdc(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
-      assert(normCdc(spark.read.parquet(s"$root/tgt/events")) == cdcWant)
-      val kvGot = graft.operators.Upsert.liveRows(spark.read.parquet(s"$root/kvtgt/kv"))
+      assert(normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")) == cdcWant)
+      val kvGot = graft.operators.Upsert.liveRows(graft.operators.Upsert.readTarget(spark, s"$root/kvtgt/kv"))
         .select("key", "kind", "value", "ttlMs").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2),
           if (r.isNullAt(3)) -99L else r.getLong(3))).toSet
@@ -202,7 +202,7 @@ class EngineSpec extends SparkSpec {
       assert(kvGot == kvWant)
 
       // ---- count monitoring: the config's countQuery runs on the target
-      val wantCount = spark.read.parquet(s"$root/tgt/events")
+      val wantCount = graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")
         .filter(col("value") > 50).count()
       assert(engine.countReport() == Map("task1/events" -> wantCount) && wantCount > 0)
       // incremental: a tick over an UNTOUCHED target is answered from
@@ -252,7 +252,7 @@ class EngineSpec extends SparkSpec {
       engine.processAllAvailable()
 
       // task3: fieldSecurity flowed from JSON into the stream — every k masked
-      val masked = graft.operators.Upsert.liveRows(spark.read.parquet(s"$root/tgt/events2"))
+      val masked = graft.operators.Upsert.liveRows(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events2"))
       assert(masked.count() == cdcWant.size)
       assert(masked.select("k").distinct().collect().map(_.getString(0)).toSet == Set("****"))
 
@@ -260,7 +260,7 @@ class EngineSpec extends SparkSpec {
       // swap, and the swapped pipeline honors its new ignoreDeleteOps —
       // deletes for two live keys arrive and are ignored
       val victims = graft.operators.Upsert.liveRows(
-          spark.read.parquet(s"$root/tgt/events")).select("key")
+          graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")).select("key")
         .limit(2).collect().map(_.getLong(0))
       import org.apache.spark.sql.Row
       val lateDeletes = spark.createDataFrame(
@@ -270,7 +270,7 @@ class EngineSpec extends SparkSpec {
         }: _*), ChangeEvents.schema)
       lateDeletes.coalesce(1).write.mode("append").json(s"$root/src/events")
       engine.processAllAvailable()
-      val after = normCdc(spark.read.parquet(s"$root/tgt/events"))
+      val after = normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events"))
       assert(after == cdcWant) // state unchanged: deletes ignored, nothing re-replayed
       assert(alerts.drain().isEmpty) // healthy run: no alerts fired
 
@@ -284,13 +284,13 @@ class EngineSpec extends SparkSpec {
       // ---- tombstone reclamation: every DLQ is empty so deletes are
       // final — the sweep drops the guard rows (CDC and KV targets
       // both saw deletes) without disturbing the live state
-      assert(spark.read.parquet(s"$root/tgt/events").filter(col("deleted")).count() > 0)
-      assert(spark.read.parquet(s"$root/kvtgt/kv").filter(col("deleted")).count() > 0)
+      assert(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events").filter(col("deleted")).count() > 0)
+      assert(graft.operators.Upsert.readTarget(spark, s"$root/kvtgt/kv").filter(col("deleted")).count() > 0)
       val swept = engine.sweepTombstones()
       assert(swept.getOrElse("task1/events", 0) > 0 && swept.getOrElse("task2/kv", 0) > 0)
-      assert(spark.read.parquet(s"$root/tgt/events").filter(col("deleted")).count() == 0)
-      assert(spark.read.parquet(s"$root/kvtgt/kv").filter(col("deleted")).count() == 0)
-      assert(normCdc(spark.read.parquet(s"$root/tgt/events")) == cdcWant)
+      assert(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events").filter(col("deleted")).count() == 0)
+      assert(graft.operators.Upsert.readTarget(spark, s"$root/kvtgt/kv").filter(col("deleted")).count() == 0)
+      assert(normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")) == cdcWant)
       // the swept pipelines were stopped; the next poll restarts them
       val r3 = engine.pollOnce()
       assert(Set("task1/events", "task2/kv").subsetOf(r3.started))
@@ -449,7 +449,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       engine.processAllAvailable()
-      val got = normCdc(spark.read.parquet(s"$root/tgt/events"))
+      val got = normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events"))
       val stream = normCdc(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
       assert(got == stream ++ Set((9001L, 1.0, 11L), (9002L, 2.0, 12L)))
 
@@ -462,7 +462,7 @@ class EngineSpec extends SparkSpec {
       val r = engine.pollOnce()
       assert(r.stopped == Set("task5/events") && r.started == Set("task5/events"))
       engine.processAllAvailable()
-      assert(normCdc(spark.read.parquet(s"$root/tgt/events")) ==
+      assert(normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")) ==
         stream ++ Set((9001L, 1.0, 11L), (9002L, 2.0, 12L))) // 9009 NOT applied
     } finally engine.stop()
   }
@@ -550,7 +550,7 @@ class EngineSpec extends SparkSpec {
         (java.sql.Timestamp.valueOf("2024-03-01 15:00:00"), "insert", 2L)))
       // the CDC sibling ran over the same source unperturbed
       assert(graft.operators.Upsert.liveRows(
-        spark.read.parquet(s"$root/tgt/events")).count() == 3)
+        graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")).count() == 3)
       // removing the flag stops ONLY the rollup on the next reconcile
       writeConfig(cfgPath,
         s"""{ "syncTasks": [
@@ -610,7 +610,7 @@ class EngineSpec extends SparkSpec {
       assert(!engine.activeQueries("task9/events").isActive)
       // …and the DLQ'd batch is now applied
       val want = normCdc(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
-      assert(normCdc(spark.read.parquet(s"$root/tgt/events")) == want)
+      assert(normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")) == want)
       // next poll restarts it from the checkpoint (restart-on-death)
       val r = engine.pollOnce()
       assert(r.started == Set("task9/events"))
@@ -734,12 +734,12 @@ class EngineSpec extends SparkSpec {
     writeConfig(cfgPath,
       s"""{ "syncTasks": [ ${syncTaskJson(1, "events", root)} ], "backupTasks": [] }""")
     GraftEngine.main(Array(cfgPath, "--once"))
-    val got = normCdc(spark.read.parquet(s"$root/tgt/events"))
+    val got = normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events"))
     val want = normCdc(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
     assert(got == want)
     // second --once with no new input: checkpointed no-op, state intact
     GraftEngine.main(Array(cfgPath, "--once"))
-    assert(normCdc(spark.read.parquet(s"$root/tgt/events")) == want)
+    assert(normCdc(graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")) == want)
   }
   test("config sessionize: finalized per-key sessions land in a durable log through the supervisor") {
     val root = tmp()
@@ -777,7 +777,7 @@ class EngineSpec extends SparkSpec {
       assert(got.contains((1L, 2L, java.sql.Timestamp.valueOf("2024-03-01 10:00:00"))))
       // the CDC sibling ran over the same source unperturbed
       assert(graft.operators.Upsert.liveRows(
-        spark.read.parquet(s"$root/tgt/events")).count() == 2)
+        graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")).count() == 2)
       // removing the flag stops ONLY the session rider on reconcile
       writeConfig(cfgPath,
         s"""{ "syncTasks": [
@@ -832,7 +832,7 @@ class EngineSpec extends SparkSpec {
       assert(got.contains(("2024-03-01T09:45:00Z", "insert", 2L, 0L)))
       // the CDC sibling ran over the same source unperturbed
       assert(graft.operators.Upsert.liveRows(
-        spark.read.parquet(s"$root/tgt/events")).count() >= 2)
+        graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")).count() >= 2)
     } finally engine.stop()
   }
 
@@ -882,7 +882,7 @@ class EngineSpec extends SparkSpec {
       assert(engine.anomalyHistory("task15/events#anomalies").count() == 6)
       // the CDC sibling ran over the same source unperturbed
       assert(graft.operators.Upsert.liveRows(
-        spark.read.parquet(s"$root/tgt/events")).count() >= 40)
+        graft.operators.Upsert.readTarget(spark, s"$root/tgt/events")).count() >= 40)
     } finally engine.stop()
   }
 

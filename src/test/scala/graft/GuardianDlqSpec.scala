@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Cdc
+import graft.operators.{Cdc, Upsert}
 import graft.streaming.{CdcPipeline, ChangeEvents, Guardian}
 
 /** ST10 (bounded DLQ retry) + S3 (restart guardian) coverage, including
@@ -83,7 +83,7 @@ class GuardianDlqSpec extends SparkSpec {
     fixTarget(cfg.targetDir)
     assert(CdcPipeline.retryDlq(spark, cfg2) == CdcPipeline.DlqStats(succeeded = 1))
     assert(!Files.exists(Paths.get(s"${cfg2.dlqDir}/batch_0"))) // consumed
-    val got = normalize(spark.read.parquet(cfg.targetDir))
+    val got = normalize(Upsert.readTarget(spark, cfg.targetDir))
     val want = normalize(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
     assert(got == want)
     // second pass: nothing left to do
@@ -108,7 +108,7 @@ class GuardianDlqSpec extends SparkSpec {
     graft.operators.Upsert.mergeIntoParquet(spark, tgt, older, "key") // the late retry
     // the stale update must not regress key 1; the stale delete must not
     // kill the later re-created key 7; the DLQ-only insert still lands
-    assert(normalize(spark.read.parquet(tgt)) ==
+    assert(normalize(Upsert.readTarget(spark, tgt)) ==
       Set((1L, 99.0, 9L), (7L, 70.0, 7L), (5L, 50.0, 5L)))
 
     // same-second CDC timestamps: recency falls back to the persisted
@@ -118,7 +118,7 @@ class GuardianDlqSpec extends SparkSpec {
     graft.operators.Upsert.mergeIntoParquet(spark, tgt, tieStale, "key")
     val replaySame = mkBatch(("update", 1L, 99.0, 9L, "2024-02-01 00:00:00", 10L))
     graft.operators.Upsert.mergeIntoParquet(spark, tgt, replaySame, "key")
-    assert(normalize(spark.read.parquet(tgt)) ==
+    assert(normalize(Upsert.readTarget(spark, tgt)) ==
       Set((1L, 99.0, 9L), (7L, 70.0, 7L), (5L, 50.0, 5L)))
   }
 
@@ -138,18 +138,18 @@ class GuardianDlqSpec extends SparkSpec {
     // tombstones this was the documented resurrect window
     graft.operators.Upsert.mergeIntoParquet(spark, tgt,
       mkBatch(("update", 9L, 91.0, 9L, "2024-02-01 00:00:00", 10L)), "key")
-    assert(normalize(spark.read.parquet(tgt)) == Set.empty)
-    val guard = spark.read.parquet(tgt).filter(col("deleted"))
+    assert(normalize(Upsert.readTarget(spark, tgt)) == Set.empty)
+    val guard = Upsert.readTarget(spark, tgt).filter(col("deleted"))
     assert(guard.select("key").collect().map(_.getLong(0)).toSet == Set(9L))
     // replaying the delete itself (equal recency) keeps the tombstone
     graft.operators.Upsert.mergeIntoParquet(spark, tgt,
       mkBatch(("delete", 9L, 0.0, 0L, "2024-03-01 00:00:00", 20L)), "key")
-    assert(spark.read.parquet(tgt).filter(col("deleted")).count() == 1)
+    assert(Upsert.readTarget(spark, tgt).filter(col("deleted")).count() == 1)
     // a genuinely NEWER upsert re-creates the key over the tombstone
     graft.operators.Upsert.mergeIntoParquet(spark, tgt,
       mkBatch(("insert", 9L, 99.0, 9L, "2024-04-01 00:00:00", 30L)), "key")
-    assert(normalize(spark.read.parquet(tgt)) == Set((9L, 99.0, 9L)))
-    assert(spark.read.parquet(tgt).filter(col("deleted")).count() == 0)
+    assert(normalize(Upsert.readTarget(spark, tgt)) == Set((9L, 99.0, 9L)))
+    assert(Upsert.readTarget(spark, tgt).filter(col("deleted")).count() == 0)
 
     // sweep: delete again, then reclaim — tombstone gone, bucket dir too
     // (key 9 was this target's only key, so its bucket has no live rows)
@@ -163,7 +163,7 @@ class GuardianDlqSpec extends SparkSpec {
     assert(graft.operators.Upsert.sweepTombstones(spark, tgt) == 0)
     graft.operators.Upsert.mergeIntoParquet(spark, tgt,
       mkBatch(("insert", 9L, 1.0, 1L, "2024-06-01 00:00:00", 50L)), "key")
-    assert(normalize(spark.read.parquet(tgt)) == Set((9L, 1.0, 1L)))
+    assert(normalize(Upsert.readTarget(spark, tgt)) == Set((9L, 1.0, 1L)))
   }
 
   test("DLQ orphan sweep: stale tmp beside a surviving batch dir is dropped") {
@@ -185,7 +185,7 @@ class GuardianDlqSpec extends SparkSpec {
     assert(CdcPipeline.retryDlq(spark, cfg) == CdcPipeline.DlqStats(succeeded = 1))
     assert(!Files.exists(tmpDir))                            // stale tmp swept
     assert(!Files.exists(Paths.get(s"${cfg.dlqDir}/batch_0"))) // batch consumed
-    val got = normalize(spark.read.parquet(cfg.targetDir))
+    val got = normalize(Upsert.readTarget(spark, cfg.targetDir))
     val want = normalize(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
     assert(got == want)
   }
@@ -207,7 +207,7 @@ class GuardianDlqSpec extends SparkSpec {
     assert(CdcPipeline.retryDlq(spark, cfg) == CdcPipeline.DlqStats(succeeded = 1))
     assert(!Files.exists(Paths.get(s"${cfg.dlqDir}/batch_0.tmp")))
     assert(!Files.exists(Paths.get(s"${cfg.dlqDir}/batch_0")))
-    val got = normalize(spark.read.parquet(cfg.targetDir))
+    val got = normalize(Upsert.readTarget(spark, cfg.targetDir))
     val want = normalize(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
     assert(got == want)
   }
@@ -280,7 +280,7 @@ class GuardianDlqSpec extends SparkSpec {
       CdcPipeline.start(spark, cfg)
     }
     assert(sup.attempts == 2)
-    val got = normalize(spark.read.parquet(cfg.targetDir))
+    val got = normalize(Upsert.readTarget(spark, cfg.targetDir))
     val want = normalize(Cdc.finalState(spark, sf).withColumnRenamed("user_id", "key"))
     assert(got == want)
   }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.KvStore
+import graft.operators.{KvStore, Upsert}
 import graft.streaming.KvPipeline
 
 class KvSpec extends SparkSpec {
@@ -253,7 +253,7 @@ class KvSpec extends SparkSpec {
     assert(KvPipeline.retryDlq(spark, cfg2) == graft.streaming.Dlq.Stats(succeeded = 1))
     assert(!JFiles.exists(Paths.get(s"${cfg2.dlqDir}/batch_0")))
     val want = KvStore.finalState(spark, sf).withColumnRenamed("ttl_ms", "ttlMs")
-    assert(normalize(spark.read.parquet(cfg.targetDir)) == normalize(want))
+    assert(normalize(Upsert.readTarget(spark, cfg.targetDir)) == normalize(want))
   }
 
   test("snapshot applies the TTL skip rule (P9) and RESTORE expireMs mapping") {
@@ -280,12 +280,12 @@ class KvSpec extends SparkSpec {
       KvPipeline.start(spark, cfg).awaitTermination()
       val want = KvStore.finalState(spark, sf)
         .withColumnRenamed("ttl_ms", "ttlMs")
-      val got = spark.read.parquet(cfg.targetDir)
+      val got = Upsert.readTarget(spark, cfg.targetDir)
       assert(normalize(got) == normalize(want))
 
       // restart with no new input: checkpoint prevents reprocessing
       KvPipeline.start(spark, cfg).awaitTermination()
-      assert(normalize(spark.read.parquet(cfg.targetDir)) == normalize(want))
+      assert(normalize(Upsert.readTarget(spark, cfg.targetDir)) == normalize(want))
     } finally ops.unpersist()
   }
 }
