@@ -339,17 +339,19 @@ final class GraftEngine(
   // operator turns off. The engine instead caches one live-row count
   // per bucket, keyed by the bucket directory's file signature
   // (count/bytes/max-mtime — pure namenode metadata, ≤ NumBuckets
-  // listings per tick), and re-counts ONLY buckets whose signature
-  // changed since the last tick. A tick over an untouched target runs
-  // zero Spark jobs. The cache also keys on the compiled predicate
-  // text, so a dateRange window rolling over (new JST day) recounts
-  // everything once. Counts taken while a merge is mid-write may be
-  // transiently off by the in-flight batch — monitoring tolerance, the
-  // same razor the reference's 60 s polling accepts.
+  // listings per tick) and by the target's committed deltas, listed
+  // the same way ([[Upsert.deltaSignature]]). It re-counts ONLY buckets
+  // whose signature changed since the last tick, or every bucket once
+  // the deltas changed (a delta may name any bucket). A tick over an
+  // untouched target runs zero Spark jobs. The cache also keys on the
+  // compiled predicate text, so a dateRange window rolling over (new
+  // JST day) recounts everything once. Counts taken while a merge is
+  // mid-write may be transiently off by the in-flight batch —
+  // monitoring tolerance, the same razor the reference's 60 s polling
+  // accepts.
 
-  private final case class BucketSig(files: Int, bytes: Long, maxMtime: Long)
-  private val countCache =
-    scala.collection.mutable.Map.empty[String, (String, Map[Int, (BucketSig, Long)])]
+  import GraftEngine.{BucketSig, CountState}
+  private val countCache = scala.collection.mutable.Map.empty[String, CountState]
 
   private def bucketSigs(dir: String): Map[Int, BucketSig] = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -369,26 +371,23 @@ final class GraftEngine(
   private def incrementalLiveCount(name: String, targetDir: String,
       pred: org.apache.spark.sql.Column): Long = {
     val sigs = bucketSigs(targetDir)
-    if (sigs.isEmpty) { countCache.remove(name); return 0L }
+    val deltas = Upsert.deltaSignature(spark, targetDir)
+    if (sigs.isEmpty && deltas.isEmpty) { countCache.remove(name); return 0L }
     val predKey = pred.toString
-    val valid = countCache.get(name) match {
-      case Some((k, m)) if k == predKey => m
-      case _ => Map.empty[Int, (BucketSig, Long)]
-    }
-    val stale = sigs.collect {
-      case (id, sig) if !valid.get(id).exists(_._1 == sig) => id }.toSeq
+    val valid = countCache.get(name).filter(c => c.pred == predKey && c.deltas == deltas)
+    // buckets whose files changed, appeared or vanished; None = all
+    val stale = valid.map { c =>
+      (sigs.keySet ++ c.sigs.keySet).filter(id => sigs.get(id) != c.sigs.get(id)).toSeq }
+    lazy val live = Upsert.liveRows(Upsert.readTarget(spark, targetDir))
     val fresh: Map[Int, Long] =
-      if (stale.isEmpty) Map.empty
-      else Upsert.liveRows(
-          Upsert.readTarget(spark, targetDir)
-            .filter(org.apache.spark.sql.functions.col("bucket").isin(stale: _*)))
+      if (stale.exists(_.isEmpty)) Map.empty
+      else stale.fold(live)(ids => live.filter(org.apache.spark.sql.functions.col("bucket").isin(ids: _*)))
         .filter(pred)
         .groupBy("bucket").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val merged = sigs.map { case (id, sig) =>
-      id -> (sig, if (stale.contains(id)) fresh.getOrElse(id, 0L) else valid(id)._2) }
-    countCache(name) = (predKey, merged)
-    merged.values.iterator.map(_._2).sum
+    val counts = valid.fold(fresh)(c => c.counts -- stale.get ++ fresh)
+    countCache(name) = CountState(predKey, deltas, sigs, counts)
+    counts.values.sum
   }
 
   /** Drop cache entries for pipelines no longer in the config — must
@@ -671,6 +670,12 @@ final class GraftEngine(
 }
 
 object GraftEngine {
+
+  /** One target bucket dir's file signature, and one pipeline's cached
+    * per-bucket live counts (see the count-monitoring note). */
+  private final case class BucketSig(files: Int, bytes: Long, maxMtime: Long)
+  private final case class CountState(pred: String, deltas: Seq[(Long, Long)],
+      sigs: Map[Int, BucketSig], counts: Map[Int, Long])
 
   /** Connect bound for the engine's own JDBC touches (index sync).
     * DriverManager.setLoginTimeout is PROCESS-GLOBAL — it caps every
@@ -1127,7 +1132,12 @@ object GraftEngine {
       val discovered = Backup.discover(available, bt.tablePattern)
       Backup.groupByPrefix(discovered).toSeq.sortBy(_._1).flatMap { case (prefix, members) =>
         val slices = members.sorted.map { name =>
-          Backup.TableSlice(name, () => spark.read.parquet(s"${spec.sourceDir}/$name"),
+          // an upsert target is read resolved and live: a raw read
+          // would miss its deltas and export delete tombstones as rows
+          val dir = s"${spec.sourceDir}/$name"
+          Backup.TableSlice(name, () =>
+            if (Upsert.isTarget(spark, dir)) Upsert.liveRows(Upsert.readTarget(spark, dir))
+            else spark.read.parquet(dir),
             Backup.parseSuffixRange(name))
         }
         val start = jstDate.plusDays(bt.startOffsetDays.toLong)

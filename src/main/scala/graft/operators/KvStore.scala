@@ -29,11 +29,17 @@ import graft.Tables
   *             previous state intact (redis.go:130-133).
   *
   * Scale design: state lives in a parquet table hash-bucketed on `key`
-  * and is merged by [[Upsert]]'s partition-scoped MERGE; a change batch
-  * is reduced map-side to one effective op per key (window over the
-  * batch, not the table) and only the touched buckets are rewritten. No
-  * driver-side iteration: the reference's per-key SCAN/RESTORE loop
-  * becomes one distributed keyed full-outer join per micro-batch.
+  * and is merged by [[Upsert.mergeBucketed]]'s partition-scoped
+  * read-modify-write; a change batch is reduced map-side to one
+  * effective op per key (window over the batch, not the table) and only
+  * the touched buckets are rewritten. No driver-side iteration: the
+  * reference's per-key SCAN/RESTORE loop becomes one distributed keyed
+  * full-outer join per micro-batch. Unlike the CDC target, which is
+  * merge-on-read (each batch appends a blind delta), the KV merge must
+  * read state: an HSET merges fields into the current row and inherits
+  * its TTL, so a delta could not be written without the row it merges
+  * into. A KV target therefore never holds deltas, and
+  * [[Upsert.readTarget]] reads it as its base.
   */
 object KvStore {
 
@@ -186,10 +192,10 @@ object KvStore {
   // --- bucketed parquet state (the "target Redis") --------------------
 
   /** Partition-scoped KV MERGE — the streaming sink's per-batch apply.
-    * The CDC pillar's bucketed merge ([[Upsert.mergeBucketed]]) with
-    * [[applyKvBatch]] as the keyed apply: same bucket layout, same
-    * four-job shape, and the only collect is the touched-bucket list,
-    * bounded by [[Upsert.NumBuckets]]. */
+    * [[Upsert.mergeBucketed]] with [[applyKvBatch]] as the keyed apply:
+    * the CDC target's bucket layout, four jobs per micro-batch, and the
+    * only collect is the touched-bucket list, bounded by
+    * [[Upsert.NumBuckets]]. */
   def mergeKvIntoParquet(spark: SparkSession, targetDir: String, batch: DataFrame): Unit =
     Upsert.mergeBucketed(spark, targetDir, batch, "key",
       b => b.select(col("key"), col("kind"), col("value"), col("f_k"), col("f_uid"),

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed upsert/delete — MERGE emulation over parquet (SURVEY §7.5 #1).
   *
@@ -13,31 +15,70 @@ import org.apache.spark.sql.functions._
   * per key (by ts, then offset) wins — the replay-dedup the reference
   * gets from ordered apply (postgresql.go:683-691).
   *
-  * Scale design: the target table is hash-bucketed on the key into
-  * [[NumBuckets]] partition directories, and one merge,
-  * [[mergeBucketed]], serves both the CDC and the KV pillar. A merge
-  *   1. persists the batch and collects the buckets it touches in the
-  *      same job that materializes it: one pass over the batch, each
-  *      partition returning its bucket set (a driver list bounded by
-  *      NumBuckets, never by data size; no shuffle),
-  *   2. reads ONLY those partitions (partition pruning on `bucket`); the
-  *      target's bucket dirs are listed on the driver, because the
-  *      session's parallel-discovery threshold is NumBuckets, so no
-  *      listing job runs,
-  *   3. resolves batch against target with one keyed full-outer join
-  *      (two shuffle map stages: the batch's last-writer-wins frame and
-  *      the pruned target rows), and
-  *   4. dynamically overwrites only the touched partitions (one write
-  *      stage).
-  * That is four Spark jobs per micro-batch, and the batch is scanned
-  * once: the streaming source counts every scan of a foreachBatch frame
-  * in `numInputRows`. At 100 TB with 4096 buckets, a batch touching 1%
-  * of keys rewrites ~41 partitions instead of the whole table.
-  * Replaying the same batch is idempotent (the join resolves a replayed
-  * op against itself), which is what makes foreachBatch's
-  * at-least-once delivery effectively-once (ST9). A production
-  * deployment would swap the parquet overwrite for a transactional
-  * table format; the plan shape is identical.
+  * Scale design: the CDC target is MERGE-ON-READ.
+  *
+  * Layout. A target dir holds
+  *   - the base: the rows hash-bucketed on the key into [[NumBuckets]]
+  *     `bucket=N` partition dirs,
+  *   - `_graft_schema.json`, the canonical-schema sidecar,
+  *   - `_deltas/<seq>/`: one parquet file per applied batch, named by a
+  *     monotonic sequence number, plus `_deltas/_key` naming the key
+  *     column. The underscore hides both from Spark's file index, so a
+  *     plain parquet read of the dir sees only the base.
+  * A merge ([[mergeIntoParquet]]) never reads the target: it writes
+  * `applyBatch(empty, batch)` — the batch's last writer per key, deletes
+  * kept as tombstone rows with `updated_at`, `updated_off` and `bucket`
+  * — as the next delta. That is one Spark job per micro-batch, and the
+  * batch is scanned once (the streaming source counts every scan of a
+  * foreachBatch frame in `numInputRows`). A DLQ retry, which has no
+  * batch id, is just another delta.
+  *
+  * Fold order. [[readTarget]] resolves base ⊕ deltas: per key the row
+  * with the highest `updated_at`, then `updated_off` (nulls last), and
+  * on a full tie the newer delta (the base counts as oldest). That is
+  * [[applyBatch]]'s stale rule, so an out-of-order DLQ retry loses to
+  * the newer row it meets, a replayed batch ties only with itself
+  * (same rows, so replay is idempotent — what makes foreachBatch's
+  * at-least-once delivery effectively-once, ST9), and snapshot rows
+  * (null recency) lose to any change. Base rows of keys no delta names
+  * pass through a broadcast anti-join of the delta keys; only the delta
+  * rows and the base rows of the keys they name meet in one keyed
+  * window, so the full table is never shuffled.
+  *
+  * Compaction bound. Once a merge's append takes the deltas past the
+  * bound, that merge folds them into the buckets they name: the fold
+  * over those buckets replaces them through a dynamic partition
+  * overwrite (the bucket rewrite the KV pillar merges through,
+  * [[mergeBucketed]]). The bound is delta bytes ≥ 1/[[CompactRatio]]
+  * of the base's bytes, or ≥ [[MaxDeltas]] deltas. With a ratio of 8 a
+  * compaction rewrites at most the whole base once per base/8 bytes of
+  * deltas, so every delta byte costs at most 1 + 8 bytes written,
+  * against ~58× when each 1,000-event batch rewrote all 64 buckets of a
+  * 150 k-row target; and a read's window sees at most the deltas plus
+  * as many base rows, about a quarter of the table. The count cap
+  * bounds the file count under trickle batches. Like [[NumBuckets]],
+  * the bound is sized for local tables: at production scale the ratio
+  * wants an absolute byte cap too, so the broadcast delta-key set stays
+  * bounded. A target with no base yet folds every batch at once, which
+  * is the read-and-rewrite merge.
+  *
+  * Crash ordering. Every step leaves the resolved view intact:
+  *   - sidecar, then delta: a sidecar wider than the data null-fills,
+  *     never drops a column;
+  *   - a delta is committed once its `_SUCCESS` marker exists; a crashed
+  *     append (only `_temporary` left) is invisible to reads and is
+  *     removed by the next compaction;
+  *   - compaction publishes (the overwrite commit) before it purges the
+  *     folded deltas: a kill in between leaves buckets that already hold
+  *     the folded rows plus the same deltas, and folding them again
+  *     gives the same rows. The newest folded delta's dir is kept empty
+  *     as the sequence's high-water mark.
+  * [[sweepTombstones]] compacts first, then reclaims tombstones from
+  * the base. The KV pillar keeps a read-modify-write merge through
+  * [[mergeBucketed]] (an HSET merges into the current row), so its
+  * targets never hold deltas. A production deployment would swap the
+  * parquet layout for a transactional table format's merge-on-read;
+  * the plan shape is identical.
   */
 object Upsert {
 
@@ -57,8 +98,11 @@ object Upsert {
     * row. Snapshot rows carry null recency and always lose to a real
     * change event.
     *
-    * One keyed full-outer join resolves everything — the target's
-    * pruned buckets are scanned once (no separate anti-join pass).
+    * One keyed full-outer join resolves everything. The CDC merge
+    * calls this with an EMPTY state, which the optimizer folds away,
+    * leaving the batch's last-writer-per-key window; the same stale
+    * rule then resolves the delta against the target at read time
+    * ([[readTarget]]).
     *
     * Delete TOMBSTONES close the out-of-order resurrect window: a live
     * delete does not remove the key's row — it rewrites it as
@@ -135,58 +179,135 @@ object Upsert {
       df.filter(!coalesce(col("deleted"), lit(false)))
     else df
 
+
   val NumBuckets = 64 // sized for local tests; 4096 at production scale
+
+  /** Compaction bound (see "Scale design"): deltas fold back once their
+    * bytes reach 1/CompactRatio of the base's, or MaxDeltas files. */
+  val CompactRatio = 8
+  val MaxDeltas = 32
 
   private def bucketOf(keyCol: String) = pmod(hash(col(keyCol)), lit(NumBuckets))
 
+  private def fsOf(spark: SparkSession, targetDir: String): (FileSystem, Path) = {
+    val dir = new Path(targetDir)
+    (dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+  }
+
+  private def readText(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val tmp = new Path(p.getParent, p.getName + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(p)) fs.delete(p, false)
+    fs.rename(tmp, p)
+  }
+
   // --- canonical-schema sidecar --------------------------------------
-  // Dynamic partition overwrite rewrites only touched buckets, so after
-  // an additive schema evolution the untouched buckets' footers lack
-  // the new column — and a footer-inferred read may nondeterministically
-  // DROP it. The `_graft_schema.json` sidecar (underscore-prefixed:
-  // invisible to Spark's file index) pins the canonical schema; reads
-  // pass it explicitly and parquet null-fills files that predate a
-  // column. Written BEFORE the data (a crash between the two leaves a
-  // sidecar that's wider than the data — harmless null-fill — never a
-  // sidecar that's narrower, which would drop committed columns).
-  // The same contract a transactional table format keeps in its log.
+  // Dynamic partition overwrite rewrites only touched buckets, and a
+  // delta carries only its batch's columns, so after an additive schema
+  // evolution older files lack the new column — and a footer-inferred
+  // read may nondeterministically DROP it. The `_graft_schema.json`
+  // sidecar (underscore-prefixed: invisible to Spark's file index) pins
+  // the canonical schema; reads pass it explicitly and parquet
+  // null-fills files that predate a column. Written BEFORE the data (a
+  // crash between the two leaves a sidecar that's wider than the data —
+  // harmless null-fill — never a sidecar that's narrower, which would
+  // drop committed columns). The same contract a transactional table
+  // format keeps in its log.
 
   private val SchemaSidecar = "_graft_schema.json"
 
+  private def readSchema(fs: FileSystem, dir: Path): Option[StructType] =
+    readText(fs, new Path(dir, SchemaSidecar))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+
   private def writeSchemaSidecar(spark: SparkSession, targetDir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, SchemaSidecar)
-    val json = schema.json
-    val current = if (fs.exists(p)) {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    } else None
-    if (!current.contains(json)) { // one PUT per schema CHANGE, not per batch
-      val tmp = new org.apache.hadoop.fs.Path(dir, SchemaSidecar + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(p)) fs.delete(p, false)
-      fs.rename(tmp, p)
-    }
+      schema: StructType): Unit = {
+    val (fs, dir) = fsOf(spark, targetDir)
+    val p = new Path(dir, SchemaSidecar)
+    // one PUT per schema CHANGE, not per batch
+    if (!readText(fs, p).contains(schema.json)) writeText(fs, p, schema.json)
   }
 
-  /** Read a bucketed target with its canonical schema: deterministic
-    * across mixed bucket footers, null-filling files written before a
-    * column existed. Falls back to footer inference for targets that
-    * predate the sidecar. */
+  /** True when `targetDir` is a target this object wrote (its schema
+    * sidecar exists): read it through [[readTarget]], not as plain
+    * parquet. */
+  def isTarget(spark: SparkSession, targetDir: String): Boolean = {
+    val (fs, dir) = fsOf(spark, targetDir)
+    fs.exists(new Path(dir, SchemaSidecar))
+  }
+
+  // --- deltas ----------------------------------------------------------
+
+  private val DeltaDir = "_deltas"
+  private val KeyFile = "_key"
+  private val SeqCol = "_graft_delta_seq"
+
+  /** Every numbered delta dir, committed or not, ascending. */
+  private def deltaDirs(fs: FileSystem, dir: Path): Seq[(Long, Path)] = {
+    val d = new Path(dir, DeltaDir)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.forall(_.isDigit))
+      .map(s => s.getPath.getName.toLong -> s.getPath).sortBy(_._1)
+  }
+
+  /** The committed deltas (their `_SUCCESS` marker exists), ascending,
+    * with the marker's modification time. Driver-side listing only. */
+  private def committedDeltas(fs: FileSystem, dir: Path): Seq[(Long, Path, Long)] =
+    deltaDirs(fs, dir).flatMap { case (seq, p) =>
+      val ok = new Path(p, "_SUCCESS")
+      if (fs.exists(ok)) Some((seq, p, fs.getFileStatus(ok).getModificationTime)) else None
+    }
+
+  /** The committed deltas' (sequence number, commit time): it changes
+    * whenever a merge appends or a compaction folds. A driver-side
+    * listing; no Spark job. */
+  private[graft] def deltaSignature(spark: SparkSession, targetDir: String): Seq[(Long, Long)] = {
+    val (fs, dir) = fsOf(spark, targetDir)
+    committedDeltas(fs, dir).map { case (seq, _, mtime) => seq -> mtime }
+  }
+
+  /** The deltas as one scan, each row tagged with its delta's sequence
+    * number (taken from the file path). */
+  private def readDeltas(spark: SparkSession, schema: StructType,
+      deltas: Seq[(Long, Path, Long)]): DataFrame =
+    spark.read.schema(schema).parquet(deltas.map(_._2.toString): _*)
+      .withColumn(SeqCol,
+        regexp_extract(col("_metadata.file_path"), s"/$DeltaDir/(\\d+)/", 1).cast("long"))
+
+  /** base ⊕ deltas (see "Fold order"): `deltas` carries [[SeqCol]] and
+    * the base's columns; the result has the base's columns. */
+  private def fold(base: DataFrame, deltas: DataFrame, keyCol: String): DataFrame = {
+    val named = broadcast(deltas.select(keyCol))
+    val newest = Window.partitionBy(col(keyCol)).orderBy(col("updated_at").desc_nulls_last,
+      col("updated_off").desc_nulls_last, col(SeqCol).desc)
+    val resolved = base.join(named, Seq(keyCol), "left_semi").withColumn(SeqCol, lit(-1L))
+      .unionByName(deltas)
+      .withColumn("_rn", row_number().over(newest)).filter(col("_rn") === 1)
+      .drop("_rn", SeqCol)
+    base.join(named, Seq(keyCol), "left_anti").unionByName(resolved)
+  }
+
+  /** Read a target: base ⊕ deltas (see "Fold order"), with the
+    * canonical schema — deterministic across mixed footers, null-filling
+    * files written before a column existed. Falls back to footer
+    * inference for targets that predate the sidecar. */
   def readTarget(spark: SparkSession, targetDir: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, SchemaSidecar)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      val schema = org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      spark.read.schema(schema).parquet(targetDir)
-    } else spark.read.parquet(targetDir)
+    val (fs, dir) = fsOf(spark, targetDir)
+    val schema = readSchema(fs, dir)
+    val base = schema.fold(spark.read.parquet(targetDir))(spark.read.schema(_).parquet(targetDir))
+    val deltas = committedDeltas(fs, dir)
+    if (deltas.isEmpty) base
+    else fold(base, readDeltas(spark, schema.getOrElse(base.schema), deltas),
+      readText(fs, new Path(new Path(dir, DeltaDir), KeyFile)).get)
   }
 
   /** Initial snapshot load (S1/S4/S6): write the snapshot bucketed, but
@@ -198,8 +319,7 @@ object Upsert {
     // overwritten — but a dir holding ONLY the schema sidecar (a crashed
     // tombstone sweep's residue; underscore files are invisible to the
     // file index) reads as empty and is correctly re-snapshotted.
-    val path = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, path) = fsOf(spark, targetDir)
     val exists = fs.exists(path) && readTarget(spark, targetDir).limit(1).count() > 0
     if (!exists) {
       // every bucket footer carries the tombstone column from day one —
@@ -220,19 +340,86 @@ object Upsert {
     } else false
   }
 
-  /** Partition-scoped MERGE of a change batch into a bucketed parquet
-    * table. Reads and rewrites only the buckets the batch touches. */
+  /** Apply a change batch to a CDC target: append its last writer per
+    * key as the next delta (see "Scale design"), then fold the deltas
+    * back if they passed the compaction bound. Never reads the target's
+    * rows; its schema comes from the sidecar, so a batch whose change
+    * schema lost a target column still fails [[applyBatch]]'s check. */
   def mergeIntoParquet(spark: SparkSession, targetDir: String, batch: DataFrame,
-      keyCol: String, ignoreDeleteOps: Boolean = false): Unit =
-    mergeBucketed(spark, targetDir, batch, keyCol,
-      b => b.select(col(keyCol), col("after.*"), col("ts").as("updated_at")).limit(0)) {
-      (target, b) => applyBatch(target, b, keyCol, ignoreDeleteOps)
-    }
+      keyCol: String, ignoreDeleteOps: Boolean = false): Unit = {
+    val (fs, dir) = fsOf(spark, targetDir)
+    // Existence probe via the Hadoop FS API: ONLY a genuinely absent
+    // target (first batch, no snapshot yet) maps to the batch's own
+    // schema — an unreadable one must FAIL the batch (→ DLQ)
+    val state =
+      if (!fs.exists(dir))
+        batch.select(col(keyCol), col("after.*"), col("ts").as("updated_at")).limit(0)
+      else {
+        val schema = readSchema(fs, dir).getOrElse(spark.read.parquet(targetDir).schema)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema).drop("bucket")
+      }
+    val delta = applyBatch(state, batch, keyCol, ignoreDeleteOps)
+      .withColumn("bucket", bucketOf(keyCol))
+    val deltas = new Path(dir, DeltaDir)
+    val keyFile = new Path(deltas, KeyFile)
+    if (!readText(fs, keyFile).contains(keyCol)) writeText(fs, keyFile, keyCol)
+    writeSchemaSidecar(spark, targetDir, delta.schema)
+    val seq = (deltaDirs(fs, dir).map(_._1) :+ 0L).max + 1
+    delta.coalesce(1).write.mode(SaveMode.Overwrite).parquet(new Path(deltas, seq.toString).toString)
+    val deltaBytes = fs.getContentSummary(deltas).getLength
+    val baseBytes = fs.getContentSummary(dir).getLength - deltaBytes
+    if (deltaBytes * CompactRatio >= baseBytes || committedDeltas(fs, dir).length >= MaxDeltas)
+      compact(spark, targetDir)
+  }
 
-  /** The bucketed MERGE both pillars share (see "Scale design"):
-    * `apply(target, batch)` is the pillar's keyed merge ([[applyBatch]],
-    * [[KvStore.applyKvBatch]]), and `emptyTarget(batch)` the state it
-    * merges into while the target dir does not exist yet. */
+  /** Fold every committed delta into the buckets it names, then purge
+    * the folded deltas and any crashed append (see "Crash ordering"). */
+  private[graft] def compact(spark: SparkSession, targetDir: String): Unit = {
+    val (fs, dir) = fsOf(spark, targetDir)
+    val all = deltaDirs(fs, dir)
+    if (all.isEmpty) return
+    val deltas = committedDeltas(fs, dir)
+    if (deltas.nonEmpty) {
+      val schema = readSchema(fs, dir).get // written before the first delta
+      val d = readDeltas(spark, schema, deltas)
+      val touched = d.select("bucket").distinct().collect().map(_.getInt(0)) // ≤ NumBuckets
+      if (touched.nonEmpty)
+        rewriteBuckets(spark, targetDir, fold(
+          spark.read.schema(schema).parquet(targetDir).filter(col("bucket").isin(touched: _*)),
+          d, readText(fs, new Path(new Path(dir, DeltaDir), KeyFile)).get))
+    }
+    val top = all.last._1
+    all.foreach { case (_, p) => fs.delete(p, true) }
+    fs.mkdirs(new Path(new Path(dir, DeltaDir), top.toString))
+  }
+
+  /** Replace the buckets `rows` (with its `bucket` column) covers:
+    * sidecar first (see its crash-ordering note), then a dynamic
+    * partition overwrite — only those bucket dirs change. */
+  private def rewriteBuckets(spark: SparkSession, targetDir: String, rows: DataFrame): Unit = {
+    writeSchemaSidecar(spark, targetDir, rows.schema)
+    rows.write
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").mode(SaveMode.Overwrite).parquet(targetDir)
+  }
+
+  /** The bucketed read-modify-write MERGE of the KV pillar:
+    * `apply(target, batch)` is its keyed merge ([[KvStore.applyKvBatch]],
+    * which needs the current row for HSET), and `emptyTarget(batch)` the
+    * state it merges into while the target dir does not exist yet. A
+    * merge
+    *   1. persists the batch and collects the buckets it touches in the
+    *      same job that materializes it: one pass over the batch, each
+    *      partition returning its bucket set (a driver list bounded by
+    *      NumBuckets, never by data size; no shuffle),
+    *   2. reads ONLY those partitions (partition pruning on `bucket`); the
+    *      target's bucket dirs are listed on the driver, because the
+    *      session's parallel-discovery threshold is NumBuckets, so no
+    *      listing job runs,
+    *   3. resolves batch against target with one keyed full-outer join,
+    *      and
+    *   4. rewrites only the touched buckets ([[rewriteBuckets]]).
+    * Four Spark jobs per micro-batch, and the batch is scanned once. */
   private[graft] def mergeBucketed(spark: SparkSession, targetDir: String, batch: DataFrame,
       keyCol: String, emptyTarget: DataFrame => DataFrame)(
       apply: (DataFrame, DataFrame) => DataFrame): Unit = {
@@ -248,35 +435,30 @@ object Upsert {
       // target (first batch, no snapshot yet) maps to an empty state —
       // a corrupt or transiently unreadable table must FAIL the batch
       // (→ DLQ), never silently drop the existing buckets.
-      val path = new org.apache.hadoop.fs.Path(targetDir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (fs, path) = fsOf(spark, targetDir)
       val target =
         if (!fs.exists(path)) emptyTarget(batched.drop("bucket"))
         else readTarget(spark, targetDir).filter(col("bucket").isin(touched.toSeq: _*))
           .drop("bucket")
-      val merged = apply(target, batched.drop("bucket")).withColumn("bucket", bucketOf(keyCol))
-      // sidecar first (see its crash-ordering note), then dynamic
-      // partition overwrite: only the touched bucket dirs change
-      writeSchemaSidecar(spark, targetDir, merged.schema)
-      merged.write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").mode(SaveMode.Overwrite).parquet(targetDir)
+      rewriteBuckets(spark, targetDir,
+        apply(target, batched.drop("bucket")).withColumn("bucket", bucketOf(keyCol)))
     } finally batched.unpersist()
   }
 
-  /** Reclaim delete tombstones — rewrite only the buckets that hold
-    * `deleted=true` rows, dropping them; a bucket left with no live row
-    * is removed outright (dynamic overwrite can't write an empty
-    * partition). Safe to call once the pipeline's DLQ is drained: no
-    * stale retry can arrive, so deletes are final and the rows exist
-    * only as resurrect-guards. Returns the number of buckets swept.
-    * The tombstone filter is pushed to the parquet scan; clean buckets
-    * cost only row-group stats (min=max=false skips them). Works for
-    * both the CDC and KV bucketed layouts. */
+  /** Reclaim delete tombstones — fold any deltas into the base first,
+    * then rewrite only the buckets that hold `deleted=true` rows,
+    * dropping them; a bucket left with no live row is removed outright
+    * (dynamic overwrite can't write an empty partition). Safe to call
+    * once the pipeline's DLQ is drained: no stale retry can arrive, so
+    * deletes are final and the rows exist only as resurrect-guards.
+    * Returns the number of buckets swept. The tombstone filter is
+    * pushed to the parquet scan; clean buckets cost only row-group
+    * stats (min=max=false skips them). Works for both the CDC and KV
+    * bucketed layouts. */
   def sweepTombstones(spark: SparkSession, targetDir: String): Int = {
-    val path = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, path) = fsOf(spark, targetDir)
     if (!fs.exists(path)) return 0
+    compact(spark, targetDir)
     val t = readTarget(spark, targetDir)
     if (!t.columns.contains("deleted")) return 0
     val touched = t.filter(col("deleted") === true)
@@ -285,12 +467,9 @@ object Upsert {
     val cleaned = t.filter(col("bucket").isin(touched.toSeq: _*))
       .filter(!coalesce(col("deleted"), lit(false)))
     val liveBuckets = cleaned.select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    if (liveBuckets.nonEmpty)
-      cleaned.write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").mode(SaveMode.Overwrite).parquet(targetDir)
+    if (liveBuckets.nonEmpty) rewriteBuckets(spark, targetDir, cleaned)
     touched.filterNot(liveBuckets).foreach { bk =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"bucket=$bk"), true)
+      fs.delete(new Path(path, s"bucket=$bk"), true)
     }
     // a target swept down to zero buckets must not linger as a
     // file-less dir (unreadable as parquet): remove it — the next

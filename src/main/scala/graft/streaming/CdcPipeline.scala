@@ -9,6 +9,11 @@ import graft.operators.Upsert
 
 /** The CDC pipeline (SURVEY §3.1): a file-based change-event stream →
   * optional PII transforms → keyed upsert in a [[Sink.foreachBatch]].
+  * The upsert is [[Upsert.mergeIntoParquet]]: each micro-batch appends
+  * one delta to the merge-on-read target without reading it, and reads
+  * resolve base ⊕ deltas ([[Upsert.readTarget]]). A replayed batch
+  * appends an identical delta, which ties only with itself, so the
+  * stream's at-least-once delivery stays effectively-once.
   *
   * Reference stages it replaces (mongodb.go:527-815): the hand-rolled
   * channel buffering, disk spill files, smart batch packing, and ≤8
@@ -74,7 +79,9 @@ object CdcPipeline {
 
   /** DLQ retry (reference processDeadLetterBatch, mongodb.go:1876-1969):
     * the generic [[Dlq.retry]] pass with this pipeline's event schema
-    * and idempotent merge as the apply function. Run only while the
+    * and idempotent merge as the apply function; each retried batch is
+    * one more delta, and the target's last-writer-wins fold resolves an
+    * out-of-order retry against the newer rows. Run only while the
     * pipeline's own stream is not applying batches (see Dlq.retry's
     * concurrency contract). */
   def retryDlq(spark: SparkSession, cfg: Config,
