@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * A merge ([[mergeIntoParquet]]) never reads the target: it writes
   * `applyBatch(empty, batch)` — the batch's last writer per key, deletes
   * kept as tombstone rows with `updated_at`, `updated_off` and `bucket`
-  * — as the next delta. That is one Spark job per micro-batch, and the
-  * batch is scanned once (the streaming source counts every scan of a
+  * — as the next delta. That is one write per micro-batch (two Spark
+  * jobs, against four for a read-and-rewrite merge), and the batch is
+  * scanned once (the streaming source counts every scan of a
   * foreachBatch frame in `numInputRows`). A DLQ retry, which has no
   * batch id, is just another delta.
   *

@@ -59,6 +59,13 @@ class UpsertLayoutSpec extends SparkSpec {
 
   private def resolved(dir: String): Set[V] = view(Upsert.readTarget(spark, dir))
 
+  /** The resolved view equals `want`; a failure names a few differing rows. */
+  private def assertResolved(dir: String, want: Set[V], clue: String): Unit = {
+    val got = resolved(dir)
+    assert(got == want,
+      s"$clue: extra ${(got -- want).take(5)}, missing ${(want -- got).take(5)}")
+  }
+
   /** The independent fold: per key the event with the highest (ts,
     * offset) wins over the snapshot row; a winning delete leaves a
     * tombstone; `ignoreDeletes` drops deletes before the fold. */
@@ -118,10 +125,10 @@ class UpsertLayoutSpec extends SparkSpec {
       merge(batches(1), wide = true) // the late DLQ retry
       val want = model(SnapKeys, batches.flatten, ignoreDeletes)
       assert(Upsert.deltaSignature(spark, tgt).nonEmpty, s"seed=$seed: no delta outstanding")
-      assert(resolved(tgt) == want, s"seed=$seed before compaction")
+      assertResolved(tgt, want, s"seed=$seed before compaction")
       Upsert.compact(spark, tgt)
       assert(Upsert.deltaSignature(spark, tgt).isEmpty)
-      assert(resolved(tgt) == want, s"seed=$seed after compaction")
+      assertResolved(tgt, want, s"seed=$seed after compaction")
     }
   }
 
@@ -133,8 +140,8 @@ class UpsertLayoutSpec extends SparkSpec {
     val b2 = Seq(Ev("update", 1, 11, 1, None, 1700000002L, 4), Ev("insert", 2, 20, 2, None, 1700000002L, 5))
     Upsert.mergeIntoParquet(spark, tgt, batch(b1, wide = false), "key")
     Upsert.mergeIntoParquet(spark, tgt, batch(b2, wide = false), "key")
+    assertResolved(tgt, model(2000, b1 ++ b2, ignoreDeletes = false), "two deltas")
     val before = resolved(tgt)
-    assert(before == model(2000, b1 ++ b2, ignoreDeletes = false))
 
     // publish then kill: the buckets hold the folded rows, the deltas stay
     val (fs, root) = fsOf(tgt)
@@ -143,11 +150,11 @@ class UpsertLayoutSpec extends SparkSpec {
     FileUtil.copy(fs, deltas, fs, saved, false, spark.sparkContext.hadoopConfiguration)
     Upsert.compact(spark, tgt)
     assert(Upsert.deltaSignature(spark, tgt).isEmpty)
-    assert(resolved(tgt) == before)
+    assertResolved(tgt, before, "unchanged")
     fs.delete(deltas, true)
     FileUtil.copy(fs, saved, fs, deltas, false, spark.sparkContext.hadoopConfiguration)
     assert(Upsert.deltaSignature(spark, tgt).length == 2)
-    assert(resolved(tgt) == before)
+    assertResolved(tgt, before, "unchanged")
 
     // a crashed append: its delta dir holds only `_temporary`
     val next = fs.listStatus(deltas).map(_.getPath.getName).filter(_.forall(_.isDigit))
@@ -156,16 +163,16 @@ class UpsertLayoutSpec extends SparkSpec {
       .select(col("key"), col("after.*"), col("ts").as("updated_at"),
         col("offset").as("updated_off"), lit(false).as("deleted"), lit(0).as("bucket"))
       .write.parquet(new Path(deltas, s"$next/_temporary/0").toString)
-    assert(resolved(tgt) == before)
+    assertResolved(tgt, before, "unchanged")
 
     // the next merge numbers past the crashed one; compaction removes it
     val b3 = Seq(Ev("delete", 1, 0, 0, None, 1700000003L, 6))
     Upsert.mergeIntoParquet(spark, tgt, batch(b3, wide = false), "key")
     assert(Upsert.deltaSignature(spark, tgt).map(_._1).max == next + 1)
-    assert(resolved(tgt) == model(2000, b1 ++ b2 ++ b3, ignoreDeletes = false))
+    assertResolved(tgt, model(2000, b1 ++ b2 ++ b3, ignoreDeletes = false), "after the crash")
     Upsert.compact(spark, tgt)
     assert(!fs.exists(new Path(deltas, next.toString)))
-    assert(resolved(tgt) == model(2000, b1 ++ b2 ++ b3, ignoreDeletes = false))
+    assertResolved(tgt, model(2000, b1 ++ b2 ++ b3, ignoreDeletes = false), "compacted")
   }
 
   test("a merge whose change schema lost a target column throws, so the batch parks in the DLQ") {
@@ -182,7 +189,7 @@ class UpsertLayoutSpec extends SparkSpec {
     Dlq.applyOrPark(dlq)(b => Upsert.mergeIntoParquet(b.sparkSession, tgt, b, "key"))(narrow, 7L)
     assert(Files.isDirectory(Paths.get(Dlq.batchDir(dlq, 7L))))
     assert(Upsert.deltaSignature(spark, tgt) == sig)
-    assert(resolved(tgt) == before)
+    assertResolved(tgt, before, "unchanged")
   }
 
   test("countReport equals a direct live count after every batch, compaction and sweep") {
