@@ -1,20 +1,48 @@
 package graft.engine
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
+
 import graft.model.{CountCondition, SyncTaskSpec, TableMapping}
-import graft.streaming.{CdcPipeline, KvPipeline}
+import graft.streaming.{Alerts, AnomalyStream, CdcPipeline, DailyRollup, Dlq,
+  ForecastAnomalyStream, KvPipeline, RateStream, SessionStream}
 
 /** Spec→pipeline compiler: turns one [[SyncTaskSpec]] into the per-table
   * pipeline configs the streaming layer runs — the typed analogue of the
   * reference's `startSyncTasks` dispatch (reference cmd/sync/main.go:148-188),
   * where each enabled task fans out one syncer per mapped table.
   *
+  * Each table compiles to one replica ([[CdcDef]] or [[KvDef]], the
+  * [[Replica]] face: target, DLQ and DLQ retry) plus one pipeline per
+  * opt-in rider the task enables. The riders are declared once, in
+  * [[Riders]]: each row names its JSON key, its name and storage-root
+  * suffix, why a redis task cannot carry it, how it starts and how its
+  * output reads back. The config reader, this compiler and the engine
+  * iterate over that table instead of spelling the riders out.
+  *
   * Layout conventions (the engine's DSN): a task's `sourceDir` /
   * `targetDir` / `checkpointDir` / `dlqDir` are roots holding one
   * subdirectory per table, so pipelines never share a checkpoint or DLQ.
+  * Every def names the [[PipelineDef.roots]] it writes, which
+  * [[compileAll]] checks for nesting.
   */
 object Compiler {
 
-  sealed trait PipelineDef { def name: String }
+  sealed trait PipelineDef {
+    def name: String
+    /** The storage roots this pipeline owns (writes); what it only
+      * reads is not listed. */
+    def roots: Seq[String]
+  }
+
+  /** A pipeline that replicates a change stream into a keyed target and
+    * parks failed batches in a dead-letter queue. */
+  sealed trait Replica extends PipelineDef {
+    def targetDir: String
+    def dlqDir: String
+    /** One DLQ retry pass; never run beside the live stream's merges. */
+    def retryDlq(spark: SparkSession, alerts: Alerts.Sink): Dlq.Stats
+  }
 
   /** The syncIndexes compilation: replay these index specs (diffed
     * against the target's existing names, then CREATE INDEX) on the
@@ -31,68 +59,129 @@ object Compiler {
   final case class CdcDef(name: String, cfg: CdcPipeline.Config,
       snapshotDir: Option[String], sourceTable: String = "",
       counts: Seq[CountCondition] = Nil,
-      indexSync: Option[IndexSync] = None) extends PipelineDef
+      indexSync: Option[IndexSync] = None) extends Replica {
+    def targetDir: String = cfg.targetDir
+    def dlqDir: String = cfg.dlqDir
+    def roots: Seq[String] = Seq(cfg.sourceDir, cfg.targetDir, cfg.checkpointDir, cfg.dlqDir)
+    def retryDlq(spark: SparkSession, alerts: Alerts.Sink): Dlq.Stats =
+      CdcPipeline.retryDlq(spark, cfg, alerts)
+  }
 
   /** redis → KV pipeline. */
-  final case class KvDef(name: String, cfg: KvPipeline.Config) extends PipelineDef
+  final case class KvDef(name: String, cfg: KvPipeline.Config) extends Replica {
+    def targetDir: String = cfg.targetDir
+    def dlqDir: String = cfg.dlqDir
+    def roots: Seq[String] = Seq(cfg.sourceDir, cfg.targetDir, cfg.checkpointDir, cfg.dlqDir)
+    def retryDlq(spark: SparkSession, alerts: Alerts.Sink): Dlq.Stats =
+      KvPipeline.retryDlq(spark, cfg, alerts)
+  }
 
-  /** A6 composed: the task-level `dailyRollup` opt-in runs a
-    * [[graft.streaming.DailyRollup]] stream per table beside its CDC
-    * pipeline — the reference's per-table daily counters
-    * (monitor.go daily reset) as a supervised windowed aggregation.
-    * Reads the SAME change-event source as the sibling CDC pipeline
-    * (read-only: no storage roots of its own); `queryName` is the
-    * in-memory sink's SQL-safe table name. */
+  /** One opt-in change-stream rider kind, one row of [[Riders]]. A
+    * rider reads the same change-event source as its table's CDC
+    * pipeline (the KV op log has no change events, so a redis task
+    * carrying `key` is rejected at load with [[rejection]]); its
+    * pipeline name and storage roots are the table's plus `suffix`.
+    * `start` gets (source dir, output, checkpoint dir, alert sink,
+    * availableNow), `read` gets the output; the output is a log dir,
+    * or the rollup's memory table. Equality is the first parameter
+    * list only, so defs compiled from the same config stay equal. */
+  final case class Rider(key: String, suffix: String, lacks: String)(
+      val start: (SparkSession, String, String, String, Alerts.Sink, Boolean) => StreamingQuery,
+      val read: (SparkSession, String) => DataFrame) {
+    def rejection: String =
+      s"$key requires a change-event (CDC) task: the KV op log has $lacks"
+  }
+
+  /** A6 composed: per-table daily counters (monitor.go daily reset) as
+    * a supervised windowed aggregation into a memory table. */
+  val Rollup: Rider = Rider("dailyRollup", "#rollup", "no change events to roll up")(
+    (spark, src, table, _, _, now) => DailyRollup.start(spark, src, table, now),
+    DailyRollup.currentCounts)
+  /** ST14/ST15 composed: gap sessions of per-KEY activity, finalized by
+    * watermark into a durable log. */
+  val Sessionize: Rider = Rider("sessionize", "#sessions", "no change events to sessionize")(
+    (spark, src, out, ckpt, _, now) => SessionStream.startChangeEvents(spark, src, out, ckpt, now),
+    SessionStream.currentSessions)
+  /** Sliding-window per-op rates, finalized by watermark into a
+    * durable log. */
+  val RateMonitor: Rider = Rider("rateMonitor", "#rates", "no change events to rate")(
+    (spark, src, out, ckpt, _, now) => RateStream.startChangeEvents(spark, src, out, ckpt, now),
+    RateStream.currentRates)
+  /** Daily op-count z-score alerts, with a durable daily history. */
+  val AnomalyMonitor: Rider = Rider("anomalyMonitor", "#anomalies", "no change events to score")(
+    (spark, src, out, ckpt, alerts, now) =>
+      AnomalyStream.startChangeEvents(spark, src, out, ckpt, alerts, availableNow = now),
+    AnomalyStream.currentHistory)
+  /** Seasonal forecast-residual alarm on daily op counts: a weekly
+    * volume cycle does not page, a genuine break does. */
+  val ForecastMonitor: Rider = Rider("forecastMonitor", "#forecast", "no change events to forecast")(
+    (spark, src, out, ckpt, alerts, now) =>
+      ForecastAnomalyStream.startChangeEvents(spark, src, out, ckpt, alerts, availableNow = now),
+    ForecastAnomalyStream.currentHistory)
+  /** The same alarm on the after-image's daily cent mass
+    * (`value_forecast_anomaly`, the q90/q155 revenue series). */
+  val ValueForecastMonitor: Rider = Rider("valueForecastMonitor", "#vforecast",
+      "no after-image value mass to forecast")(
+    (spark, src, out, ckpt, alerts, now) =>
+      ForecastAnomalyStream.startChangeValues(spark, src, out, ckpt, alerts, availableNow = now),
+    ForecastAnomalyStream.currentHistory)
+
+  /** Every rider kind, in the order a table's riders compile. */
+  val Riders: Seq[Rider] = Seq(Rollup, Sessionize, RateMonitor, AnomalyMonitor,
+    ForecastMonitor, ValueForecastMonitor)
+
+  /** A pipeline of one [[Rider]] kind over its table's change source. */
+  sealed trait RiderPipeline extends PipelineDef {
+    def rider: Rider
+    def sourceDir: String
+    /** The log dir, or the rollup's memory table. */
+    def output: String
+    def checkpointDir: String
+    def start(spark: SparkSession, alerts: Alerts.Sink, availableNow: Boolean): StreamingQuery =
+      rider.start(spark, sourceDir, output, checkpointDir, alerts, availableNow)
+    def read(spark: SparkSession): DataFrame = rider.read(spark, output)
+  }
+
+  /** The `dailyRollup` rider: its sink is an in-memory table (the
+    * reference's counters are in-memory too), so it owns no storage
+    * roots and keeps no checkpoint; a restart re-derives the horizon
+    * from the stream. `queryName` is the table's SQL-safe name. */
   final case class RollupDef(name: String, sourceDir: String,
-      queryName: String) extends PipelineDef
+      queryName: String) extends RiderPipeline {
+    def rider: Rider = Rollup
+    def output: String = queryName
+    def checkpointDir: String = ""
+    def roots: Seq[String] = Nil
+  }
 
-  /** ST14/ST15 composed: the task-level `sessionize` opt-in runs a
-    * [[graft.streaming.SessionStream]] per table beside its CDC
-    * pipeline — gap sessions of per-KEY activity over the same
-    * change-event source, finalized by watermark and landed in a
-    * durable parquet log (`outDir`) with its own checkpoint. */
-  final case class SessionizeDef(name: String, sourceDir: String,
-      outDir: String, checkpointDir: String) extends PipelineDef
-
-  /** The task-level `rateMonitor` opt-in runs a
-    * [[graft.streaming.RateStream]] per table beside its CDC pipeline —
-    * sliding-window per-op rates over the same change-event source,
-    * finalized by watermark into a durable parquet log (`outDir`)
-    * with its own checkpoint. */
-  final case class RateMonitorDef(name: String, sourceDir: String,
-      outDir: String, checkpointDir: String) extends PipelineDef
+  /** A file-sink rider: its output lands in a durable parquet log
+    * (`outDir`) with its own checkpoint, so restart-on-death resumes
+    * without losing or duplicating a finalized row. */
+  final case class RiderDef(name: String, rider: Rider, sourceDir: String,
+      outDir: String, checkpointDir: String) extends RiderPipeline {
+    def output: String = outDir
+    def roots: Seq[String] = Seq(outDir, checkpointDir)
+  }
 
   /** A `decontamTasks` entry: resident
     * [[graft.streaming.DecontamStream]] pipeline — crawl documents
     * scored at ingest against the corpus's eval shingle set, quarantine
-    * log + checkpoint owned by this pipeline. */
+    * log + checkpoint owned by this pipeline (the corpus and crawl
+    * source are read-only). */
   final case class DecontamDef(name: String, spec: graft.model.DecontamSpec)
-      extends PipelineDef
+      extends PipelineDef {
+    def roots: Seq[String] = Seq(spec.outDir, spec.checkpointDir)
+  }
 
   /** A resident incremental-view-maintenance pipeline
     * ([[graft.streaming.IvmStream]]): the change log at
     * `spec.sourceDir` keeps the configured aggregate view fresh with
-    * delta work only, under the supervisor like any sync pipeline. */
+    * delta work only, under the supervisor like any sync pipeline. It
+    * owns its view store and checkpoint. */
   final case class IvmDef(name: String, spec: graft.model.IvmTaskSpec)
-      extends PipelineDef
-
-  /** The task-level `anomalyMonitor` opt-in runs an
-    * [[graft.streaming.AnomalyStream]] per table beside its CDC
-    * pipeline — daily op-count z-score alerts off the same
-    * change-event source, durable history + checkpoint owned here. */
-  final case class AnomalyDef(name: String, sourceDir: String,
-      historyDir: String, checkpointDir: String) extends PipelineDef
-
-  /** Seasonal forecast-residual alarm rider
-    * ([[graft.streaming.ForecastAnomalyStream]]): daily op counts
-    * scored against their one-step Holt-Winters forecast, so a
-    * weekly-cycle volume peak does not page while a genuine break
-    * does. */
-  final case class ForecastAnomalyDef(name: String, sourceDir: String,
-      historyDir: String, checkpointDir: String,
-      // false: daily op COUNTS; true: the after-image's daily CENT
-      // MASS (`value_forecast_anomaly` — the q90/q155 revenue series)
-      watchValues: Boolean = false) extends PipelineDef
+      extends PipelineDef {
+    def roots: Seq[String] = Seq(spec.storeDir, spec.checkpointDir)
+  }
 
   /** Namespace + storage-path derivation. A table whose mapping-level
     * sourceDb DIFFERS from the task default gets db-prefixed paths and
@@ -130,52 +219,29 @@ object Compiler {
     else spec.tables.flatMap { m =>
       val name = pipelineName(spec, m)
       val src = srcSub(spec, m); val tgt = tgtSub(spec, m)
-      // the rollup consumes change events, so it rides CDC tasks only
-      // (the KV op log has a different schema)
-      val rollup =
-        if (spec.dailyRollup && spec.taskType != "redis")
-          Seq(RollupDef(s"$name#rollup", s"${spec.sourceDir}/$src",
-            s"rollup_task${spec.id}_$src".replaceAll("[^A-Za-z0-9_]", "_")))
-        else Nil
-      // '#' keeps the session roots SIBLINGS of the table roots (never
-      // nested inside them), so the compileAll nesting check holds
-      val sessions =
-        if (spec.sessionize && spec.taskType != "redis")
-          Seq(SessionizeDef(s"$name#sessions", s"${spec.sourceDir}/$src",
-            s"${spec.targetDir}/$tgt#sessions", s"${spec.checkpointDir}/$src#sessions"))
-        else Nil
-      val rateMonitors =
-        if (spec.rateMonitor && spec.taskType != "redis")
-          Seq(RateMonitorDef(s"$name#rates", s"${spec.sourceDir}/$src",
-            s"${spec.targetDir}/$tgt#rates", s"${spec.checkpointDir}/$src#rates"))
-        else Nil
-      val anomalyMonitors =
-        if (spec.anomalyMonitor && spec.taskType != "redis")
-          Seq(AnomalyDef(s"$name#anomalies", s"${spec.sourceDir}/$src",
-            s"${spec.targetDir}/$tgt#anomalies", s"${spec.checkpointDir}/$src#anomalies"))
-        else Nil
-      val forecastMonitors =
-        if (spec.forecastMonitor && spec.taskType != "redis")
-          Seq(ForecastAnomalyDef(s"$name#forecast", s"${spec.sourceDir}/$src",
-            s"${spec.targetDir}/$tgt#forecast", s"${spec.checkpointDir}/$src#forecast"))
-        else Nil
-      val valueForecastMonitors =
-        if (spec.valueForecastMonitor && spec.taskType != "redis")
-          Seq(ForecastAnomalyDef(s"$name#vforecast", s"${spec.sourceDir}/$src",
-            s"${spec.targetDir}/$tgt#vforecast",
-            s"${spec.checkpointDir}/$src#vforecast", watchValues = true))
-        else Nil
-      rollup ++ sessions ++ rateMonitors ++ anomalyMonitors ++
-        forecastMonitors ++ valueForecastMonitors :+ (spec.taskType match {
+      val srcDir = s"${spec.sourceDir}/$src"
+      // riders consume change events, so they ride CDC tasks only (the
+      // KV op log has a different schema; the config reader rejects a
+      // redis task that asks for one). '#' keeps their roots SIBLINGS
+      // of the table roots (never nested inside them), so the
+      // compileAll nesting check holds
+      val riders = Riders.filter(r => spec.riders.contains(r.key) && spec.taskType != "redis")
+        .map { r =>
+          if (r == Rollup) RollupDef(name + r.suffix, srcDir,
+            s"rollup_task${spec.id}_$src".replaceAll("[^A-Za-z0-9_]", "_"))
+          else RiderDef(name + r.suffix, r, srcDir,
+            s"${spec.targetDir}/$tgt${r.suffix}", s"${spec.checkpointDir}/$src${r.suffix}")
+        }
+      riders :+ (spec.taskType match {
         case "redis" =>
           KvDef(name, KvPipeline.Config(
-            sourceDir = s"${spec.sourceDir}/$src",
+            sourceDir = srcDir,
             targetDir = s"${spec.targetDir}/$tgt",
             checkpointDir = s"${spec.checkpointDir}/$src",
             dlqDir = s"${spec.dlqDir}/$src"))
         case t =>
           CdcDef(name, CdcPipeline.Config(
-            sourceDir = s"${spec.sourceDir}/$src",
+            sourceDir = srcDir,
             targetDir = s"${spec.targetDir}/$tgt",
             checkpointDir = s"${spec.checkpointDir}/$src",
             dlqDir = s"${spec.dlqDir}/$src",
@@ -239,20 +305,7 @@ object Compiler {
     // contiguous sorted range, so the adjacent-pair check is sound — a
     // bare sort is not (a sibling like "a-old" sorts BETWEEN "a" and
     // "a/x" because '-' < '/')
-    val roots = defs.flatMap {
-      case CdcDef(n, c, _, _, _, _) => Seq(c.sourceDir, c.targetDir, c.checkpointDir, c.dlqDir).map((n, _))
-      case KvDef(n, c)           => Seq(c.sourceDir, c.targetDir, c.checkpointDir, c.dlqDir).map((n, _))
-      case _: RollupDef          => Nil // read-only rider: owns no storage roots
-      // reads the shared change stream; owns only its log + checkpoint
-      case SessionizeDef(n, _, out, ckpt) => Seq(out, ckpt).map((n, _))
-      case RateMonitorDef(n, _, out, ckpt) => Seq(out, ckpt).map((n, _))
-      // corpus + crawl source are read-only; it owns its log + checkpoint
-      case DecontamDef(n, s) => Seq(s.outDir, s.checkpointDir).map((n, _))
-      case AnomalyDef(n, _, hist, ckpt) => Seq(hist, ckpt).map((n, _))
-      case ForecastAnomalyDef(n, _, hist, ckpt, _) => Seq(hist, ckpt).map((n, _))
-      // change log is read-only; it owns its view store + checkpoint
-      case IvmDef(n, s) => Seq(s.storeDir, s.checkpointDir).map((n, _))
-    }.map { case (n, r) => (n, r + "/") }.sortBy(_._2)
+    val roots = defs.flatMap(d => d.roots.map(r => (d.name, r + "/"))).sortBy(_._2)
     roots.sliding(2).foreach {
       case Seq((na, a), (nb, b)) =>
         require(b != a && !b.startsWith(a),

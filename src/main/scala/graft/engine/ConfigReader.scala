@@ -175,24 +175,8 @@ object ConfigReader {
     require(tables.forall(t => !t.advanced.syncIndexes || t.keyColumns.nonEmpty),
       "syncIndexes=true requires keyColumns: the replayed index is the " +
         "key-column index — without keys there is nothing to create")
-    require(!(n.path("dailyRollup").asBoolean(false) && taskType == "redis"),
-      "dailyRollup requires a change-event (CDC) task: the KV op log has " +
-        "no change events to roll up")
-    require(!(n.path("sessionize").asBoolean(false) && taskType == "redis"),
-      "sessionize requires a change-event (CDC) task: the KV op log has " +
-        "no change events to sessionize")
-    require(!(n.path("rateMonitor").asBoolean(false) && taskType == "redis"),
-      "rateMonitor requires a change-event (CDC) task: the KV op log has " +
-        "no change events to rate")
-    require(!(n.path("anomalyMonitor").asBoolean(false) && taskType == "redis"),
-      "anomalyMonitor requires a change-event (CDC) task: the KV op log has " +
-        "no change events to score")
-    require(!(n.path("forecastMonitor").asBoolean(false) && taskType == "redis"),
-      "forecastMonitor requires a change-event (CDC) task: the KV op log has " +
-        "no change events to forecast")
-    require(!(n.path("valueForecastMonitor").asBoolean(false) && taskType == "redis"),
-      "valueForecastMonitor requires a change-event (CDC) task: the KV op " +
-        "log has no after-image value mass to forecast")
+    val riders = Compiler.Riders.filter(r => n.path(r.key).asBoolean(false))
+    riders.foreach(r => require(taskType != "redis", r.rejection))
     SyncTaskSpec(
       id = n.path("id").asInt(0),
       taskType = taskType,
@@ -205,12 +189,7 @@ object ConfigReader {
       sourceDb = sourceDb,
       snapshotDir = optText(n, "snapshotDir"),
       targetJdbcUrl = targetJdbcUrl,
-      dailyRollup = n.path("dailyRollup").asBoolean(false),
-      sessionize = n.path("sessionize").asBoolean(false),
-      rateMonitor = n.path("rateMonitor").asBoolean(false),
-      anomalyMonitor = n.path("anomalyMonitor").asBoolean(false),
-      forecastMonitor = n.path("forecastMonitor").asBoolean(false),
-      valueForecastMonitor = n.path("valueForecastMonitor").asBoolean(false))
+      riders = riders.map(_.key).toSet)
   }
 
   private def parseTable(n: JsonNode, securityEnabled: Boolean): TableMapping = {

@@ -10,7 +10,7 @@ import graft.engine.ConfigReader.EngineConfig
 import graft.functions.TimeWindows
 import graft.model.{BackupSpec, Scheduled, TrainingExportSpec}
 import graft.operators.{Backup, Cron, Upsert}
-import graft.streaming.{Alerts, CdcPipeline, ControlLoop, DailyRollup, Dlq, Guardian, KvPipeline, Metrics, RateStream, SessionStream}
+import graft.streaming.{Alerts, CdcPipeline, ControlLoop, Dlq, Guardian, KvPipeline, Metrics}
 
 /** The composed engine — config file in, running pipelines out: the
   * Spark-native `cmd/sync/main.go` (reference main.go:91-188).
@@ -19,13 +19,19 @@ import graft.streaming.{Alerts, CdcPipeline, ControlLoop, DailyRollup, Dlq, Guar
   * config, compile every enabled task to per-table pipeline defs
   * ([[Compiler]]), and reconcile the running set per pipeline
   * ([[ControlLoop.Supervisor]] — only added/changed/dead pipelines
-  * restart; checkpoints make each swap lossless). Every scheduled task
+  * restart; checkpoints make each swap lossless). The engine knows the
+  * pipeline kinds only through their faces: a [[Compiler.Replica]]
+  * (CDC or KV) has a target and a DLQ, a [[Compiler.RiderPipeline]]
+  * starts and reads back through its row of [[Compiler.Riders]].
+  * Every scheduled task
   * family (backup, training export, optimize, the watchdogs, the store
   * maintainers) compiles to [[Cron]] jobs through one table, each
   * family in its own job-id namespace with one failure alert, fired by
   * [[tickCron]] (cronjob.go:100-192), and [[retryDlq]] sweeps every
-  * CDC pipeline's dead-letter queue, alerting on parked batches
-  * (mongodb.go:1876-1969). [[Guardian]] wraps each pipeline start
+  * replica's dead-letter queue, alerting on parked batches
+  * (mongodb.go:1876-1969). [[countReport]] keeps one cached count per
+  * pipeline, keyed by its target's [[Upsert.signature]].
+  * [[Guardian]] wraps each pipeline start
   * (transient start failures back off and retry); crash-during-run is
   * covered by the supervisor's restart-on-death.
   *
@@ -107,23 +113,11 @@ final class GraftEngine(
       guarded(() => CdcPipeline.start(spark, cfg, availableNow))
     case Compiler.KvDef(_, cfg) =>
       guarded(() => KvPipeline.start(spark, cfg, availableNow))
-    case Compiler.RollupDef(_, sourceDir, queryName) =>
-      // A6 under the supervisor: restart-on-death and config
-      // hot-reload apply to the rollup like any pipeline. Its sink is
-      // an in-memory table (the reference's counters are in-memory
-      // too) — a restart re-derives the horizon from the stream.
-      guarded(() => DailyRollup.start(spark, sourceDir, queryName, availableNow))
-    case Compiler.SessionizeDef(_, sourceDir, outDir, ckpt) =>
-      // ST14/ST15 under the supervisor: durable parquet log + own
-      // checkpoint, so restart-on-death resumes without losing or
-      // duplicating a finalized session
-      guarded(() => SessionStream.startChangeEvents(spark, sourceDir, outDir, ckpt,
-        availableNow))
-    case Compiler.RateMonitorDef(_, sourceDir, outDir, ckpt) =>
-      // sliding-window op-mix velocity under the supervisor — same
-      // durable append-only log + checkpoint contract as sessionize
-      guarded(() => RateStream.startChangeEvents(spark, sourceDir, outDir, ckpt,
-        availableNow))
+    case r: Compiler.RiderPipeline =>
+      // every rider under the supervisor: restart-on-death and config
+      // hot-reload apply to it like any pipeline; alarm riders raise
+      // their alerts through the engine's sink
+      guarded(() => r.start(spark, alerts, availableNow))
     case Compiler.DecontamDef(_, s) =>
       // ingest-time decontamination under the supervisor: stateless
       // scoring, append-only scored log + checkpoint — same durability
@@ -131,30 +125,12 @@ final class GraftEngine(
       guarded(() => graft.streaming.DecontamStream.start(spark, s.corpusDir,
         s.sourceDir, s.outDir, s.checkpointDir, availableNow,
         s.k, s.minHits, s.evalMod))
-    case Compiler.AnomalyDef(_, sourceDir, hist, ckpt) =>
-      // daily op-count z-score alarm under the supervisor: alerts ride
-      // the engine's sink; replays are anti-join idempotent
-      guarded(() => graft.streaming.AnomalyStream.startChangeEvents(spark,
-        sourceDir, hist, ckpt, alerts, availableNow = availableNow))
     case Compiler.IvmDef(_, s) =>
       // incremental view maintenance under the supervisor: delta-only
       // work per batch, Atomic-versioned publishes with a batch-id
       // replay guard — restarts resume exactly-once from the checkpoint
       guarded(() => graft.streaming.IvmStream.start(spark, s.sourceDir,
         s.storeDir, s.checkpointDir, s.view, availableNow))
-    case Compiler.ForecastAnomalyDef(_, sourceDir, hist, ckpt, watchValues) =>
-      // seasonal HW-residual alarm under the supervisor: the weekday
-      // CDC-volume cycle is absorbed by the forecast, genuine breaks
-      // page; replays are anti-join idempotent like the plain-z rider.
-      // `watchValues` swaps the series from daily op counts to the
-      // after-image's daily cent mass (`value_forecast_anomaly`)
-      guarded(() =>
-        if (watchValues)
-          graft.streaming.ForecastAnomalyStream.startChangeValues(
-            spark, sourceDir, hist, ckpt, alerts, availableNow = availableNow)
-        else
-          graft.streaming.ForecastAnomalyStream.startChangeEvents(
-            spark, sourceDir, hist, ckpt, alerts, availableNow = availableNow))
   }
 
   /** Guardian envelope on the START path: a recoverable failure (e.g. a
@@ -333,80 +309,52 @@ final class GraftEngine(
   /** Minute tick for every scheduled task; returns fired job ids. */
   def tickCron(now: LocalDateTime = clock()): Seq[Int] = scheduler.tick(now)
 
-  // --- incremental count monitoring ----------------------------------
+  // --- cached count monitoring ---------------------------------------
   // The reference re-issues a full COUNT(*) per table per monitor tick
-  // (query_counter.go:59-280); at 100 TB that is the first thing an
-  // operator turns off. The engine instead caches one live-row count
-  // per bucket, keyed by the bucket directory's file signature
-  // (count/bytes/max-mtime — pure namenode metadata, ≤ NumBuckets
-  // listings per tick) and by the target's committed deltas, listed
-  // the same way ([[Upsert.deltaSignature]]). It re-counts ONLY buckets
-  // whose signature changed since the last tick, or every bucket once
-  // the deltas changed (a delta may name any bucket). A tick over an
-  // untouched target runs zero Spark jobs. The cache also keys on the
-  // compiled predicate text, so a dateRange window rolling over (new
-  // JST day) recounts everything once. Counts taken while a merge is
-  // mid-write may be transiently off by the in-flight batch —
-  // monitoring tolerance, the same razor the reference's 60 s polling
-  // accepts.
+  // (query_counter.go:59-280). The engine caches one live-row count per
+  // pipeline, keyed by the compiled predicate text and the target's
+  // file signature ([[Upsert.signature]]: its bucket files and
+  // committed deltas, a driver-side listing). A tick over an untouched
+  // target runs zero Spark jobs; any merge, compaction or sweep changes
+  // the signature and recounts the whole target. Per-bucket reuse would
+  // save little: under merge-on-read every append and every compaction
+  // changes the delta list, and a delta may name any bucket. The
+  // predicate key makes a dateRange window rolling over (new JST day)
+  // recount once. Counts taken while a merge is mid-write may be
+  // transiently off by the in-flight batch — monitoring tolerance, the
+  // same razor the reference's 60 s polling accepts.
 
-  import GraftEngine.{BucketSig, CountState}
-  private val countCache = scala.collection.mutable.Map.empty[String, CountState]
+  private val countCache =
+    scala.collection.mutable.Map.empty[String, ((String, Upsert.Signature), Long)]
 
-  private def bucketSigs(dir: String): Map[Int, BucketSig] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map { d =>
-        val files = fs.listStatus(d.getPath).toSeq
-          .filterNot(f => { val n = f.getPath.getName; n.startsWith("_") || n.startsWith(".") })
-        d.getPath.getName.stripPrefix("bucket=").toInt -> BucketSig(
-          files.length, files.map(_.getLen).sum,
-          files.map(_.getModificationTime).maxOption.getOrElse(0L))
-      }.toMap
-  }
-
-  private def incrementalLiveCount(name: String, targetDir: String,
+  private def cachedLiveCount(name: String, targetDir: String,
       pred: org.apache.spark.sql.Column): Long = {
-    val sigs = bucketSigs(targetDir)
-    val deltas = Upsert.deltaSignature(spark, targetDir)
-    if (sigs.isEmpty && deltas.isEmpty) { countCache.remove(name); return 0L }
-    val predKey = pred.toString
-    val valid = countCache.get(name).filter(c => c.pred == predKey && c.deltas == deltas)
-    // buckets whose files changed, appeared or vanished; None = all
-    val stale = valid.map { c =>
-      (sigs.keySet ++ c.sigs.keySet).filter(id => sigs.get(id) != c.sigs.get(id)).toSeq }
-    lazy val live = Upsert.liveRows(Upsert.readTarget(spark, targetDir))
-    val fresh: Map[Int, Long] =
-      if (stale.exists(_.isEmpty)) Map.empty
-      else stale.fold(live)(ids => live.filter(org.apache.spark.sql.functions.col("bucket").isin(ids: _*)))
-        .filter(pred)
-        .groupBy("bucket").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val counts = valid.fold(fresh)(c => c.counts -- stale.get ++ fresh)
-    countCache(name) = CountState(predKey, deltas, sigs, counts)
-    counts.values.sum
+    val key = (pred.toString, Upsert.signature(spark, targetDir))
+    countCache.get(name).collect { case (k, n) if k == key => n }.getOrElse {
+      val n = if (key._2.isEmpty) 0L
+        else Upsert.liveRows(Upsert.readTarget(spark, targetDir)).filter(pred).count()
+      countCache(name) = (key, n)
+      n
+    }
   }
 
   /** Drop cache entries for pipelines no longer in the config — must
     * run on EVERY monitoring entry point, or config churn (tasks
-    * removed/renamed over weeks) leaks per-bucket maps forever. */
+    * removed/renamed over weeks) leaks entries forever. */
   private def pruneCountCache(): Unit =
     countCache.keys.toSeq.filterNot(pipelineDefs.contains).foreach(countCache.remove)
 
   /** A2/P6 composed — the config's countQuery conditions run against
     * each pipeline's TARGET table (the reference's count monitoring,
     * query_counter.go:59-280 driven from monitor.go): one conditional
-    * live-row count per table that declares conditions, incrementally
-    * maintained per bucket (see the cache note above). */
+    * live-row count per table that declares conditions, cached per
+    * target signature (see the cache note above). */
   def countReport(anchorUtc: LocalDateTime = clock()): Map[String, Long] = {
     pruneCountCache()
     pipelineDefs.collect {
       case (name, d: Compiler.CdcDef) if d.counts.nonEmpty =>
         val pred = graft.functions.Conditions.compile(d.counts, d.sourceTable, anchorUtc)
-        name -> incrementalLiveCount(name, d.cfg.targetDir, pred)
+        name -> cachedLiveCount(name, d.cfg.targetDir, pred)
     }
   }
 
@@ -473,7 +421,7 @@ final class GraftEngine(
     * the same compiled predicate and fire a `count_mismatch` alert
     * through the engine's sink for any |src−tgt| above `threshold`.
     * Returns name → (src, tgt). Cadence contract: the target side is
-    * the incremental cached count; the source side scans the log —
+    * the cached count; the source side scans the log —
     * call on the monitor cadence (the reference uses 60 s), not every
     * reconcile tick. */
   def monitorCounts(anchorUtc: LocalDateTime = clock(),
@@ -482,7 +430,7 @@ final class GraftEngine(
     val rows = pipelineDefs.toSeq.collect {
       case (name, d: Compiler.CdcDef) if d.counts.nonEmpty =>
         val pred = graft.functions.Conditions.compile(d.counts, d.sourceTable, anchorUtc)
-        (name, sourceLiveCount(d, pred), incrementalLiveCount(name, d.cfg.targetDir, pred))
+        (name, sourceLiveCount(d, pred), cachedLiveCount(name, d.cfg.targetDir, pred))
     }
     if (rows.nonEmpty) {
       import spark.implicits._
@@ -494,40 +442,20 @@ final class GraftEngine(
     rows.map { case (n, s, t) => n -> (s, t) }.toMap
   }
 
-  /** DLQ sweep across every compiled pipeline, CDC and KV alike (ST10);
-    * parked batches alert through the engine's sink. For DRAINED
-    * contexts (--once after awaitDrained): the retry merge must not run
-    * beside the live stream's own merges — see [[sweepDlq]] for the
-    * resident loop's stop-first variant. */
+  /** Every compiled replica (CDC and KV alike), by pipeline name. */
+  private def replicas: Map[String, Compiler.Replica] =
+    pipelineDefs.collect { case (name, r: Compiler.Replica) => name -> r }
+
+  private def hasPendingDlq(r: Compiler.Replica): Boolean =
+    Dlq.hasPendingBatches(spark, r.dlqDir)
+
+  /** DLQ sweep across every replica (ST10); riders own no DLQ. Parked
+    * batches alert through the engine's sink. For DRAINED contexts
+    * (--once after awaitDrained): the retry merge must not run beside
+    * the live stream's own merges — see [[sweepDlq]] for the resident
+    * loop's stop-first variant. */
   def retryDlq(): Map[String, Dlq.Stats] =
-    pipelineDefs.collect {
-      case (name, d: Compiler.CdcDef) => name -> CdcPipeline.retryDlq(spark, d.cfg, alerts)
-      case (name, d: Compiler.KvDef)  => name -> KvPipeline.retryDlq(spark, d.cfg, alerts)
-    }
-
-  private def hasPendingDlq(d: Compiler.PipelineDef): Boolean = d match {
-    case c: Compiler.CdcDef => CdcPipeline.hasPendingBatches(spark, c.cfg)
-    case k: Compiler.KvDef  => KvPipeline.hasPendingBatches(spark, k.cfg)
-    case _: Compiler.RollupDef => false      // no writer, no DLQ
-    case _: Compiler.SessionizeDef => false  // append-only file sink, no DLQ
-    case _: Compiler.RateMonitorDef => false // append-only file sink, no DLQ
-    case _: Compiler.DecontamDef => false    // append-only file sink, no DLQ
-    case _: Compiler.AnomalyDef => false     // idempotent history append, no DLQ
-    case _: Compiler.IvmDef => false         // replay-idempotent publish, no DLQ
-    case _: Compiler.ForecastAnomalyDef => false // idempotent history append, no DLQ
-  }
-
-  private def targetDirOf(d: Compiler.PipelineDef): Option[String] = d match {
-    case c: Compiler.CdcDef => Some(c.cfg.targetDir)
-    case k: Compiler.KvDef  => Some(k.cfg.targetDir)
-    case _: Compiler.RollupDef => None
-    case _: Compiler.SessionizeDef => None  // append-only log: no tombstones to sweep
-    case _: Compiler.RateMonitorDef => None // append-only log: no tombstones to sweep
-    case _: Compiler.DecontamDef => None    // append-only log: no tombstones to sweep
-    case _: Compiler.AnomalyDef => None     // append-only history: no tombstones to sweep
-    case _: Compiler.IvmDef => None         // Atomic-versioned view: no tombstones to sweep
-    case _: Compiler.ForecastAnomalyDef => None // append-only history: no tombstones to sweep
-  }
+    replicas.map { case (name, r) => name -> r.retryDlq(spark, alerts) }
 
   /** Maintenance DLQ sweep, safe while the engine serves: a pipeline
     * with PENDING dead-letter batches is stopped first — a retry merge
@@ -538,85 +466,55 @@ final class GraftEngine(
     * (`parked_*`) cost nothing here. */
   def sweepDlq(): Map[String, Dlq.Stats] = synchronized {
     if (stopping) return Map.empty
-    pipelineDefs.collect {
-      case (name, d) if hasPendingDlq(d) =>
+    replicas.collect {
+      case (name, r) if hasPendingDlq(r) =>
         supervisor.activeQueries.get(name).foreach(_.stop())
-        name -> (d match {
-          case c: Compiler.CdcDef => CdcPipeline.retryDlq(spark, c.cfg, alerts)
-          case k: Compiler.KvDef  => KvPipeline.retryDlq(spark, k.cfg, alerts)
-          case r => // unreachable: hasPendingDlq is false for riders
-            throw new IllegalStateException(s"pipeline ${r.name} has no DLQ")
-        })
+        name -> r.retryDlq(spark, alerts)
     }
   }
 
   /** Tombstone reclamation: deletes become FINAL once the pipeline's
     * DLQ is drained — no stale retry can arrive anymore — so any
-    * pipeline with an empty retry queue gets its target's delete
-    * tombstones swept. The probe is a pushed-down `deleted=true` scan
-    * (clean buckets are skipped on row-group stats); only when guard
-    * rows exist is the pipeline stopped (same no-concurrent-merge
-    * contract as [[sweepDlq]]) and its touched buckets rewritten; the
-    * next reconcile restarts it from the checkpoint. */
+    * replica with an empty retry queue gets its target's delete
+    * tombstones swept. The probe is [[Upsert.hasTombstones]]; only
+    * when tombstones exist is the pipeline stopped (same
+    * no-concurrent-merge contract as [[sweepDlq]]) and its touched
+    * buckets rewritten; the next reconcile restarts it from the
+    * checkpoint. */
   def sweepTombstones(): Map[String, Int] = synchronized {
     if (stopping) return Map.empty
-    pipelineDefs.collect {
-      case (name, d) if !hasPendingDlq(d) && targetDirOf(d).exists { dir =>
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p) && {
-              // readTarget, not footer inference: a sidecar-only dir (a
-              // crashed sweep's residue) reads as empty instead of
-              // throwing, and mixed-footer targets see the canonical
-              // schema deterministically
-              val t = Upsert.readTarget(spark, dir)
-              t.columns.contains("deleted") &&
-                t.filter(org.apache.spark.sql.functions.col("deleted") === true)
-                  .limit(1).count() > 0
-            }
-          } =>
+    replicas.collect {
+      case (name, r) if !hasPendingDlq(r) && Upsert.hasTombstones(spark, r.targetDir) =>
         supervisor.activeQueries.get(name).foreach(_.stop())
-        name -> Upsert.sweepTombstones(spark, targetDirOf(d).get)
+        name -> Upsert.sweepTombstones(spark, r.targetDir)
     }
   }
 
   /** Snapshot face of a `dailyRollup` pipeline's counters — current
     * per-(JST day, event type) counts (A6 through the config path). */
   def rollupCounts(name: String): org.apache.spark.sql.DataFrame =
-    pipelineDefs.get(name) match {
-      case Some(Compiler.RollupDef(_, _, queryName)) =>
-        DailyRollup.currentCounts(spark, queryName)
-      case other => throw new IllegalArgumentException(
-        s"$name is not a rollup pipeline (got $other)")
-    }
+    riderOutput(name, Compiler.Rollup)
 
   /** Snapshot face of a `sessionize` pipeline's durable log — finalized
     * per-key activity sessions (ST14/ST15 through the config path). */
   def sessionLog(name: String): org.apache.spark.sql.DataFrame =
-    pipelineDefs.get(name) match {
-      case Some(Compiler.SessionizeDef(_, _, outDir, _)) =>
-        SessionStream.currentSessions(spark, outDir)
-      case other => throw new IllegalArgumentException(
-        s"$name is not a sessionize pipeline (got $other)")
-    }
+    riderOutput(name, Compiler.Sessionize)
 
   /** Snapshot face of a `rateMonitor` pipeline's durable log —
     * finalized sliding-window per-op rates. */
   def rateLog(name: String): org.apache.spark.sql.DataFrame =
-    pipelineDefs.get(name) match {
-      case Some(Compiler.RateMonitorDef(_, _, outDir, _)) =>
-        RateStream.currentRates(spark, outDir)
-      case other => throw new IllegalArgumentException(
-        s"$name is not a rateMonitor pipeline (got $other)")
-    }
+    riderOutput(name, Compiler.RateMonitor)
 
   /** Snapshot face of an `anomalyMonitor` pipeline's daily history —
     * per-(day, op) finalized masses the z-scores were drawn from. */
   def anomalyHistory(name: String): org.apache.spark.sql.DataFrame =
+    riderOutput(name, Compiler.AnomalyMonitor)
+
+  private def riderOutput(name: String, kind: Compiler.Rider): org.apache.spark.sql.DataFrame =
     pipelineDefs.get(name) match {
-      case Some(Compiler.AnomalyDef(_, _, hist, _)) =>
-        graft.streaming.AnomalyStream.currentHistory(spark, hist)
+      case Some(r: Compiler.RiderPipeline) if r.rider == kind => r.read(spark)
       case other => throw new IllegalArgumentException(
-        s"$name is not an anomalyMonitor pipeline (got $other)")
+        s"$name is not a ${kind.key} pipeline (got $other)")
     }
 
   /** Snapshot face of a `decontamTasks` pipeline's scored log — every
@@ -670,12 +568,6 @@ final class GraftEngine(
 }
 
 object GraftEngine {
-
-  /** One target bucket dir's file signature, and one pipeline's cached
-    * per-bucket live counts (see the count-monitoring note). */
-  private final case class BucketSig(files: Int, bytes: Long, maxMtime: Long)
-  private final case class CountState(pred: String, deltas: Seq[(Long, Long)],
-      sigs: Map[Int, BucketSig], counts: Map[Int, Long])
 
   /** Connect bound for the engine's own JDBC touches (index sync).
     * DriverManager.setLoginTimeout is PROCESS-GLOBAL — it caps every

@@ -63,12 +63,9 @@ final case class SyncTaskSpec(
     sourceDb: String = "graft",    // DatabaseMapping.SourceDatabase (config.go:36-41)
     snapshotDir: Option[String] = None, // initial-sync parquet root (S1 skip-if-nonempty)
     targetJdbcUrl: Option[String] = None, // DDL-replay connection for syncIndexes mappings
-    dailyRollup: Boolean = false,  // A6: run a per-table daily-counter rollup stream
-    sessionize: Boolean = false,   // ST14/ST15: per-key activity sessions off the change stream
-    rateMonitor: Boolean = false,  // sliding-window per-op rate log off the change stream
-    anomalyMonitor: Boolean = false, // daily op-count z-score alerts off the change stream
-    forecastMonitor: Boolean = false, // seasonal HW-residual alerts off the change stream
-    valueForecastMonitor: Boolean = false) // seasonal HW-residual alerts on the after-image CENT MASS
+    // the opt-in change-stream riders this task runs per table, by JSON
+    // key (`dailyRollup`, `sessionize`, ...; the table is Compiler.Riders)
+    riders: Set[String] = Set.empty)
 
 /** A config task the engine runs on a five-field cron schedule
   * (cronjob.go:100-192): `id` is unique within its family, and the

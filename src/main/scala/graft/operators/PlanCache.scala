@@ -3,6 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Caller-managed persistence for operators whose returned plan reads a
   * cached intermediate more than once (LSH banding + verify both scan
@@ -20,8 +21,13 @@ import org.apache.spark.sql.DataFrame
 object PlanCache {
   private val live = new ConcurrentLinkedQueue[() => Unit]
 
-  /** Persist `df` and track it for a later [[release]]. */
-  def tracked(df: DataFrame): DataFrame = { val c = df.persist(); live.add(() => c.unpersist()); c }
+  /** Persist `df` and track it for a later [[release]]. A plan the
+    * cache manager already holds (`storageLevel` is its lookup) is
+    * returned as is: a second `persist()` only warns, and a second
+    * release closure would drop the entry its first holder owns. */
+  def tracked(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else { val c = df.persist(); live.add(() => c.unpersist()); c }
 
   /** Run `free` at the next [[release]]. */
   private[operators] def onRelease(free: () => Unit): Unit = live.add(free)

@@ -276,6 +276,27 @@ object Upsert {
     committedDeltas(fs, dir).map { case (seq, _, mtime) => seq -> mtime }
   }
 
+  /** A target's file signature: each base file's (path, length,
+    * modification time) and each committed delta's (sequence number,
+    * commit time). A merge, a compaction and a tombstone sweep each
+    * change it, so equal signatures read equal rows. */
+  final case class Signature(base: Seq[(String, Long, Long)], deltas: Seq[(Long, Long)]) {
+    def isEmpty: Boolean = base.isEmpty && deltas.isEmpty
+  }
+
+  /** The target's [[Signature]]: a driver-side listing of its bucket
+    * dirs and deltas (no Spark job), empty for an absent target. */
+  def signature(spark: SparkSession, targetDir: String): Signature = {
+    val (fs, dir) = fsOf(spark, targetDir)
+    if (!fs.exists(dir)) return Signature(Nil, Nil)
+    val base = fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+      .flatMap(d => fs.listStatus(d.getPath).toSeq)
+      .filterNot(f => { val n = f.getPath.getName; n.startsWith("_") || n.startsWith(".") })
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
+    Signature(base, deltaSignature(spark, targetDir))
+  }
+
   /** The deltas as one scan, each row tagged with its delta's sequence
     * number (taken from the file path). */
   private def readDeltas(spark: SparkSession, schema: StructType,
@@ -444,6 +465,21 @@ object Upsert {
       rewriteBuckets(spark, targetDir,
         apply(target, batched.drop("bucket")).withColumn("bucket", bucketOf(keyCol)))
     } finally batched.unpersist()
+  }
+
+  /** True when the target holds delete tombstones, i.e. when
+    * [[sweepTombstones]] has work: a `deleted=true` probe pushed to the
+    * parquet scan (clean buckets are skipped on row-group stats). It
+    * reads through [[readTarget]], not footer inference: a tombstone
+    * still in a delta counts, a sidecar-only dir (a crashed sweep's
+    * residue) reads as empty instead of throwing, and mixed-footer
+    * targets see the canonical schema deterministically. */
+  def hasTombstones(spark: SparkSession, targetDir: String): Boolean = {
+    val (fs, path) = fsOf(spark, targetDir)
+    fs.exists(path) && {
+      val t = readTarget(spark, targetDir)
+      t.columns.contains("deleted") && t.filter(col("deleted") === true).limit(1).count() > 0
+    }
   }
 
   /** Reclaim delete tombstones — fold any deltas into the base first,

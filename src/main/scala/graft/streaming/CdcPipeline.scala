@@ -69,10 +69,6 @@ object CdcPipeline {
       })
   }
 
-  /** True when the DLQ holds batches a [[retryDlq]] pass would touch. */
-  def hasPendingBatches(spark: SparkSession, cfg: Config): Boolean =
-    Dlq.hasPendingBatches(spark, cfg.dlqDir)
-
   /** Outcome of one DLQ pass — see [[Dlq.Stats]]. */
   type DlqStats = Dlq.Stats
   val DlqStats = Dlq.Stats

@@ -57,10 +57,6 @@ object KvPipeline {
       Dlq.applyOrPark(cfg.dlqDir)(batch =>
         KvStore.mergeKvIntoParquet(batch.sparkSession, cfg.targetDir, batch)))
 
-  /** True when the DLQ holds batches a [[retryDlq]] pass would touch. */
-  def hasPendingBatches(spark: SparkSession, cfg: Config): Boolean =
-    Dlq.hasPendingBatches(spark, cfg.dlqDir)
-
   /** Bounded DLQ retry for the KV pillar — [[Dlq.retry]] with the KV op
     * schema and the idempotent KV merge. Same concurrency contract as
     * the CDC variant: never run beside the live stream's merges. */
