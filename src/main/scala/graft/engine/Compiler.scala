@@ -79,7 +79,8 @@ object Compiler {
   /** One opt-in change-stream rider kind, one row of [[Riders]]. A
     * rider reads the same change-event source as its table's CDC
     * pipeline (the KV op log has no change events, so a redis task
-    * carrying `key` is rejected at load with [[rejection]]); its
+    * carrying `key` is rejected at load with [[rejection]], which
+    * says what the op log `lacks`); its
     * pipeline name and storage roots are the table's plus `suffix`.
     * `start` gets (source dir, output, checkpoint dir, alert sink,
     * availableNow), `read` gets the output; the output is a log dir,
