@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Keyed upsert/delete — MERGE emulation over parquet (SURVEY §7.5 #1).
   *
@@ -26,21 +26,30 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     column. The underscore hides both from Spark's file index, so a
   *     plain parquet read of the dir sees only the base.
   * A merge ([[mergeIntoParquet]]) never reads the target: it writes
-  * `applyBatch(empty, batch)` — the batch's last writer per key, deletes
-  * kept as tombstone rows with `updated_at`, `updated_off` and `bucket`
-  * — as the next delta. That is one write per micro-batch (two Spark
-  * jobs, against four for a read-and-rewrite merge), and the batch is
-  * scanned once (the streaming source counts every scan of a
-  * foreachBatch frame in `numInputRows`). A DLQ retry, which has no
-  * batch id, is just another delta.
+  * the batch's change rows — one row per event, deletes as tombstone
+  * rows with `updated_at`, `updated_off` and `bucket` — as the next
+  * delta. That is one Spark job per micro-batch: a projection of the
+  * batch into one file, with no window and no exchange, and the batch
+  * is scanned once (the streaming source counts every scan of a
+  * foreachBatch frame in `numInputRows`). Repeats of a key within the
+  * batch are resolved by the read fold's rule below, the same rule
+  * [[applyBatch]]'s window applies, so a delta needs no per-key
+  * dedup. The trade-off: a batch whose events hit few keys writes
+  * more delta rows than keys, so such batches reach the compaction
+  * bound sooner. A DLQ retry, which has no batch id, is just another
+  * delta. The merge's file metadata is one driver-side walk of the
+  * target (sequence number, committed deltas, delta and base bytes,
+  * key file) and one read of the sidecar, which is written only when
+  * the batch's schema changes it.
   *
   * Fold order. [[readTarget]] resolves base ⊕ deltas: per key the row
   * with the highest `updated_at`, then `updated_off` (nulls last), and
   * on a full tie the newer delta (the base counts as oldest). That is
-  * [[applyBatch]]'s stale rule, so an out-of-order DLQ retry loses to
-  * the newer row it meets, a replayed batch ties only with itself
-  * (same rows, so replay is idempotent — what makes foreachBatch's
-  * at-least-once delivery effectively-once, ST9), and snapshot rows
+  * [[applyBatch]]'s stale rule, so within a delta a key's newest
+  * event wins, an out-of-order DLQ retry loses to the newer row it
+  * meets, a replayed batch ties only with itself (same rows, so
+  * replay is idempotent — what makes foreachBatch's at-least-once
+  * delivery effectively-once, ST9), and snapshot rows
   * (null recency) lose to any change. Base rows of keys no delta names
   * pass through a broadcast anti-join of the delta keys; only the delta
   * rows and the base rows of the keys they name meet in one keyed
@@ -66,6 +75,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Crash ordering. Every step leaves the resolved view intact:
   *   - sidecar, then delta: a sidecar wider than the data null-fills,
   *     never drops a column;
+  *   - the sidecar is replaced by write `.tmp`, delete, rename: a kill
+  *     between the delete and the rename leaves only the complete
+  *     `.tmp`, which reads take and the next sidecar write finishes;
   *   - a delta is committed once its `_SUCCESS` marker exists; a crashed
   *     append (only `_temporary` left) is invisible to reads and is
   *     removed by the next compaction;
@@ -99,11 +111,12 @@ object Upsert {
     * row. Snapshot rows carry null recency and always lose to a real
     * change event.
     *
-    * One keyed full-outer join resolves everything. The CDC merge
-    * calls this with an EMPTY state, which the optimizer folds away,
-    * leaving the batch's last-writer-per-key window; the same stale
-    * rule then resolves the delta against the target at read time
-    * ([[readTarget]]).
+    * One keyed full-outer join resolves everything. The CDC merge does
+    * not call this: it writes the batch's change rows as a delta (one
+    * Spark job per micro-batch), each row the one this function gives
+    * for that event alone against an EMPTY state, and the read fold
+    * ([[readTarget]]) resolves repeats of a key within the batch, and
+    * the delta against the target, by this same stale rule.
     *
     * Delete TOMBSTONES close the out-of-order resurrect window: a live
     * delete does not remove the key's row — it rewrites it as
@@ -122,17 +135,8 @@ object Upsert {
     val latest = b.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col(keyCol), col("op").as("_b_op"), col("after").as("_b_after"),
         col("ts").as("_b_ts"), col("offset").as("_b_off"))
-    val afterFields = b.schema("after").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fields
-    // the target must not carry data columns the change schema lacks:
-    // projecting them away here would silently REWRITE every touched
-    // bucket without them — fail loudly instead (the foreachBatch
-    // wrapper routes this to the DLQ and the operator is alerted)
-    val expected = (keyCol +: afterFields.map(_.name)) ++
-      Seq("updated_at", "updated_off", "deleted")
-    val unexpected = target.columns.filterNot(expected.contains)
-    require(unexpected.isEmpty,
-      s"target columns absent from the change schema: ${unexpected.mkString(", ")}")
+    val afterFields = afterFieldsOf(b)
+    requireCovered(target.columns.toSeq, keyCol, afterFields)
     // target side, prefixed to avoid collisions with after-field names;
     // targets written before the recency/tombstone columns existed read
     // them as null/false. ADDITIVE evolution: an after-field the target
@@ -141,7 +145,7 @@ object Upsert {
     // postgresql.go:275-338) — existing rows carry null, the merge
     // writes the widened schema, and the schema sidecar makes later
     // reads of untouched buckets see the new column as null too.
-    val tField = (f: org.apache.spark.sql.types.StructField) =>
+    val tField = (f: StructField) =>
       if (target.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType)
     val tOff = if (target.columns.contains("updated_off")) col("updated_off")
@@ -173,6 +177,22 @@ object Upsert {
           when(takeTarget, col("_t_del")).otherwise(bDel).as("deleted"): _*)
   }
 
+  private def afterFieldsOf(batch: DataFrame): Seq[StructField] =
+    batch.schema("after").dataType.asInstanceOf[StructType].fields.toSeq
+
+  /** The target must not carry data columns the change schema lacks:
+    * projecting them away would silently REWRITE every touched bucket
+    * without them — fail loudly instead (the foreachBatch wrapper routes
+    * this to the DLQ and the operator is alerted). */
+  private def requireCovered(targetCols: Seq[String], keyCol: String,
+      afterFields: Seq[StructField]): Unit = {
+    val expected = (keyCol +: afterFields.map(_.name)) ++
+      Seq("updated_at", "updated_off", "deleted")
+    val unexpected = targetCols.filterNot(expected.contains)
+    require(unexpected.isEmpty,
+      s"target columns absent from the change schema: ${unexpected.mkString(", ")}")
+  }
+
   /** The live (non-tombstoned) rows of a merged target. Safe on targets
     * written before tombstones existed (no `deleted` column → all live). */
   def liveRows(df: DataFrame): DataFrame =
@@ -196,14 +216,18 @@ object Upsert {
   }
 
   private def readText(fs: FileSystem, p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
+    try {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    }
+    } catch { case _: java.io.FileNotFoundException => None }
 
+  private def tmpOf(p: Path) = new Path(p.getParent, p.getName + ".tmp")
+
+  /** Replace `p`: write `p.tmp`, close it, delete `p`, rename. A kill
+    * between the delete and the rename leaves only the complete `.tmp`
+    * (see [[readSidecar]]). */
   private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
+    val tmp = tmpOf(p)
     val out = fs.create(tmp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
     if (fs.exists(p)) fs.delete(p, false)
@@ -225,24 +249,45 @@ object Upsert {
 
   private val SchemaSidecar = "_graft_schema.json"
 
+  /** The sidecar's text, `torn` when it came from the `.tmp`. A kill
+    * inside [[writeText]]'s swap leaves no sidecar next to a `.tmp`
+    * that was closed before the delete, so it is read instead — the
+    * way `Dlq.retry` recovers its `batch_N.tmp`. A `.tmp` that does not
+    * parse is a first sidecar still being written: no sidecar yet. */
+  private final case class Sidecar(text: String, torn: Boolean) {
+    lazy val schema: StructType = DataType.fromJson(text).asInstanceOf[StructType]
+  }
+
+  private def readSidecar(fs: FileSystem, dir: Path): Option[Sidecar] = {
+    val p = new Path(dir, SchemaSidecar)
+    readText(fs, p).map(Sidecar(_, torn = false)).orElse(
+      readText(fs, tmpOf(p)).map(Sidecar(_, torn = true))
+        .filter(s => scala.util.Try(s.schema).isSuccess))
+  }
+
   private def readSchema(fs: FileSystem, dir: Path): Option[StructType] =
-    readText(fs, new Path(dir, SchemaSidecar))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    readSidecar(fs, dir).map(_.schema)
+
+  /** Write `schema` as the sidecar unless `current` already holds it
+    * (one PUT per schema CHANGE, not per batch); a torn sidecar is
+    * rewritten, which finishes the interrupted swap. */
+  private def putSidecar(fs: FileSystem, dir: Path, current: Option[Sidecar],
+      schema: StructType): Unit =
+    if (!current.exists(c => !c.torn && c.text == schema.json))
+      writeText(fs, new Path(dir, SchemaSidecar), schema.json)
 
   private def writeSchemaSidecar(spark: SparkSession, targetDir: String,
       schema: StructType): Unit = {
     val (fs, dir) = fsOf(spark, targetDir)
-    val p = new Path(dir, SchemaSidecar)
-    // one PUT per schema CHANGE, not per batch
-    if (!readText(fs, p).contains(schema.json)) writeText(fs, p, schema.json)
+    putSidecar(fs, dir, readSidecar(fs, dir), schema)
   }
 
   /** True when `targetDir` is a target this object wrote (its schema
-    * sidecar exists): read it through [[readTarget]], not as plain
-    * parquet. */
+    * sidecar exists, or only its `.tmp` after a torn swap): read it
+    * through [[readTarget]], not as plain parquet. */
   def isTarget(spark: SparkSession, targetDir: String): Boolean = {
     val (fs, dir) = fsOf(spark, targetDir)
-    fs.exists(new Path(dir, SchemaSidecar))
+    readSidecar(fs, dir).nonEmpty
   }
 
   // --- deltas ----------------------------------------------------------
@@ -362,35 +407,63 @@ object Upsert {
     } else false
   }
 
-  /** Apply a change batch to a CDC target: append its last writer per
-    * key as the next delta (see "Scale design"), then fold the deltas
-    * back if they passed the compaction bound. Never reads the target's
-    * rows; its schema comes from the sidecar, so a batch whose change
-    * schema lost a target column still fails [[applyBatch]]'s check. */
+  /** What a merge needs of a target's files, from one driver-side walk
+    * (no Spark job): the bytes outside `_deltas` (the base), the bytes
+    * under it, the committed deltas, the highest sequence number (the
+    * empty high-water mark included) and whether the key file exists. */
+  private final case class Listing(baseBytes: Long, deltaBytes: Long, committed: Int,
+      lastSeq: Long, hasKey: Boolean)
+
+  private def walk(fs: FileSystem, dir: Path): Listing = {
+    def bytes(s: FileStatus) = if (s.isDirectory) fs.getContentSummary(s.getPath).getLength else s.getLen
+    val (deltaDir, base) = fs.listStatus(dir).partition(_.getPath.getName == DeltaDir)
+    val entries = deltaDir.toSeq.flatMap(d => fs.listStatus(d.getPath))
+    val (numbered, other) = entries.partition(s => s.isDirectory && s.getPath.getName.forall(_.isDigit))
+    val deltas = numbered.map(d => d.getPath.getName.toLong -> fs.listStatus(d.getPath).toSeq)
+    Listing(base.map(bytes).sum, (other ++ deltas.flatMap(_._2)).map(bytes).sum,
+      deltas.count(_._2.exists(_.getPath.getName == "_SUCCESS")),
+      (deltas.map(_._1) :+ 0L).max, other.exists(_.getPath.getName == KeyFile))
+  }
+
+  /** Apply a change batch to a CDC target: append its change rows as
+    * the next delta (see "Scale design"), then fold the deltas back if
+    * they passed the compaction bound. Each event's row is the one
+    * [[applyBatch]] gives for it alone against an empty target, and the
+    * read fold resolves a key's repeats within the batch by the same
+    * rule. Never reads the target's rows; its columns come from the
+    * sidecar, so a batch whose change schema lost a target column still
+    * fails [[applyBatch]]'s check. */
   def mergeIntoParquet(spark: SparkSession, targetDir: String, batch: DataFrame,
       keyCol: String, ignoreDeleteOps: Boolean = false): Unit = {
     val (fs, dir) = fsOf(spark, targetDir)
     // Existence probe via the Hadoop FS API: ONLY a genuinely absent
-    // target (first batch, no snapshot yet) maps to the batch's own
-    // schema — an unreadable one must FAIL the batch (→ DLQ)
-    val state =
-      if (!fs.exists(dir))
-        batch.select(col(keyCol), col("after.*"), col("ts").as("updated_at")).limit(0)
-      else {
-        val schema = readSchema(fs, dir).getOrElse(spark.read.parquet(targetDir).schema)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema).drop("bucket")
-      }
-    val delta = applyBatch(state, batch, keyCol, ignoreDeleteOps)
-      .withColumn("bucket", bucketOf(keyCol))
+    // target (first batch, no snapshot yet) has no columns to check —
+    // an unreadable one must FAIL the batch (→ DLQ)
+    val exists = fs.exists(dir)
+    val files = if (exists) walk(fs, dir) else Listing(0L, 0L, 0, 0L, hasKey = false)
+    val sidecar = if (exists) readSidecar(fs, dir) else None
+    val targetCols = if (!exists) Nil
+      else sidecar.map(_.schema).getOrElse(spark.read.parquet(targetDir).schema)
+        .fieldNames.toSeq.filterNot(_ == "bucket")
+    val b = if (ignoreDeleteOps) batch.filter(col("op") =!= "delete") else batch
+    val afterFields = afterFieldsOf(b)
+    requireCovered(targetCols, keyCol, afterFields)
+    // applyBatch's row for a lone event: a null op keeps the (empty)
+    // target side, so only its key is set
+    val applied = col("op").isNotNull
+    val delta = b.select(col(keyCol) +:
+      afterFields.map(f => when(col("op") =!= "delete", col("after").getField(f.name)).as(f.name)) :+
+      when(applied, col("ts")).as("updated_at") :+
+      when(applied, col("offset")).as("updated_off") :+
+      when(applied, col("op") === "delete").as("deleted") :+
+      bucketOf(keyCol).as("bucket"): _*)
     val deltas = new Path(dir, DeltaDir)
-    val keyFile = new Path(deltas, KeyFile)
-    if (!readText(fs, keyFile).contains(keyCol)) writeText(fs, keyFile, keyCol)
-    writeSchemaSidecar(spark, targetDir, delta.schema)
-    val seq = (deltaDirs(fs, dir).map(_._1) :+ 0L).max + 1
-    delta.coalesce(1).write.mode(SaveMode.Overwrite).parquet(new Path(deltas, seq.toString).toString)
-    val deltaBytes = fs.getContentSummary(deltas).getLength
-    val baseBytes = fs.getContentSummary(dir).getLength - deltaBytes
-    if (deltaBytes * CompactRatio >= baseBytes || committedDeltas(fs, dir).length >= MaxDeltas)
+    if (!files.hasKey) writeText(fs, new Path(deltas, KeyFile), keyCol)
+    putSidecar(fs, dir, sidecar, delta.schema)
+    val out = new Path(deltas, (files.lastSeq + 1).toString)
+    delta.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out.toString)
+    val deltaBytes = files.deltaBytes + fs.getContentSummary(out).getLength
+    if (deltaBytes * CompactRatio >= files.baseBytes || files.committed + 1 >= MaxDeltas)
       compact(spark, targetDir)
   }
 

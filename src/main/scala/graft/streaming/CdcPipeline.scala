@@ -10,10 +10,12 @@ import graft.operators.Upsert
 /** The CDC pipeline (SURVEY §3.1): a file-based change-event stream →
   * optional PII transforms → keyed upsert in a [[Sink.foreachBatch]].
   * The upsert is [[Upsert.mergeIntoParquet]]: each micro-batch appends
-  * one delta to the merge-on-read target without reading it, and reads
-  * resolve base ⊕ deltas ([[Upsert.readTarget]]). A replayed batch
-  * appends an identical delta, which ties only with itself, so the
-  * stream's at-least-once delivery stays effectively-once.
+  * its change rows, one per event, as one delta to the merge-on-read
+  * target without reading it — one Spark job per micro-batch — and
+  * reads resolve base ⊕ deltas, and a key's repeats within a batch, by
+  * the same last-writer-wins rule ([[Upsert.readTarget]]). A replayed
+  * batch appends an identical delta, which ties only with itself, so
+  * the stream's at-least-once delivery stays effectively-once.
   *
   * Reference stages it replaces (mongodb.go:527-815): the hand-rolled
   * channel buffering, disk spill files, smart batch packing, and ≤8

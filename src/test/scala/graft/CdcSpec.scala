@@ -186,6 +186,70 @@ class CdcSpec extends SparkSpec {
     assert(Upsert.liveRows(Upsert.readTarget(spark, cfg.targetDir)).count() == 1000)
   }
 
+  /** Drain `cfg`'s stream once and count the Spark jobs its stream
+    * thread started; the bus delivers events in order, so once a marker
+    * job started after the drain is seen, every start before it has
+    * been counted. */
+  private def drainCountingJobs(cfg: CdcPipeline.Config)
+      : (org.apache.spark.sql.streaming.StreamingQuery, Int) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    def prop(p: java.util.Properties, k: String) = Option(p).flatMap(x => Option(x.getProperty(k)))
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        prop(e.properties, "sql.streaming.queryId").foreach(jobs.add)
+        if (prop(e.properties, "graft.spec.barrier").nonEmpty) barrier.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = CdcPipeline.start(spark, cfg)
+      q.awaitTermination()
+      spark.sparkContext.setLocalProperty("graft.spec.barrier", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.spec.barrier", null)
+      assert(barrier.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (q, jobs.asScala.count(_ == q.id.toString))
+  }
+
+  test("one micro-batch runs exactly one Spark job: the delta write") {
+    val src = tmp(); val cfg = CdcPipeline.Config(
+      sourceDir = src, targetDir = tmp() + "/target",
+      checkpointDir = tmp() + "/ckpt", dlqDir = tmp() + "/dlq")
+    Upsert.snapshot(spark, spark.range(1000).select(col("id").as("key"),
+      (col("id") * 1.5).as("value"), col("id").as("k"),
+      lit(null).cast("timestamp").as("updated_at"),
+      lit(null).cast("long").as("updated_off")), "key", cfg.targetDir)
+    // three files whose keys repeat within and across files, with
+    // updates and deletes: the write resolves nothing per key
+    (0 until 3).foreach { f =>
+      spark.range(100).select(
+        when(col("id") % 10 === 0, lit("delete")).otherwise(lit("update")).as("op"),
+        ((col("id") * 7 + f) % 50).as("key"),
+        struct((col("id") * 2.0).as("value"), col("id").as("k")).as("after"),
+        lit("graft").as("sourceDb"), lit("events").as("sourceTable"),
+        (lit(1700000000L) + col("id")).cast("timestamp").as("ts"),
+        (col("id") + f * 100).as("offset"))
+        .coalesce(1).write.mode("append").json(src)
+    }
+    val (q, nJobs) = drainCountingJobs(cfg)
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.length == 1 && batches.head.numInputRows == 300)
+    assert(nJobs == 1, s"$nJobs jobs in one micro-batch")
+    // no compaction ran: the batch's 300 change rows sit in one delta
+    assert(Upsert.deltaSignature(spark, cfg.targetDir).length == 1)
+    // the read fold resolves the repeats: a key is gone iff its newest
+    // (ts, offset) event is a delete
+    val newest = (for (f <- 0 until 3; id <- 0 until 100)
+      yield ((id * 7 + f) % 50L, (id.toLong, id + f * 100L, id % 10 == 0)))
+      .groupBy(_._1).map { case (key, es) => key -> es.map(_._2).max._3 }
+    val live = Upsert.liveRows(Upsert.readTarget(spark, cfg.targetDir))
+      .select("key").collect().map(_.getLong(0)).toSet
+    assert(live == (0L until 1000L).toSet -- newest.collect { case (key, true) => key })
+  }
+
   test("DSv2 changelog source: pipeline parity, restart parity, gated resume token") {
     import graft.sources.ChangeLogMicroBatchStream
     val src = tmp(); val cfg = CdcPipeline.Config(

@@ -192,6 +192,84 @@ class UpsertLayoutSpec extends SparkSpec {
     assertResolved(tgt, before, "unchanged")
   }
 
+  test("a delta holds the batch's change rows: in-batch repeats fold by last-writer-wins") {
+    val t0 = 1700000000L
+    val evs = Seq(
+      // insert, update, delete, re-insert: the re-insert wins the ts tie on offset
+      Ev("insert", 1, 10, 1, None, t0 + 1, 1), Ev("update", 1, 11, 1, None, t0 + 2, 2),
+      Ev("delete", 1, 0, 0, None, t0 + 2, 3), Ev("insert", 1, 12, 1, None, t0 + 2, 4),
+      // the same ops, the delete wins the ts tie on offset
+      Ev("insert", 2, 20, 2, None, t0 + 1, 5), Ev("update", 2, 21, 2, None, t0 + 3, 6),
+      Ev("insert", 2, 22, 2, None, t0 + 3, 7), Ev("delete", 2, 0, 0, None, t0 + 3, 8),
+      // a fresh key whose re-insert carries the highest offset but an older ts
+      Ev("insert", 9100, 30, 3, None, t0 + 1, 9), Ev("update", 9100, 31, 3, None, t0 + 1, 10),
+      Ev("delete", 9100, 0, 0, None, t0 + 2, 11), Ev("insert", 9100, 32, 3, None, t0 + 1, 12))
+    // input rows out of (ts, offset) order
+    val shuffled = new scala.util.Random(7).shuffle(evs)
+    assert(shuffled != evs.sortBy(e => (e.ts, e.off)))
+    Seq(false, true).foreach { ignoreDeletes =>
+      val tgt = tmp() + "/target"
+      snapshot(tgt, 2000)
+      Upsert.mergeIntoParquet(spark, tgt, batch(shuffled, wide = false), "key", ignoreDeletes)
+      val clue = s"ignoreDeletes=$ignoreDeletes"
+      assert(Upsert.deltaSignature(spark, tgt).map(_._1) == Seq(1L), clue)
+      assert(spark.read.parquet(s"$tgt/_deltas/1").count() ==
+        evs.count(e => !ignoreDeletes || e.op != "delete"), clue)
+      val want = model(2000, evs, ignoreDeletes)
+      assertResolved(tgt, want, s"$clue before compaction")
+      Upsert.compact(spark, tgt)
+      assertResolved(tgt, want, s"$clue after compaction")
+    }
+  }
+
+  test("a distinct-key batch's delta rows are applyBatch's rows against an empty target") {
+    val ts = (s: Long) => new Timestamp((1700000000L + s) * 1000L)
+    val events = spark.createDataFrame(java.util.Arrays.asList(
+      Row("insert", 1L, Row(1.0, 1L, "a"), ts(1), 1L),
+      Row("update", 2L, Row(2.0, 2L, null), ts(2), 2L),
+      Row("replace", 3L, Row(3.0, 3L, "c"), ts(3), 3L),
+      Row("delete", 4L, Row(4.0, 4L, "d"), ts(4), 4L), // a delete carrying an after image
+      Row("delete", 5L, null, ts(5), 5L),
+      Row(null, 6L, Row(6.0, 6L, "f"), ts(6), 6L),     // a null op
+      Row("update", 9200L, null, ts(7), 7L)), batch(Nil, wide = true).schema)
+    val empty = events.select(col("key"), col("after.*"), col("ts").as("updated_at")).limit(0)
+    Seq(false, true).foreach { ignoreDeletes =>
+      val tgt = tmp() + "/target"
+      snapshot(tgt, 2000)
+      Upsert.mergeIntoParquet(spark, tgt, events, "key", ignoreDeletes)
+      val delta = spark.read.parquet(s"$tgt/_deltas/1")
+      val want = Upsert.applyBatch(empty, events, "key", ignoreDeletes)
+      val clue = s"ignoreDeletes=$ignoreDeletes"
+      assert(delta.columns.toSeq == want.columns.toSeq :+ "bucket", clue)
+      def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+      assert(rows(delta.drop("bucket")) == rows(want), clue)
+      assert(delta.filter(col("bucket") =!= pmod(hash(col("key")), lit(Upsert.NumBuckets)))
+        .isEmpty, clue)
+    }
+  }
+
+  test("a kill inside the sidecar swap leaves its .tmp, which reads recover: a widened column survives") {
+    val tgt = tmp() + "/target"
+    snapshot(tgt, 2000)
+    val b1 = Seq(Ev("update", 1, 10, 1, Some("x"), 1700000001L, 1))
+    Upsert.mergeIntoParquet(spark, tgt, batch(b1, wide = true), "key")
+    assert(Upsert.deltaSignature(spark, tgt).nonEmpty)
+    // the swap after its delete, before its rename: only the complete .tmp
+    val (fs, root) = fsOf(tgt)
+    val sidecar = new Path(root, "_graft_schema.json")
+    val torn = new Path(root, "_graft_schema.json.tmp")
+    assert(fs.rename(sidecar, torn))
+    assert(Upsert.isTarget(spark, tgt))
+    assertResolved(tgt, model(2000, b1, ignoreDeletes = false), "torn sidecar")
+    // the next merge finishes the swap
+    val b2 = Seq(Ev("update", 2, 20, 2, Some("y"), 1700000002L, 2))
+    Upsert.mergeIntoParquet(spark, tgt, batch(b2, wide = true), "key")
+    assert(fs.exists(sidecar) && !fs.exists(torn))
+    assertResolved(tgt, model(2000, b1 ++ b2, ignoreDeletes = false), "swap finished")
+    Upsert.compact(spark, tgt)
+    assertResolved(tgt, model(2000, b1 ++ b2, ignoreDeletes = false), "compacted")
+  }
+
   test("countReport equals a direct live count after every batch, compaction and sweep") {
     val root = tmp()
     Files.createDirectories(Paths.get(root, "src", "orders"))
