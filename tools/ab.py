@@ -68,8 +68,9 @@ def run(tree, workload, seed, seconds, trace):
     lines = p.stdout.strip().splitlines()
     try:
         result = json.loads(lines[-1])
-        result["metrics"]  # noqa: B018 - a result line has metrics
-    except (IndexError, ValueError, KeyError, TypeError):
+    except (IndexError, ValueError):
+        result = None
+    if not isinstance(result, dict) or "metrics" not in result:
         sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
         return None, wall
     return result, wall
