@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,26 +21,32 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *   - the base: the rows hash-bucketed on the key into [[NumBuckets]]
   *     `bucket=N` partition dirs,
   *   - `_graft_schema.json`, the canonical-schema sidecar,
-  *   - `_deltas/<seq>/`: one parquet file per applied batch, named by a
-  *     monotonic sequence number, plus `_deltas/_key` naming the key
-  *     column. The underscore hides both from Spark's file index, so a
-  *     plain parquet read of the dir sees only the base.
+  *   - `_deltas/<seq>/`: one parquet file per applied batch (one per
+  *     core for a backlog batch), named by a monotonic sequence
+  *     number, plus `_deltas/_key` naming the key column. The
+  *     underscore hides both from Spark's file index, so a plain
+  *     parquet read of the dir sees only the base.
   * A merge ([[mergeIntoParquet]]) never reads the target: it writes
   * the batch's change rows — one row per event, deletes as tombstone
   * rows with `updated_at`, `updated_off` and `bucket` — as the next
   * delta. That is one Spark job per micro-batch: a projection of the
-  * batch into one file, with no window and no exchange, and the batch
-  * is scanned once (the streaming source counts every scan of a
+  * batch, with no window and no exchange, and the batch is scanned
+  * once (the streaming source counts every scan of a
   * foreachBatch frame in `numInputRows`). Repeats of a key within the
   * batch are resolved by the read fold's rule below, the same rule
   * [[applyBatch]]'s window applies, so a delta needs no per-key
   * dedup. The trade-off: a batch whose events hit few keys writes
   * more delta rows than keys, so such batches reach the compaction
-  * bound sooner. A DLQ retry, which has no batch id, is just another
-  * delta. The merge's file metadata is one driver-side walk of the
-  * target (sequence number, committed deltas, delta and base bytes,
-  * key file) and one read of the sidecar, which is written only when
-  * the batch's schema changes it.
+  * bound sooner. The projection runs in the batch's own tasks, so the
+  * delta is one file only while the file source packed the batch into
+  * no more partitions than there are cores; a larger (backlog) batch
+  * writes one file per core, which keeps its parse and encryption on
+  * every core. A DLQ retry, which has no batch id, is just another
+  * delta. The merge's file metadata is one listing of `_deltas` (the
+  * sequence number and the committed-delta count), one content summary
+  * each of `_deltas` and the target (delta and base bytes), a key-file
+  * probe and one read of the sidecar, which is written only when the
+  * batch's schema changes it.
   *
   * Fold order. [[readTarget]] resolves base ⊕ deltas: per key the row
   * with the highest `updated_at`, then `updated_off` (nulls last), and
@@ -305,10 +311,10 @@ object Upsert {
       .map(s => s.getPath.getName.toLong -> s.getPath).sortBy(_._1)
   }
 
-  /** The committed deltas (their `_SUCCESS` marker exists), ascending,
-    * with the marker's modification time. Driver-side listing only. */
-  private def committedDeltas(fs: FileSystem, dir: Path): Seq[(Long, Path, Long)] =
-    deltaDirs(fs, dir).flatMap { case (seq, p) =>
+  /** The committed deltas of `all` (their `_SUCCESS` marker exists),
+    * with the marker's modification time. Driver-side probes only. */
+  private def committedDeltas(fs: FileSystem, all: Seq[(Long, Path)]): Seq[(Long, Path, Long)] =
+    all.flatMap { case (seq, p) =>
       val ok = new Path(p, "_SUCCESS")
       if (fs.exists(ok)) Some((seq, p, fs.getFileStatus(ok).getModificationTime)) else None
     }
@@ -318,7 +324,7 @@ object Upsert {
     * listing; no Spark job. */
   private[graft] def deltaSignature(spark: SparkSession, targetDir: String): Seq[(Long, Long)] = {
     val (fs, dir) = fsOf(spark, targetDir)
-    committedDeltas(fs, dir).map { case (seq, _, mtime) => seq -> mtime }
+    committedDeltas(fs, deltaDirs(fs, dir)).map { case (seq, _, mtime) => seq -> mtime }
   }
 
   /** A target's file signature: each base file's (path, length,
@@ -371,7 +377,7 @@ object Upsert {
     val (fs, dir) = fsOf(spark, targetDir)
     val schema = readSchema(fs, dir)
     val base = schema.fold(spark.read.parquet(targetDir))(spark.read.schema(_).parquet(targetDir))
-    val deltas = committedDeltas(fs, dir)
+    val deltas = committedDeltas(fs, deltaDirs(fs, dir))
     if (deltas.isEmpty) base
     else fold(base, readDeltas(spark, schema.getOrElse(base.schema), deltas),
       readText(fs, new Path(new Path(dir, DeltaDir), KeyFile)).get)
@@ -407,24 +413,6 @@ object Upsert {
     } else false
   }
 
-  /** What a merge needs of a target's files, from one driver-side walk
-    * (no Spark job): the bytes outside `_deltas` (the base), the bytes
-    * under it, the committed deltas, the highest sequence number (the
-    * empty high-water mark included) and whether the key file exists. */
-  private final case class Listing(baseBytes: Long, deltaBytes: Long, committed: Int,
-      lastSeq: Long, hasKey: Boolean)
-
-  private def walk(fs: FileSystem, dir: Path): Listing = {
-    def bytes(s: FileStatus) = if (s.isDirectory) fs.getContentSummary(s.getPath).getLength else s.getLen
-    val (deltaDir, base) = fs.listStatus(dir).partition(_.getPath.getName == DeltaDir)
-    val entries = deltaDir.toSeq.flatMap(d => fs.listStatus(d.getPath))
-    val (numbered, other) = entries.partition(s => s.isDirectory && s.getPath.getName.forall(_.isDigit))
-    val deltas = numbered.map(d => d.getPath.getName.toLong -> fs.listStatus(d.getPath).toSeq)
-    Listing(base.map(bytes).sum, (other ++ deltas.flatMap(_._2)).map(bytes).sum,
-      deltas.count(_._2.exists(_.getPath.getName == "_SUCCESS")),
-      (deltas.map(_._1) :+ 0L).max, other.exists(_.getPath.getName == KeyFile))
-  }
-
   /** Apply a change batch to a CDC target: append its change rows as
     * the next delta (see "Scale design"), then fold the deltas back if
     * they passed the compaction bound. Each event's row is the one
@@ -440,7 +428,6 @@ object Upsert {
     // target (first batch, no snapshot yet) has no columns to check —
     // an unreadable one must FAIL the batch (→ DLQ)
     val exists = fs.exists(dir)
-    val files = if (exists) walk(fs, dir) else Listing(0L, 0L, 0, 0L, hasKey = false)
     val sidecar = if (exists) readSidecar(fs, dir) else None
     val targetCols = if (!exists) Nil
       else sidecar.map(_.schema).getOrElse(spark.read.parquet(targetDir).schema)
@@ -458,12 +445,20 @@ object Upsert {
       when(applied, col("op") === "delete").as("deleted") :+
       bucketOf(keyCol).as("bucket"): _*)
     val deltas = new Path(dir, DeltaDir)
-    if (!files.hasKey) writeText(fs, new Path(deltas, KeyFile), keyCol)
+    val keyFile = new Path(deltas, KeyFile)
+    if (!fs.exists(keyFile)) writeText(fs, keyFile, keyCol)
     putSidecar(fs, dir, sidecar, delta.schema)
-    val out = new Path(deltas, (files.lastSeq + 1).toString)
-    delta.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out.toString)
-    val deltaBytes = files.deltaBytes + fs.getContentSummary(out).getLength
-    if (deltaBytes * CompactRatio >= files.baseBytes || files.committed + 1 >= MaxDeltas)
+    val all = deltaDirs(fs, dir)
+    val out = new Path(deltas, ((all.map(_._1) :+ 0L).max + 1).toString)
+    // one file per delta, unless the file source split the batch into
+    // more partitions than there are cores (a backlog batch): one file
+    // per core then, so its parse and encryption use every core
+    val cores = spark.sparkContext.defaultParallelism
+    delta.coalesce(if (b.rdd.getNumPartitions > cores) cores else 1)
+      .write.mode(SaveMode.Overwrite).parquet(out.toString)
+    val deltaBytes = fs.getContentSummary(deltas).getLength
+    val baseBytes = fs.getContentSummary(dir).getLength - deltaBytes
+    if (deltaBytes * CompactRatio >= baseBytes || committedDeltas(fs, all).length + 1 >= MaxDeltas)
       compact(spark, targetDir)
   }
 
@@ -473,7 +468,7 @@ object Upsert {
     val (fs, dir) = fsOf(spark, targetDir)
     val all = deltaDirs(fs, dir)
     if (all.isEmpty) return
-    val deltas = committedDeltas(fs, dir)
+    val deltas = committedDeltas(fs, all)
     if (deltas.nonEmpty) {
       val schema = readSchema(fs, dir).get // written before the first delta
       val d = readDeltas(spark, schema, deltas)

@@ -17,7 +17,7 @@ change wins, the change of the medians against the metric's bound, and
 whether the gain rule holds (the change better on at least 9 of 10
 pairs, and its median better by more than the base's interquartile
 range). Every run's result line is appended to `--log` when given.
-The checkouts are removed on exit unless `--keep`.
+The checkouts are removed on exit.
 """
 import argparse
 import json
@@ -33,6 +33,7 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+SECONDS = 10  # the run length BENCHMARK.json declares
 
 
 def seeds_of(text):
@@ -57,11 +58,11 @@ def extract(rev, into):
     return sha
 
 
-def run(tree, workload, seed, seconds, trace):
+def run(tree, workload, seed, trace):
     """One benchmark run in `tree`: (result dict or None, wall seconds)."""
     env = {k: v for k, v in os.environ.items() if k != "CARGO_TARGET_DIR"}  # per-checkout builds
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", str(trace)]
+           "--seconds", str(SECONDS), "--trace", str(trace)]
     t0 = time.monotonic()
     p = subprocess.run(cmd, cwd=tree, env=env, capture_output=True, text=True)
     wall = time.monotonic() - t0
@@ -119,17 +120,11 @@ def main():
     ap.add_argument("change", help="the changed revision (any git rev)")
     ap.add_argument("--workload", required=True, choices=["replicate", "analytics"])
     ap.add_argument("--seeds", required=True, help="e.g. 2001-2010 or 2001,2003")
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--log", help="append every run's result line (JSON) to this file")
-    ap.add_argument("--workdir", default=tempfile.gettempdir(),
-                    help="where the two checkouts are extracted (outside the repo)")
-    ap.add_argument("--keep", action="store_true", help="keep the checkouts")
     a = ap.parse_args()
 
-    root = Path(tempfile.mkdtemp(prefix="ab-", dir=a.workdir)).resolve()
-    if REPO in root.parents or root == REPO:
-        sys.exit("tools/ab.py: --workdir must lie outside the repo")
+    root = Path(tempfile.mkdtemp(prefix="ab-")).resolve()
     try:
         sides = {}
         for side, rev in (("base", a.base), ("change", a.change)):
@@ -145,7 +140,7 @@ def main():
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             got = {}
             for side in order:
-                result, wall = run(sides[side], a.workload, seed, a.seconds, a.trace)
+                result, wall = run(sides[side], a.workload, seed, a.trace)
                 got[side] = result
                 shown = " ".join(f"{k}={v:.4g}" for k, v in sorted(values(result).items())
                                  if k in names)
@@ -165,8 +160,7 @@ def main():
         print(f"runs with no result, correct=false or failed>0: {len(bad)}")
         return 1 if bad else 0
     finally:
-        if not a.keep:
-            shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
