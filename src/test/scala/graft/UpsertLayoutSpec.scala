@@ -248,6 +248,30 @@ class UpsertLayoutSpec extends SparkSpec {
     }
   }
 
+  test("a delta is one file, or one per core when the batch has more partitions than cores") {
+    val cores = spark.sparkContext.defaultParallelism
+    val evs = (0 until 120).map(i =>
+      Ev(if (i % 7 == 0) "delete" else "update", i % 40, i.toDouble, i, None, 1700000000L + i / 3, i))
+    // a base large enough that neither delta reaches the compaction bound
+    val tgt = tmp() + "/target"
+    snapshot(tgt, 20000)
+    def spread(evs: Seq[Ev], parts: Int): DataFrame = {
+      val b = batch(evs, wide = false)
+      spark.createDataFrame(b.rdd.repartition(parts), b.schema)
+    }
+    val (fs, root) = fsOf(tgt)
+    def files(seq: Long) =
+      fs.listStatus(new Path(root, s"_deltas/$seq")).count(_.getPath.getName.endsWith(".parquet"))
+    Upsert.mergeIntoParquet(spark, tgt, spread(evs.take(60), cores), "key")
+    Upsert.mergeIntoParquet(spark, tgt, spread(evs.drop(60), 2 * cores + 1), "key")
+    assert(Upsert.deltaSignature(spark, tgt).map(_._1) == Seq(1L, 2L))
+    assert(files(1) == 1 && files(2) == cores, s"${files(1)} and ${files(2)} files, $cores cores")
+    val want = model(20000, evs, ignoreDeletes = false)
+    assertResolved(tgt, want, "before compaction")
+    Upsert.compact(spark, tgt)
+    assertResolved(tgt, want, "after compaction")
+  }
+
   test("a kill inside the sidecar swap leaves its .tmp, which reads recover: a widened column survives") {
     val tgt = tmp() + "/target"
     snapshot(tgt, 2000)
